@@ -1230,15 +1230,19 @@ object TextFunctions {
     * merge the most frequent pair everywhere (deterministic tie-break:
     * count DESC, then both symbols ASC), repeat.
     *
-    * Scale shape: the corpus is touched ONCE (word-count groupBy, one
-    * map-side-combined shuffle of word partials); every merge round
-    * then runs over the VOCAB table — pair explosion and an integer
-    * sum per pair, all map-side combinable — and the chosen pair
-    * returns to the driver as one row that becomes a literal in the
-    * next round's re-segmentation expression (the same driver-loop
-    * join-aggregate iteration shape as `q_pagerank` /
-    * `q_shortest_path`). A 100 TB corpus costs one scan; k merge
-    * rounds cost k vocab-sized jobs.
+    * Scale shape: the corpus is touched ONCE — one word-count groupBy
+    * (a map-side-combined shuffle of word partials) whose vocabulary is
+    * collected to the driver in one job. The k merge rounds then run on
+    * the driver: each round recounts every adjacent pair of the
+    * vocabulary, takes the top pair and re-segments every word, so no
+    * round schedules a Spark job and the call's job count does not
+    * grow with k. The condition: the distinct-word vocabulary must fit
+    * in driver memory and under `spark.driver.maxResultSize`. Words are
+    * `[A-Za-z0-9]+`, so every distinct number or ID is a word and the
+    * vocabulary keeps growing with the corpus; past that limit the
+    * collect fails. `text_bpe_merges` and `text_bpe_encode` share this
+    * condition with `text_bpe_tokenize`, which broadcasts the trained
+    * vocabulary whole. There is no distributed fallback.
     *
     * Determinism across engines: pair counts are integral sums;
     * re-segmentation is plain left-to-right non-overlapping string
@@ -1250,47 +1254,28 @@ object TextFunctions {
     * @return one row per merge: (merge_rank, lhs, rhs, pair_cnt).
     */
   def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val (merges, _, release) = bpeTrain(spark, dir, k)
-    release()
     import spark.implicits._
-    merges.toDF("merge_rank", "lhs", "rhs", "pair_cnt")
+    bpeTrain(spark, dir, k)._1.toDF("merge_rank", "lhs", "rhs", "pair_cnt")
       .orderBy(col("merge_rank"))
   }
 
   /** The shared BPE trainer behind `text_bpe_merges` /
-    * `text_bpe_encode`: returns the k merges, the FINAL segmented
-    * vocabulary frame (still backed by the persisted word-count base —
-    * call `release()` after its last action), and the release hook.
+    * `text_bpe_encode` / `text_bpe_tokenize`: returns the k merges and
+    * the FINAL segmented vocabulary as driver-side rows
+    * (word, space-separated symbols, word count).
     */
-  private def bpeTrain(spark: SparkSession, dir: String,
-      k: Int): (Seq[(Long, String, String, Long)], DataFrame, () => Unit) = {
+  private def bpeTrain(spark: SparkSession, dir: String, k: Int)
+      : (Seq[(Long, String, String, Long)], Seq[(String, String, Long)]) = {
     import spark.implicits._
-    val docs = Tables.load(spark, dir, "documents")
-    val base = docs
+    val vocab = Tables.load(spark, dir, "documents")
       .select(explode(words(lower(col("text")))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(concat(trim(regexp_replace(col("w"), "(.)", "$1 ")),
-        lit(" </w>")).as("sym"), col("cnt"))
-      .persist() // vocab-sized by construction
-    base.count(): Unit // materialize before the round loop re-reads it
-    // Merge rounds as raw RDD jobs over the persisted base (round 17,
-    // the quantile-narrowing discipline, guide §1.2 step 1): each
-    // round's Catalyst formulation re-analyzed a plan that GREW by one
-    // replace() projection per round — k rounds cost k increasingly
-    // expensive optimizer cycles for a vocab-sized aggregate
-    // (graft.Profile: ~1.2 s of driver gap across 8 rounds, the AQE
-    // scope-off of the first pass having already removed the
-    // query-stage jobs). The RDD rounds plan NOTHING: adjacent-pair
-    // counting is a flatMap + reduceByKey (same one integral-sum
-    // shuffle), top-1 is a bounded takeOrdered, and re-segmentation is
-    // a map. Bit-identity with the Catalyst rounds: pair counts are
-    // integer sums; the pair ordering compares counts DESC then
-    // symbols as unsigned UTF-8 bytes — exactly UTF8String.compareTo,
-    // the SQL string order; re-segmentation replays the SQL
-    // trim(replace(concat(' ', sym, ' '), ' a b ', ' ab ')) with
-    // java.lang.String ops, whose left-to-right non-overlapping
-    // replace semantics the scaladoc above already pins as identical
-    // (the same equivalence the DuckDB oracle replays).
+      .as[(String, Long)].collect()
+    // words are [A-Za-z0-9]+, so one char is one symbol
+    val syms = vocab.map { case (w, _) => w.mkString(" ") + " </w>" }
+    val cnts = vocab.map(_._2)
+    // Pair order: count DESC, then symbols as unsigned UTF-8 bytes —
+    // exactly UTF8String.compareTo, the SQL string order.
     def utf8Cmp(x: String, y: String): Int = {
       val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -1314,34 +1299,27 @@ object TextFunctions {
           }
         }
       }
-    var vocabRdd = base.as[(String, Long)].rdd
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    (1 to k).foreach { r =>
-      spark.sparkContext.setJobDescription(s"bpe: merge round $r")
-      val top = vocabRdd.flatMap { case (sym, cnt) =>
-          // split(" ", -1) mirrors SQL split's trailing-empty handling;
-          // syms carry single spaces only, so the tokens are identical
-          val t = sym.split(" ", -1)
-          if (t.length < 2) Iterator.empty
-          else (0 until t.length - 1).iterator.map(i => ((t(i), t(i + 1)), cnt))
+    val merges = (1 to k).map { r =>
+      val pairCnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      syms.indices.foreach { i =>
+        val t = syms(i).split(" ") // syms carry single spaces only
+        (0 until t.length - 1).foreach { j =>
+          val p = (t(j), t(j + 1))
+          pairCnt(p) = pairCnt.getOrElse(p, 0L) + cnts(i)
         }
-        .reduceByKey(_ + _)
-        .takeOrdered(1)(pairOrd)
-      require(top.nonEmpty, s"vocabulary fully merged before round $r")
-      val ((a, b), c) = top.head
-      // same guard as the Catalyst rounds: symbols are alphanumeric or
-      // the </w> marker (and the literal replace below needs no quoting)
+      }
+      require(pairCnt.nonEmpty, s"vocabulary fully merged before round $r")
+      val ((a, b), c) = pairCnt.min(pairOrd)
+      // symbols are alphanumeric or the </w> marker (and the literal
+      // replace below needs no quoting)
       require((a + b).matches("[A-Za-z0-9</>]+"),
         s"unexpected symbol characters in merge pair ($a, $b)")
-      merges += ((r.toLong, a, b, c))
       val pat = s" $a $b "
       val rep = s" $a$b "
-      vocabRdd = vocabRdd.map { case (sym, cnt) =>
-        ((" " + sym + " ").replace(pat, rep).trim, cnt)
-      }
+      syms.indices.foreach(i => syms(i) = (" " + syms(i) + " ").replace(pat, rep).trim)
+      (r.toLong, a, b, c)
     }
-    val vocab = vocabRdd.toDF("sym", "cnt")
-    (merges.toSeq, vocab, () => { base.unpersist(); () })
+    (merges, vocab.indices.map(i => (vocab(i)._1, syms(i), cnts(i))))
   }
 
   /** `text_bpe_encode`: APPLY the learned merges — the readout half of
@@ -1353,24 +1331,17 @@ object TextFunctions {
     * tokenizer-budget decision actually reads (which merges earn their
     * vocab slots, how much tail stays at character level). Same scale
     * shape as training: the corpus is scanned once for word counts,
-    * everything after is vocab-sized; the top-N head materializes
-    * eagerly (topN rows) so the persisted vocab base releases before
-    * returning.
+    * everything after runs over the driver-built vocabulary.
     */
   def bpeEncode(spark: SparkSession, dir: String, k: Int = 8,
       topN: Int = 20): DataFrame = {
-    val (_, vocab, release) = bpeTrain(spark, dir, k)
-    val head = vocab
+    import spark.implicits._
+    bpeTrain(spark, dir, k)._2.map { case (_, sym, cnt) => (sym, cnt) }
+      .toDF("sym", "cnt")
       .select(explode(split(col("sym"), " ")).as("token"), col("cnt"))
       .groupBy(col("token")).agg(sum(col("cnt")).as("n_occurrences"))
       .orderBy(col("n_occurrences").desc, col("token"))
       .limit(topN)
-      .collect().toSeq
-    release()
-    import spark.implicits._
-    head.map(r => (r.getString(0), r.getLong(1)))
-      .toDF("token", "n_occurrences")
-      .orderBy(col("n_occurrences").desc, col("token"))
   }
 
   /** `text_bpe_tokenize`: tokenize the CORPUS under the trained
@@ -1380,24 +1351,17 @@ object TextFunctions {
     * tokenizer's count). No document is re-segmented directly: the
     * final vocabulary already carries each distinct word's
     * segmentation, so tokenizing is a broadcast join from the corpus'
-    * exploded words to the (word → symbol count) table — one corpus
-    * scan beyond training, everything else vocab-sized. The `</w>`
-    * end-of-word marker counts as a symbol, exactly as in
-    * `text_bpe_encode`'s distribution. Empty documents survive with
-    * zero counts via the corpus-spine left join.
+    * exploded words to the driver-built (word → symbol count) table —
+    * one corpus scan beyond training. The `</w>` end-of-word marker
+    * counts as a symbol, exactly as in `text_bpe_encode`'s
+    * distribution. Empty documents survive with zero counts via the
+    * corpus-spine left join.
     */
   def bpeTokenize(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val (_, vocab, release) = bpeTrain(spark, dir, k)
-    // (word, n_sym): vocab-sized — checkpoint it eagerly so the
-    // persisted word-count base releases before the corpus-sized join
-    // plan is returned (the bpeEncode discipline, but the output here
-    // is per-doc, so the SEGMENTATION is what materializes, not the
-    // result).
-    val seg = vocab.select(
-        regexp_replace(regexp_replace(col("sym"), " ", ""), "</w>", "").as("w"),
-        size(split(col("sym"), " ")).cast("long").as("n_sym"))
-      .localCheckpoint(true)
-    release()
+    import spark.implicits._
+    val seg = bpeTrain(spark, dir, k)._2
+      .map { case (w, sym, _) => (w, sym.split(" ").length.toLong) }
+      .toDF("w", "n_sym")
     val docs = Tables.load(spark, dir, "documents")
     val g = docs
       .select(col("doc_id"), explode(words(lower(col("text")))).as("w"))
@@ -1460,7 +1424,7 @@ object TextFunctions {
       .select(col("rk"), col("doc_id"), col("lang"), col("dsir_logw"))
       .orderBy(col("rk"))
     // topN rows: materialize eagerly so the persisted count frame
-    // releases before returning (same pattern as bpeEncode).
+    // releases before returning.
     val ck = out.localCheckpoint(true)
     release()
     ck

@@ -490,7 +490,8 @@ object Dedup {
     val spark = batch.sparkSession
     scala.concurrent.Future {
       spark.sparkContext.setJobDescription(s"$tag: batch sigs (prefetch)")
-      Stabilize(signaturesFromShingles(shinglesRaw(batch)))
+      try Stabilize(signaturesFromShingles(shinglesRaw(batch)))
+      finally spark.sparkContext.setJobDescription(null)
     }
   }
 

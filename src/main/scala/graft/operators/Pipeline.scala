@@ -119,8 +119,9 @@ object Pipeline {
     import scala.concurrent.ExecutionContext.Implicits.global
     val spark = docs.sparkSession
     scala.concurrent.Future {
+      // pooled threads outlive the task: clear the label on the way out
       spark.sparkContext.setJobDescription("pipe s5: eval grams (prefetch)")
-      evalGramsOf(docs)
+      try evalGramsOf(docs) finally spark.sparkContext.setJobDescription(null)
     }
   }
 
@@ -334,7 +335,8 @@ object Pipeline {
       val v = Stabilize(df)
       val w = Future {
         spark.sparkContext.setJobDescription(s"pipe_stages: land $name")
-        v.write.mode("overwrite").parquet(s"$out/$name.parquet")
+        try v.write.mode("overwrite").parquet(s"$out/$name.parquet")
+        finally spark.sparkContext.setJobDescription(null)
       }
       (v, w)
     }
