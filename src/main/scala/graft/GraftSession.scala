@@ -122,19 +122,19 @@ object GraftSession {
     }
   }
 
-  /** Scoped AQE off for DRIVER-SEQUENCED loops over knob-bounded
-    * frames (round 17, guide §1.2 step 3 after steps 1-2 landed): a
-    * narrowing pass moves ~5 KB through its one exchange, but under
-    * AQE each pass pays query-stage materialization (broadcast stage +
-    * shuffle stage + result stage — three scheduled jobs where one
-    * suffices) and per-stage re-planning; graft.Profile measured the
-    * quantile family spending ~40% of wall in that driver gap. Inside
-    * the scope the pass plans once and runs once. Results are exact
-    * integer/rank arithmetic — plan-shape-independent by construction
-    * (QuantilesSpec pins both rank-location paths bit-equal). Confined
-    * to eager actions inside the scope; the conf is restored before
-    * any lazy plan is handed back, so callers' queries keep AQE
-    * (coalescing, skew splits) untouched.
+  /** Scoped AQE off for an eager action over knob-bounded frames
+    * (round 17, guide §1.2 step 3). Its one call site is the exact
+    * quantiles' endgame action (`Quantiles.narrowHot`): it moves a few
+    * KB through its exchange, but under AQE it pays query-stage
+    * materialization (broadcast stage + shuffle stage + result stage —
+    * three scheduled jobs where one suffices) and per-stage
+    * re-planning; graft.Profile measured the quantile family spending
+    * ~40% of wall in that driver gap. Inside the scope the action
+    * plans once and runs once. Results are exact order statistics —
+    * plan-shape-independent by construction. Confined to eager
+    * actions inside the scope; the conf is restored before any lazy
+    * plan is handed back, so callers' queries keep AQE (coalescing,
+    * skew splits) untouched.
     */
   def withAdaptiveOff[A](spark: SparkSession)(body: => A): A = {
     val key = "spark.sql.adaptive.enabled"

@@ -35,8 +35,9 @@ import graft.sources.Tables
   *     ORDER-PRESERVING BIT IMAGE of the value
   *     ([[graft.functions.SortableDoubleBits]]): each pass buckets the
   *     (key, quantile) pair's current [lo, hi] bit interval into
-  *     `buckets` integer-exact sub-ranges, counts rows per bucket — an
-  *     algebraic aggregation whose state is O(buckets) per pair — and
+  *     integer-exact sub-ranges, sums weight and counts rows per
+  *     bucket — an algebraic aggregation whose state is O(buckets) per
+  *     pair; an unweighted quantile is the unit-weight case — and
   *     narrows to the bucket holding the target ranks. Integer
   *     interval arithmetic means the histogram a pass counts and the
   *     range the next pass narrows to can never disagree (float bucket
@@ -50,8 +51,10 @@ import graft.sources.Tables
   *     different buckets means the quantile straddles a bucket edge
   *     whose below-count is exactly k1, so one conditional max/min
   *     pass yields both order statistics; otherwise once the interval
-  *     holds ≤ `finish` rows they are collected and the ranks read
-  *     off directly.
+  *     holds ≤ `finish` rows they are collected and folded in value
+  *     order executor-side, from the weight below the interval, until
+  *     the cumulative weight reaches each target rank. The straddle
+  *     and fold endgames run as one action.
   *
   * Cost shape: 1 full pass for counts, 1 full pass that EXTRACTS the
   * hot keys' rows into a DISK_ONLY persisted subset (at Zipf(1.1) a
@@ -59,16 +62,16 @@ import graft.sources.Tables
   * reach 7% of it), then (passes + 1) jobs over that subset shared by
   * every requested quantile; with the default `finish` the pass count
   * is usually 1-2 — narrowing runs only until the candidate interval
-  * fits one bounded collect, not until it pinpoints the value. Hot
-  * results resolve EAGERLY (at most `maxHotKeys`·|ps| driver rows)
-  * and the subset is unpersisted before returning, so the returned
-  * lazy plan is just the small-key percentile plus a literal
-  * hot-result table — one more full pass when the caller consumes it.
-  * Executor memory per (key, quantile) is
-  * O(max(hotThreshold, finish, buckets)) — all knobs, none scaling
-  * with the data; driver traffic per pass is O(hotKeys·|ps|) rows
-  * (rank location runs in a per-pair window on the executors, only
-  * the chosen bucket edges come back).
+  * fits one bounded collect, not until it pinpoints the value. Rank
+  * location is one single-stage RDD job per pass: each task folds its
+  * rows into a histogram of at most 2^20 cells, only those arrays come
+  * back, and the driver scans their cumulative weight. Hot results
+  * resolve EAGERLY (at most `maxHotKeys`·|ps| driver rows) and the
+  * subset is unpersisted before returning, so the returned lazy plan
+  * is just the small-key path plus a literal hot-result table — one
+  * more full pass when the caller consumes it. Executor memory per
+  * (key, quantile) is O(max(hotThreshold, finish, buckets)) — all
+  * knobs, none scaling with the data.
   *
   * Numerics: quantiles interpolate as v1 + (v2−v1)·frac over the
   * order statistics at ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1 — the same rule
@@ -89,14 +92,27 @@ import graft.sources.Tables
   */
 object Quantiles {
 
+  /** Cap on one pass's histogram cells, summed over every active
+    * (key, quantile) pair. A cell is two longs (weight sum, row
+    * count), 16 bytes, and every task holds a whole histogram, so the
+    * cap bounds a task's histogram at 16 MiB. A pass with more active
+    * pairs than cap / (buckets + 2) — about 128 at the default 8,192
+    * buckets — gets fewer buckets per pair (never fewer than 2, so
+    * the cap holds up to 2^18 active pairs).
+    * Narrowing is exact at any bucket count, so only the pass count
+    * can grow; no benchmark workload reaches that regime, and its cost
+    * is unmeasured.
+    */
+  private val HistCells = 1L << 20
+
   /** One-job histogram pass over the hot subset's cached scan (round
     * 17 second pass): per-partition long-array fold, then combine.
     * The seqOp mutates its task-local array in place; `size` longs of
-    * state per task — a function of the knobs (|active|·(buckets+2)
-    * cells), never of the data. Below the size bound the per-task
-    * arrays come straight back to the driver (ONE single-stage job,
-    * zero shuffle); above it a depth-2 treeAggregate caps driver
-    * traffic at ~sqrt(partitions) arrays for one tiny extra stage.
+    * state per task — a function of the knobs (capped by
+    * [[HistCells]]), never of the data. Small arrays come straight
+    * back to the driver (ONE single-stage job, zero shuffle); larger
+    * ones take a depth-2 treeAggregate that caps driver traffic at
+    * ~sqrt(partitions) arrays for one tiny extra stage.
     */
   private def histAggregate(
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
@@ -154,15 +170,11 @@ object Quantiles {
     *  - `Narrow`: every oversized key narrows (the round-12 behavior;
     *    gate surfaces pin this so the narrowing machinery stays
     *    exercised).
-    *  - `SortReplay`: never narrow — every key takes the windowed
-    *    cumsum replay (the single-host default when the caller knows
-    *    the regime).
     */
   sealed trait HotRoute
   object HotRoute {
     case object CostAware extends HotRoute
     case object Narrow extends HotRoute
-    case object SortReplay extends HotRoute
   }
 
   /** One front door for per-key quantiles at any scale — the router
@@ -206,11 +218,7 @@ object Quantiles {
       exactWeightedQuantilesAnyScale(rows, key, value, w, ps,
         hotThreshold, buckets, finish, maxHotKeys, route)
     case (QuantileMode.Sketch(acc), None) =>
-      require(ps.nonEmpty && ps.distinct.size == ps.size &&
-        ps.forall(p => p >= 0.0 && p <= 1.0),
-        s"ps must be distinct quantiles in [0, 1], got $ps")
-      require(key != "p" && key != "quantile",
-        s"key column '$key' collides with the fixed output columns")
+      checkOutput(key, ps)
       val psLit = lit(ps.toArray)
       rows.filter(col(value).isNotNull && !isnan(col(value).cast("double")))
         .groupBy(col(key).as("__k"))
@@ -228,25 +236,45 @@ object Quantiles {
       approxWeightedQuantiles(rows, key, value, w, ps, ident, sampleK = acc)
   }
 
-  /** Driver-side narrowing state for one (hot key, quantile): the
-    * interpolated quantile at `p` needs order statistics
-    * k1 = ⌊p(n−1)⌋+1 and k2 = ⌈p(n−1)⌉+1 (1-based) combined as
-    * v1 + (v2−v1)·frac.
+  /** The quantile list and output-column contract every front end
+    * shares: distinct ps in [0, 1], and a key column that cannot
+    * collide with the fixed (`p`, `quantile`) outputs.
+    */
+  private def checkOutput(key: String, ps: Seq[Double]): Unit = {
+    require(ps.nonEmpty && ps.distinct.size == ps.size &&
+      ps.forall(p => p >= 0.0 && p <= 1.0),
+      s"ps must be distinct quantiles in [0, 1], got $ps")
+    require(key != "p" && key != "quantile",
+      s"key column '$key' collides with the fixed output columns " +
+        "(key, p, quantile) — alias it before calling")
+  }
+
+  private def checkExact(key: String, ps: Seq[Double], hotThreshold: Long,
+      buckets: Int, finish: Long, maxHotKeys: Int): Unit = {
+    checkOutput(key, ps)
+    require(buckets >= 2, s"need at least 2 buckets, got $buckets")
+    require(hotThreshold >= 1 && maxHotKeys >= 1,
+      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
+    require(finish >= 1 && finish <= 100000000L,
+      s"finish=$finish must fit a collected per-key array")
+  }
+
+  /** Driver-side narrowing state for one (hot key, quantile). Every
+    * exact quantile reads the values v1, v2 where the cumulative
+    * weight in value order first reaches targets t1 ≤ t2, combined as
+    * v1 + (v2−v1)·frac. Unweighted quantiles are the unit-weight case:
+    * t1 = ⌊p(n−1)⌋+1 and t2 = ⌈p(n−1)⌉+1 (1-based order statistics);
+    * weighted lower quantiles have t1 = t2 = max(1, ⌈p·W⌉), frac = 0.
     */
   private final class HotState(
-      val sid: Int, val key: Any, val n: Long, val p: Double,
-      var lo: Long, var hi: Long) {
-    private val pos: Double = p * (n - 1)
-    val k1: Long = math.floor(pos).toLong + 1
-    val k2: Long = math.ceil(pos).toLong + 1
-    val frac: Double = pos - math.floor(pos)
-    var below: Long = 0L // rows with bits < lo (bit order, exact)
-    var inCount: Long = n // rows with lo <= bits <= hi
-    var straddleCut: Option[Long] = None // bit edge with exactly k1 rows <= it
+      val sid: Int, val key: Any, val p: Double,
+      val t1: Long, val t2: Long, val frac: Double,
+      var lo: Long, var hi: Long, var inRows: Long) {
+    var belowW: Long = 0L // weight of rows with bits < lo (bit order, exact)
+    var straddleCut: Option[Long] = None // bit edge with weight exactly t1 at or below it
     var result: Option[Double] = None
     def open(finishAt: Long): Boolean =
-      result.isEmpty && straddleCut.isEmpty &&
-        (lo != hi) && inCount > finishAt
+      result.isEmpty && straddleCut.isEmpty && lo != hi && inRows > finishAt
   }
 
   /** Exact median of `value` per `key`, any group size — the p = 0.5
@@ -287,13 +315,12 @@ object Quantiles {
     *   executor should hold.
     * @param buckets histogram resolution per narrowing pass (memory
     *   per (key, quantile) during the pass; fewer buckets = more
-    *   passes).
+    *   passes). A pass whose pairs would exceed the 2^20-cell
+    *   histogram cap uses fewer.
     * @param finish collect-and-select once a pair's candidate interval
     *   holds at most this many rows.
-    * @param maxHotKeys guard on the driver-side state (and on the
-    *   per-pass histogram, ≤ maxHotKeys·|ps|·(buckets+2) rows): more
-    *   hot keys than this fails fast with advice to raise the
-    *   threshold.
+    * @param maxHotKeys guard on the driver-side state: more hot keys
+    *   than this fails fast with advice to raise the threshold.
     * @return one row per (distinct key, p): (`key` as named,
     *   `p` double, `quantile` double), nulls/NaNs in `value` ignored;
     *   groups with no remaining rows are absent. `key` must not be
@@ -313,64 +340,223 @@ object Quantiles {
       hotThreshold: Long = 4000000L,
       buckets: Int = 8192,
       finish: Long = 1048576L,
-      maxHotKeys: Int = 4096,
-      histCollectMax: Long = 1L << 20): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
-    require(buckets >= 2, s"need at least 2 buckets, got $buckets")
-    require(hotThreshold >= 1 && maxHotKeys >= 1,
-      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
-    require(finish >= 1 && finish <= 100000000L,
-      s"finish=$finish must fit a collected per-key array")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
-    val spark = rows.sparkSession
-
+      maxHotKeys: Int = 4096): DataFrame = {
+    checkExact(key, ps, hotThreshold, buckets, finish, maxHotKeys)
     val v = col(value).cast("double")
     val base = rows
       .filter(col(value).isNotNull && !isnan(v))
-      .select(col(key).as("__k"), v.as("__v"))
-    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
+      .select(col(key).as("__k"), v.as("__v"), lit(1L).as("__w"))
 
     // pass 0: count + value bracket per key (algebraic, skew-immune);
     // the bracket converts to bit space on the driver, so the full
-    // corpus never evaluates the bit expression — only hot rows do
-    val counts = base.groupBy(col("__k")).agg(
+    // corpus never evaluates the bit expression — only hot rows do.
+    // The counts are exact, so they are the hot keys' stats (W = n).
+    val hot = base.groupBy(col("__k")).agg(
       count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
-    val hot = counts.filter(col("__n") > hotThreshold).collect()
-    require(hot.length <= maxHotKeys,
-      s"${hot.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
-        "raise the threshold — a workload where this many keys are oversized " +
-        "is big everywhere, not skewed")
+      .filter(col("__n") > hotThreshold).collect()
 
     // small path: classic count-map percentile, all ps in one buffer
+    val psLit = lit(ps.toArray)
+    narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
+      hot.map(_.get(0)))(
+      stats = _ => hot.zipWithIndex.map { case (r, ki) =>
+        Row(ki, r.getLong(1), r.getLong(1), r.getDouble(2), r.getDouble(3))
+      },
+      targets = (p, w) => {
+        val pos = p * (w - 1)
+        (math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1,
+          pos - math.floor(pos))
+      },
+      small = _.groupBy(col("__k"))
+        .agg(percentile(col("__v"), psLit).as("__qs"))
+        .select(col("__k"), posexplode(col("__qs")).as(Seq("__pi", "__med")))
+        .select(col("__k"), element_at(psLit, col("__pi") + 1).as("__p"),
+          col("__med")))
+  }
+
+  /** Exact LOWER weighted quantiles of `value` per `key`, weighted by
+    * the integral column `weight`, any group size — the weighted front
+    * end over the same narrowing core as [[exactQuantilesAnyScale]]:
+    * bucket weight sums place the target, and the order-statistic
+    * rank becomes a weight rank. Semantics per (key, p): the smallest
+    * value v whose cumulative weight cumw(v) = Σ weight over rows with
+    * value ≤ v reaches T = max(1, ⌈p·W⌉), W the key's total weight —
+    * at p = 0.5 exactly the classic `2·cumw ≥ W → min(value)` lower
+    * weighted median (the cumsum-replay formulation
+    * [[Analytics.weightedMedian]] computes with a per-key sort window,
+    * which this extends past the group size where that sort's task is
+    * executor-shaped).
+    *
+    * Groups at or under `hotThreshold` ROWS take the windowed-cumsum
+    * replay directly (per-key sort bounded by the knob); oversized
+    * groups the `route` sends to narrowing narrow the value's bit
+    * domain with O(buckets) state per (key, p) — per pass one shared
+    * scan of the extracted hot subset sums (weight, row count) per
+    * bucket, the target bucket is the first whose absolute cumulative
+    * weight reaches T, and the endgame walks the ≤ `finish` collected
+    * rows of the final interval executor-side (an `aggregate` fold,
+    * only (key, p, value) rows return to the driver).
+    *
+    * Contracts: `weight` must be integral-valued and positive — rows
+    * with null/≤ 0 weight or null/NaN value are EXCLUDED (a zero
+    * weight cannot move cumw; excluding it matches the replay oracle
+    * whenever ties share the boundary, and l_quantity-style weights
+    * are ≥ 1 by construction); weights are summed as longs (Σ must
+    * fit). A fractional weight fails the call eagerly with an
+    * IllegalArgumentException. The pass-0 snapshot assumption of
+    * [[exactQuantilesAnyScale]] applies unchanged.
+    *
+    * @return one row per (distinct key, p): (`key`, `p` double,
+    *   `quantile` double).
+    */
+  def exactWeightedQuantilesAnyScale(
+      rows: DataFrame, key: String, value: String, weight: String,
+      ps: Seq[Double],
+      hotThreshold: Long = 4000000L,
+      buckets: Int = 8192,
+      finish: Long = 1048576L,
+      maxHotKeys: Int = 4096,
+      route: HotRoute = HotRoute.CostAware): DataFrame = {
+    checkExact(key, ps, hotThreshold, buckets, finish, maxHotKeys)
+    val spark = rows.sparkSession
+    val v = col(value).cast("double")
+    val wLong = col(weight).cast("long")
+    val keep = col(value).isNotNull && !isnan(v) &&
+      col(weight).isNotNull && col(weight) > 0
+    val base = rows.filter(keep)
+      .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"))
+
+    // classification pass: WHICH keys exceed hotThreshold (plus the
+    // corpus size and the eager integral-weight check). LEAN on
+    // purpose: per-key count only — no rollup (its Expand feeds the
+    // aggregation TWICE the rows, measured +50% on the 600M-row
+    // decade), no value brackets (keys that narrow get exact stats
+    // from their extracted subset below), and the per-key result
+    // persists DISK_ONLY just long enough that the corpus total plus
+    // the global integral verdict are one O(|keys|) follow-up job, not
+    // a second scan of the fact. The integral contract is ENFORCED,
+    // not assumed: a fractional weight would otherwise truncate
+    // silently (0 < w < 1 passes the `> 0` filter yet contributes ZERO
+    // weight after the long cast). A per-row raise_error guard was
+    // tried instead and REJECTED by measurement: inside the replay's
+    // 600M-row window pipeline it cost ~1.8x bracketed same-run wall
+    // (docs/SCALING.md round 13).
+    val counts = rows.filter(keep)
+      .select(col(key).as("__k"), wLong.as("__w"),
+        (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
+      .groupBy(col("__k")).agg(
+        count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    val over = counts.filter(col("__n") > hotThreshold).collect()
+    val global = counts.agg(sum(col("__n")), min(col("__allint"))).head()
+    counts.unpersist()
+    require(global.isNullAt(1) || global.getBoolean(1),
+      s"weight column '$weight' holds non-integral values — the " +
+        "weighted quantile contract is integral positive weights " +
+        "(a fractional weight would truncate silently); scale weights " +
+        "to integers before calling")
+
+    // Router cost model (see [[HotRoute]]): a key narrows only when
+    // its single sorted window task — n rows times a spill multiplier
+    // for how far the working set overflows one task's execution-
+    // memory share — would outlast the narrowing's cluster-spread
+    // passes (γ·(N + passes·n) / parallelism). Constants calibrated on
+    // the two measured regimes (docs/SCALING.md rounds 12-13): the
+    // 32-core 48 GiB host with a 40M-row hot key must pick the replay
+    // (measured 4.1x better), the 4 GiB executor-sized JVM with a
+    // 50M-distinct key must pick the narrowing (measured 3.8x better);
+    // γ = 16 reproduces both with ~2-20x margin. Measured router
+    // overhead on a single host: the classification pass (~1.2x over
+    // the oracle-best plan at the 600M decade; a cluster spreads it
+    // across executors like any other scan).
+    val hotKeys: Array[Any] = route match {
+      case HotRoute.Narrow => over.map(_.get(0))
+      case HotRoute.CostAware =>
+        val totalRows = if (global.isNullAt(0)) 0L else global.getLong(0)
+        val parallelism =
+          math.max(1, spark.sparkContext.defaultParallelism).toDouble
+        val taskMem =
+          Runtime.getRuntime.maxMemory.toDouble * 0.3 / parallelism
+        val rowBytes = 48.0 // key + double value + long weight + sort overhead
+        val narrowPasses = 3.0 // extraction + ~2 shared histogram passes
+        val gamma = 16.0 // narrowing per-row machinery vs one window pass
+        over.filter { r =>
+          val n = r.getLong(1).toDouble
+          val spill = math.max(1.0, n * rowBytes / taskMem)
+          gamma * (totalRows + narrowPasses * n) / parallelism < n * spill
+        }.map(_.get(0))
+    }
+
+    // small path: windowed cumsum replay; the RANGE default frame sums
+    // through value ties, so cumw is a function of the VALUE — the
+    // exact cumw(v) the definition wants. T uses the same double
+    // multiply as the hot path so both paths agree bit-for-bit.
+    val psLit = lit(ps.toArray)
+    val wByV = Window.partitionBy(col("__k")).orderBy(col("__v"))
+    val wAll = Window.partitionBy(col("__k"))
+    // The EXACT per-key stats the narrowing needs — row count, total
+    // weight W (the T = ⌈p·W⌉ targets), value brackets — ride one
+    // cheap aggregate over the (persisted, small) extracted subset, so
+    // they are exact even when the classification above was sampled,
+    // and replay-routed runs never compute them.
+    narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
+      hotKeys)(
+      stats = _.groupBy(col("__ki")).agg(
+        count(lit(1)), sum(col("__w")), min(col("__v")), max(col("__v")))
+        .collect(),
+      targets = (p, w) => {
+        val t = math.max(1L, math.ceil(p * w).toLong)
+        (t, t, 0.0)
+      },
+      small = _.withColumn("__cw", sum(col("__w")).over(wByV))
+        .withColumn("__tw", sum(col("__w")).over(wAll))
+        .select(col("__k"), col("__v"), col("__cw"), col("__tw"),
+          explode(psLit).as("__p"))
+        .withColumn("__t",
+          greatest(lit(1L), ceil(col("__p") * col("__tw")).cast("long")))
+        .filter(col("__cw") >= col("__t"))
+        .groupBy(col("__k"), col("__p"))
+        .agg(min(col("__v")).as("__med")))
+  }
+
+  /** The narrowing core both exact front ends share.
+    *
+    * @param base the filtered rows as (`__k`, `__v` double, `__w` long
+    *   weight; `lit(1L)` for unweighted quantiles)
+    * @param hotKeys the keys the front end routed to narrowing
+    * @param stats exact per-hot-key (`__ki` index into `hotKeys`, rows,
+    *   total weight W, min value, max value), given the persisted hot
+    *   subset (`__ki`, `__v`, `__b`, `__w`) to aggregate if needed
+    * @param targets (t1, t2, frac) of quantile p for total weight W
+    * @param small (`__k`, `__p`, `__med`) for the rows of every other key
+    */
+  private def narrowHot(
+      base: DataFrame, key: String, ps: Seq[Double], hotThreshold: Long,
+      buckets: Int, finish: Long, maxHotKeys: Int, hotKeys: Array[Any])(
+      stats: DataFrame => Array[Row],
+      targets: (Double, Long) => (Long, Long, Double),
+      small: DataFrame => DataFrame): DataFrame = {
+    require(hotKeys.length <= maxHotKeys,
+      s"${hotKeys.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
+        "raise the threshold — a workload where this many keys are oversized " +
+        "is big everywhere, not skewed")
+    val spark = base.sparkSession
     def finishKeys(df: DataFrame): DataFrame =
       df.select(col("__k").as(key), col("__p").as("p"),
         col("__med").as("quantile"))
-    val psLit = lit(ps.toArray)
+    if (hotKeys.isEmpty) return finishKeys(small(base))
 
-    // joins against driver-built key tables are NULL-SAFE (`<=>`): the
-    // null surrogate is the canonical hot key, and an equality join
-    // would silently route a hot null group back to the unbounded
-    // count-map path
-    def hotJoin(left: DataFrame, right: DataFrame, how: String): DataFrame = {
-      val r = broadcast(right.withColumnRenamed("__k", "__hk"))
-      val j = left.join(r, col("__k") <=> col("__hk"), how)
-      if (how == "inner") j.drop("__hk") else j
-    }
-
-    val hotKeysDf = spark.createDataFrame(
-      hot.map(r => Row(r.get(0))).toSeq.asJava, StructType(Seq(keyField)))
-
-    val smallQuantiles = (if (hot.isEmpty) base
-      else hotJoin(base, hotKeysDf, "left_anti"))
-      .groupBy(col("__k"))
-      .agg(percentile(col("__v"), psLit).as("__qs"))
-      .select(col("__k"), posexplode(col("__qs")).as(Seq("__pi", "__med")))
-      .withColumn("__p", element_at(psLit, col("__pi") + 1))
-    if (hot.isEmpty) return finishKeys(smallQuantiles)
+    // joins against the driver-built key table are NULL-SAFE (`<=>`):
+    // the null surrogate is the canonical hot key, and an equality join
+    // would silently route a hot null group back to the small path
+    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
+    val hotIdxDf = spark.createDataFrame(
+      hotKeys.zipWithIndex.map { case (k, ki) => Row(k, ki) }.toSeq.asJava,
+      StructType(Seq(keyField.copy(name = "__hk"),
+        StructField("__ki", IntegerType))))
+    def hotJoin(how: String): DataFrame =
+      base.join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), how)
+    val smallQuantiles = small(hotJoin("left_anti"))
 
     // one extraction pass; every narrowing pass then reads the (small)
     // hot subset, not the full fact. DISK_ONLY: predictable, no
@@ -387,176 +573,137 @@ object Quantiles {
     // zero exchange — the per-pass Catalyst cycle (analyze + optimize
     // + codegen + broadcast + 2-stage shuffle) was the family's
     // residual ~1 s driver gap after the round-17 collect fusion.
-    val hotIdxDf = spark.createDataFrame(
-      hot.zipWithIndex.map { case (r, ki) => Row(r.get(0), ki) }.toSeq.asJava,
-      StructType(Seq(keyField.copy(name = "__hk"),
-        StructField("__ki", IntegerType))))
-    val hotRows = base
-      .join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), "inner")
+    val hotRows = hotJoin("inner")
       .select(col("__ki"), col("__v"),
-        SortableDoubleBits.sortableBits(col("__v")).as("__b"))
+        SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // fixed physical scan over the persisted subset — planned ONCE;
     // each narrowing pass re-runs only its tasks against the cache
     val hotScan = hotRows.queryExecution.toRdd
-    val states = hot.zipWithIndex.flatMap { case (r, ki) =>
+    val states = stats(hotRows).flatMap { r =>
+      val ki = r.getInt(0)
       // min/max may report either of ±0.0 (they compare equal as
       // doubles); widen the bit bracket to cover both so no row can
       // fall outside it
-      val loV = r.getDouble(2)
-      val hiV = r.getDouble(3)
+      val loV = r.getDouble(3)
+      val hiV = r.getDouble(4)
       val loB = SortableDoubleBits.toSortable(if (loV == 0.0) -0.0 else loV)
       val hiB = SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV)
       ps.zipWithIndex.map { case (p, pi) =>
-        new HotState(ki * ps.size + pi, r.get(0), r.getLong(1), p, loB, hiB)
+        val (t1, t2, frac) = targets(p, r.getLong(2))
+        new HotState(ki * ps.size + pi, hotKeys(ki), p, t1, t2, frac,
+          loB, hiB, r.getLong(1))
       }
     }
 
-    // interval shrinks ~buckets-fold per pass (half that on the one
-    // possible mixed-sign shifted pass); this bound is generous
-    val maxIter = 66 / (63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)).toInt + 4
+    // buckets per pair this pass, under the [[HistCells]] cap
+    def passBuckets(active: Int): Int =
+      math.max(2L, math.min(buckets.toLong, HistCells / active - 2)).toInt
+    // the interval shrinks ~passBuckets-fold per pass (half that on the
+    // one possible mixed-sign shifted pass), and the active set only
+    // shrinks, so the first pass has the fewest buckets; this bound is
+    // generous
+    val firstBuckets = passBuckets(math.max(1, states.count(_.open(finish))))
+    val maxIter = 66 / (31 - Integer.numberOfLeadingZeros(firstBuckets)) + 4
+    final case class Geo(s: HotState, shift: Int, sLo: Long, sHi: Long, w: Long)
     var iter = 0
     while (states.exists(_.open(finish)) && iter < maxIter) {
       iter += 1
       val active = states.filter(_.open(finish))
+      val nB = passBuckets(active.length)
 
       // per-pair bucket geometry, integer-exact. A mixed-sign interval
       // wider than Long.MaxValue would overflow (bits - lo); shifting
       // both by one bit is order-preserving and never needed twice.
-      case class Geo(s: HotState, shift: Int, sLo: Long, sHi: Long, w: Long)
       val geo = active.map { s =>
         val wide = s.lo < 0 && s.hi > 0 &&
           (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
         val shift = if (wide) 1 else 0
         val sLo = s.lo >> shift
         val sHi = s.hi >> shift
-        Geo(s, shift, sLo, sHi, (sHi - sLo) / buckets + 1)
+        Geo(s, shift, sLo, sHi, (sHi - sLo) / nB + 1)
       }
-      // Rank location. Under `histCollectMax` (round 17 second pass,
-      // guide §1.2/§2.4): the per-pass histogram is a RAW RDD JOB over
-      // the cached subset scan — the pass geometry rides the task
-      // closure, every hot row lands in exactly one monotone bucket
-      // PER ACTIVE PAIR of its key (the slot loop fans rows out per
-      // pair — this is how every requested quantile narrows in one
-      // shared scan), and the -1 / B sentinels keep rows outside a
-      // pair's interval in its rank arithmetic, so ranks stay ABSOLUTE
-      // and nothing needs carrying between passes except the interval
-      // itself. One single-stage job per pass, zero planning, zero
-      // exchange; the driver receives ONE long array — the same
-      // integer histogram (≤ |active|·(buckets+2) cells, a function of
-      // the KNOBS, never the data) the Catalyst formulation
-      // aggregated, so narrowing is bit-identical (spec-pinned against
-      // the executor-side reduction). Above the bound the Catalyst
-      // window reduction keeps driver traffic at one row per pair,
-      // exactly as before (AQE scoped off — the exchange moves ~5 KB).
-      val nBkts = buckets + 2
-      val edges: Map[Int, (Long, Long, Long, Long)] =
-        if (active.length.toLong * nBkts <= histCollectMax) {
-          val psN = ps.size
-          val slotLo = geo.map(_.s.lo)
-          val slotHi = geo.map(_.s.hi)
-          val slotSLo = geo.map(_.sLo)
-          val slotW = geo.map(_.w)
-          val slotShift = geo.map(_.shift)
-          val slotsArr: Array[Array[Int]] = {
-            val m = Array.fill(hot.length)(
-              scala.collection.mutable.ArrayBuffer.empty[Int])
-            geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / psN) += j }
-            m.map(_.toArray)
+      // Rank location (round 17 second pass, guide §1.2/§2.4): the
+      // per-pass histogram is a RAW RDD JOB over the cached subset
+      // scan — the pass geometry rides the task closure, every hot row
+      // lands in exactly one monotone bucket PER ACTIVE PAIR of its key
+      // (the slot loop fans rows out per pair — this is how every
+      // requested quantile narrows in one shared scan), and each cell
+      // sums (weight, row count). The -1 / nB sentinel buckets keep
+      // rows outside a pair's interval in its rank arithmetic (bucket
+      // -1 carries the below-interval weight), so the cumulative weight
+      // stays ABSOLUTE and nothing needs carrying between passes except
+      // the interval itself. One single-stage job per pass, zero
+      // planning, zero exchange; the driver receives ONE long array of
+      // ≤ [[HistCells]] cells — a function of the KNOBS, never the data.
+      val cells = nB + 2
+      val slotLo = geo.map(_.s.lo)
+      val slotHi = geo.map(_.s.hi)
+      val slotSLo = geo.map(_.sLo)
+      val slotW = geo.map(_.w)
+      val slotShift = geo.map(_.shift)
+      val slotsArr: Array[Array[Int]] = {
+        val m = Array.fill(hotKeys.length)(
+          scala.collection.mutable.ArrayBuffer.empty[Int])
+        geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / ps.size) += j }
+        m.map(_.toArray)
+      }
+      val nBL = nB.toLong
+      val hist = histAggregate(hotScan, active.length * cells * 2) {
+        (h, row) =>
+          val slots = slotsArr(row.getInt(0))
+          val b = row.getLong(2)
+          val w = row.getLong(3)
+          var i = 0
+          while (i < slots.length) {
+            val j = slots(i)
+            val bkt =
+              if (b < slotLo(j)) -1L
+              else if (b > slotHi(j)) nBL
+              else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
+            val off = (j * cells + (bkt + 1L).toInt) * 2
+            h(off) += w
+            h(off + 1) += 1L
+            i += 1
           }
-          val bucketsL = buckets.toLong
-          val hist = histAggregate(hotScan, active.length * nBkts) {
-            (h, row) =>
-              val slots = slotsArr(row.getInt(0))
-              val b = row.getLong(2)
-              var i = 0
-              while (i < slots.length) {
-                val j = slots(i)
-                val bkt =
-                  if (b < slotLo(j)) -1L
-                  else if (b > slotHi(j)) bucketsL
-                  else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
-                h(j * nBkts + (bkt + 1L).toInt) += 1L
-                i += 1
-              }
-          }
-          geo.zipWithIndex.map { case (g, j) =>
-            val s = g.s
-            var cum = 0L
-            var e1: (Long, Long, Long) = null
-            var b2 = Long.MinValue
-            var idx = 0
-            while (idx < nBkts && (e1 == null || b2 == Long.MinValue)) {
-              val c = hist(j * nBkts + idx)
-              if (c != 0L) {
-                cum += c
-                val b = idx - 1L
-                if (e1 == null && cum >= s.k1) e1 = (b, cum, c)
-                if (b2 == Long.MinValue && cum >= s.k2) b2 = b
-              }
-              idx += 1
-            }
-            require(e1 != null && b2 != Long.MinValue,
-              s"pass histogram never reached ranks k1=${s.k1} k2=${s.k2} " +
-                s"(p=${s.p}) — narrowing invariant broken")
-            s.sid -> (e1._1, e1._2, e1._3, b2)
-          }.toMap
-        } else {
-          val boundsSchema = StructType(Seq(
-            StructField("__ki", IntegerType),
-            StructField("__sid", IntegerType),
-            StructField("__lo", LongType), StructField("__hi", LongType),
-            StructField("__slo", LongType), StructField("__w", LongType),
-            StructField("__shift", IntegerType),
-            StructField("__k1", LongType), StructField("__k2", LongType)))
-          val bounds = spark.createDataFrame(
-            geo.map(g => Row(g.s.sid / ps.size, g.s.sid, g.s.lo, g.s.hi,
-              g.sLo, g.w, g.shift, g.s.k1, g.s.k2)).toSeq.asJava,
-            boundsSchema)
-          val bkt = when(col("__b") < col("__lo"), lit(-1L))
-            .when(col("__b") > col("__hi"), lit(buckets.toLong))
-            .otherwise(expr(s"(shiftright(__b, __shift) - __slo) div __w"))
-          val bucketed = hotRows.join(broadcast(bounds), Seq("__ki"))
-            .withColumn("__bkt", bkt)
-            .groupBy(col("__sid"), col("__bkt"))
-            .agg(count(lit(1)).as("__c"), first(col("__k1")).as("__k1"),
-              first(col("__k2")).as("__k2"))
-          val wnd = Window.partitionBy(col("__sid")).orderBy(col("__bkt"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          graft.GraftSession.withAdaptiveOff(spark) {
-            bucketed
-              .withColumn("__cum", sum(col("__c")).over(wnd))
-              .groupBy(col("__sid"))
-              .agg(
-                min(when(col("__cum") >= col("__k1"),
-                  struct(col("__bkt"), col("__cum"), col("__c")))).as("__e1"),
-                min(when(col("__cum") >= col("__k2"),
-                  struct(col("__bkt"), col("__cum"), col("__c")))).as("__e2"))
-              .collect()
-          }.map(r => r.getInt(0) -> (r.getStruct(1).getLong(0),
-              r.getStruct(1).getLong(1), r.getStruct(1).getLong(2),
-              r.getStruct(2).getLong(0))).toMap
-        }
+      }
 
-      geo.foreach { g =>
+      geo.zipWithIndex.foreach { case (g, j) =>
         val s = g.s
-        val (b1, cum1, c1, b2) = edges(s.sid)
-        require(b1 >= 0 && b1 < buckets && b2 >= 0 && b2 < buckets,
-          s"rank left the bracketed interval (b1=$b1 b2=$b2, p=${s.p}) — " +
-            "narrowing invariant broken")
+        // one scan over the cumulative weight locates both targets
+        var cum, cum1, ws1, c1 = 0L
+        var b1, b2 = Long.MinValue
+        var idx = 0
+        while (idx < cells && b2 == Long.MinValue) {
+          val off = (j * cells + idx) * 2
+          val ws = hist(off)
+          val c = hist(off + 1)
+          if (c != 0L) {
+            cum += ws
+            if (b1 == Long.MinValue && cum >= s.t1) {
+              b1 = idx - 1L; cum1 = cum; ws1 = ws; c1 = c
+            }
+            if (cum >= s.t2) b2 = idx - 1L
+          }
+          idx += 1
+        }
+        require(b1 >= 0 && b1 < nB && b2 >= 0 && b2 < nB,
+          s"targets t1=${s.t1} t2=${s.t2} left the bracketed interval " +
+            s"(b1=$b1 b2=$b2, p=${s.p}) — narrowing invariant broken")
         val mask = (1L << g.shift) - 1
+        val edge = math.min(s.hi,
+          (math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1) << g.shift) | mask)
         if (b1 == b2) {
-          val bHiS = math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1)
           s.lo = math.max(s.lo, (g.sLo + b1 * g.w) << g.shift)
-          s.hi = math.min(s.hi, (bHiS << g.shift) | mask)
-          s.below = cum1 - c1
-          s.inCount = c1
+          s.hi = edge
+          s.belowW = cum1 - ws1
+          s.inRows = c1
         } else {
-          // k2 = k1 + 1 and exactly cum1 = k1 rows sit at or below the
-          // upper bit edge of bucket b1: both order statistics are one
-          // conditional-aggregate away
-          val cutS = math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1)
-          s.straddleCut = Some(math.min(s.hi, (cutS << g.shift) | mask))
+          // only unit weights can split the targets (t2 = t1 + 1), and
+          // exactly cum1 = t1 rows sit at or below the upper bit edge
+          // of bucket b1: both order statistics are one conditional
+          // aggregate away
+          s.straddleCut = Some(edge)
         }
       }
     }
@@ -567,26 +714,12 @@ object Quantiles {
     states.filter(s => s.result.isEmpty && s.straddleCut.isEmpty && s.lo == s.hi)
       .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
 
-    // the remaining endgames resolve EAGERLY (one bounded job each over
-    // the persisted subset, at most maxHotKeys·|ps| rows back), so the
+    // the remaining endgames resolve EAGERLY (one bounded job over the
+    // persisted subset, at most maxHotKeys·|ps| rows back), so the
     // subset can be unpersisted and the returned plan stays lazy-cheap.
-    // Each endgame returns the two order statistics; the interpolation
-    // (v1 + (v2−v1)·frac, frac per pair) happens here on the driver.
-    val bySid = states.map(s => s.sid -> s).toMap
-    def absorb(results: Array[Row]): Unit =
-      results.foreach { r =>
-        val s = bySid(r.getInt(0))
-        if (s.result.isEmpty) {
-          val (v1, v2) = (r.getDouble(1), r.getDouble(2))
-          // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
-          // would manufacture NaN where percentile/quantile_cont return Inf
-          s.result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * s.frac)
-        }
-      }
-
-    // Both endgames return (sid, v1, v2); running them as branches of
-    // ONE unioned action (round 17) lets their stages schedule inside
-    // a single job instead of two driver-sequenced ones.
+    // Both return (sid, v1, v2) and run as branches of ONE unioned
+    // action (round 17), so their stages schedule inside a single job
+    // instead of two driver-sequenced ones.
     val endgames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val straddled = states.filter(_.straddleCut.isDefined)
     if (straddled.nonEmpty) {
@@ -602,422 +735,51 @@ object Quantiles {
           min(when(col("__b") > col("__cut"), col("__v"))).as("__v2"))
     }
 
+    // collect endgame: the ≤ finish interval rows fold EXECUTOR-SIDE,
+    // a sorted (value, weight) walk from the absolute below-interval
+    // weight that keeps the first value reaching each target; with
+    // unit weights those are the t1-th and t2-th order statistics
     val collecting = states.filter(s =>
       s.result.isEmpty && s.straddleCut.isEmpty)
     if (collecting.nonEmpty) {
       val fin = spark.createDataFrame(
         collecting.map(s => Row(s.sid / ps.size, s.sid, s.lo, s.hi,
-          s.k1 - s.below, s.k2 - s.below)).toSeq.asJava,
+          s.belowW, s.t1, s.t2)).toSeq.asJava,
         StructType(Seq(StructField("__ki", IntegerType),
           StructField("__sid", IntegerType),
           StructField("__lo", LongType), StructField("__hi", LongType),
-          StructField("__r1", LongType), StructField("__r2", LongType))))
+          StructField("__bw", LongType), StructField("__t1", LongType),
+          StructField("__t2", LongType))))
       endgames += hotRows.join(broadcast(fin), Seq("__ki"))
         .filter(col("__b") >= col("__lo") && col("__b") <= col("__hi"))
         .groupBy(col("__sid"))
-        .agg(sort_array(collect_list(col("__v"))).as("__vs"),
-          first(col("__r1")).as("__r1"), first(col("__r2")).as("__r2"))
-        .select(col("__sid"),
-          element_at(col("__vs"), col("__r1").cast("int")).as("__v1"),
-          element_at(col("__vs"), col("__r2").cast("int")).as("__v2"))
-    }
-    if (endgames.nonEmpty)
-      absorb(graft.GraftSession.withAdaptiveOff(spark) {
-        endgames.reduce(_ unionByName _).collect()
-      })
-    hotRows.unpersist()
-    require(states.forall(_.result.isDefined),
-      "a hot (key, quantile) resolved no result — endgame invariant broken")
-
-    val hotQuantiles = spark.createDataFrame(
-      states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
-      StructType(Seq(keyField, StructField("__p", DoubleType),
-        StructField("__med", DoubleType))))
-    finishKeys(smallQuantiles.select(col("__k"), col("__p"), col("__med"))
-      .unionByName(hotQuantiles))
-  }
-
-  /** Exact LOWER weighted quantiles of `value` per `key`, weighted by
-    * the integral column `weight`, any group size — the weighted twin
-    * of [[exactQuantilesAnyScale]] with the same narrowing machinery:
-    * bucket COUNTS become bucket WEIGHT SUMS and the order-statistic
-    * rank becomes a weight rank. Semantics per (key, p): the smallest
-    * value v whose cumulative weight cumw(v) = Σ weight over rows with
-    * value ≤ v reaches T = max(1, ⌈p·W⌉), W the key's total weight —
-    * at p = 0.5 exactly the classic `2·cumw ≥ W → min(value)` lower
-    * weighted median (the cumsum-replay formulation
-    * [[Analytics.weightedMedian]] computes with a per-key sort window,
-    * which this extends past the group size where that sort's task is
-    * executor-shaped).
-    *
-    * Groups at or under `hotThreshold` ROWS take the windowed-cumsum
-    * replay directly (per-key sort bounded by the knob); oversized
-    * groups narrow the value's bit domain with O(buckets) state per
-    * (key, p) — per pass one shared scan of the extracted hot subset
-    * counts (weight sum, row count) per bucket, the target bucket is
-    * the first whose absolute cumulative weight reaches T, and the
-    * endgame walks the ≤ `finish` collected rows of the final interval
-    * executor-side (an `aggregate` fold, only (key, p, value) rows
-    * return to the driver).
-    *
-    * Contracts: `weight` must be integral-valued and positive — rows
-    * with null/≤ 0 weight or null/NaN value are EXCLUDED (a zero
-    * weight cannot move cumw; excluding it matches the replay oracle
-    * whenever ties share the boundary, and l_quantity-style weights
-    * are ≥ 1 by construction); weights are summed as longs (Σ must
-    * fit). The pass-0 snapshot assumption of
-    * [[exactQuantilesAnyScale]] applies unchanged.
-    *
-    * @return one row per (distinct key, p): (`key`, `p` double,
-    *   `quantile` double).
-    */
-  def exactWeightedQuantilesAnyScale(
-      rows: DataFrame, key: String, value: String, weight: String,
-      ps: Seq[Double],
-      hotThreshold: Long = 4000000L,
-      buckets: Int = 8192,
-      finish: Long = 1048576L,
-      maxHotKeys: Int = 4096,
-      route: HotRoute = HotRoute.CostAware,
-      histCollectMax: Long = 1L << 20): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
-    require(buckets >= 2, s"need at least 2 buckets, got $buckets")
-    require(hotThreshold >= 1 && maxHotKeys >= 1,
-      s"bad knobs: hotThreshold=$hotThreshold maxHotKeys=$maxHotKeys")
-    require(finish >= 1 && finish <= 100000000L,
-      s"finish=$finish must fit a collected per-key array")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
-    val spark = rows.sparkSession
-
-    val v = col(value).cast("double")
-    val wLong = col(weight).cast("long")
-    val keep = col(value).isNotNull && !isnan(v) &&
-      col(weight).isNotNull && col(weight) > 0
-    val base = rows.filter(keep)
-      .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"))
-    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
-
-    // classification pass: WHICH keys exceed hotThreshold (plus, for
-    // CostAware, the corpus size and the eager integral-weight check).
-    // LEAN on purpose: per-key count only — no rollup (its Expand
-    // feeds the aggregation TWICE the rows, measured +50% on the
-    // 600M-row decade), no value brackets (keys that narrow get exact
-    // stats from their extracted subset below), and the per-key result
-    // persists DISK_ONLY just long enough that the corpus total plus
-    // the global integral verdict are one O(|keys|) follow-up job, not
-    // a second scan of the fact. SortReplay skips the pass entirely
-    // (zero overhead over the plain replay). The integral contract is
-    // ENFORCED, not assumed: a fractional weight would otherwise
-    // truncate silently (0 < w < 1 passes the `> 0` filter yet
-    // contributes ZERO weight after the long cast). A per-row
-    // raise_error guard was tried instead and REJECTED by measurement:
-    // inside the replay's 600M-row window pipeline it cost ~1.8x
-    // bracketed same-run wall (docs/SCALING.md round 13).
-    //
-    // Router cost model (see [[HotRoute]]): a key narrows only when
-    // its single sorted window task — n rows times a spill multiplier
-    // for how far the working set overflows one task's execution-
-    // memory share — would outlast the narrowing's cluster-spread
-    // passes (γ·(N + passes·n) / parallelism). Constants calibrated on
-    // the two measured regimes (docs/SCALING.md rounds 12-13): the
-    // 32-core 48 GiB host with a 40M-row hot key must pick the replay
-    // (measured 4.1x better), the 4 GiB executor-sized JVM with a
-    // 50M-distinct key must pick the narrowing (measured 3.8x better);
-    // γ = 16 reproduces both with ~2-20x margin. Measured router
-    // overhead on a single host: the classification pass (~1.2x over
-    // the oracle-best plan at the 600M decade; a cluster spreads it
-    // across executors like any other scan).
-    def classify(): (Array[Row], Long) = {
-      val counts = rows.filter(keep)
-        .select(col(key).as("__k"), wLong.as("__w"),
-          (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
-        .groupBy(col("__k")).agg(
-          count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val over = counts.filter(col("__n") > hotThreshold).collect()
-      val global = counts.agg(sum(col("__n")), min(col("__allint"))).head()
-      counts.unpersist()
-      require(global.isNullAt(1) || global.getBoolean(1),
-        s"weight column '$weight' holds non-integral values — the " +
-          "weighted quantile contract is integral positive weights " +
-          "(a fractional weight would truncate silently); scale weights " +
-          "to integers before calling")
-      (over, if (global.isNullAt(0)) 0L else global.getLong(0))
-    }
-    val hotKeys: Array[Any] = route match {
-      case HotRoute.SortReplay => Array.empty[Any]
-      case HotRoute.Narrow => classify()._1.map(_.get(0))
-      case HotRoute.CostAware =>
-        val (over, totalRows) = classify()
-        val parallelism =
-          math.max(1, spark.sparkContext.defaultParallelism).toDouble
-        val taskMem =
-          Runtime.getRuntime.maxMemory.toDouble * 0.3 / parallelism
-        val rowBytes = 48.0 // key + double value + long weight + sort overhead
-        val narrowPasses = 3.0 // extraction + ~2 shared histogram passes
-        val gamma = 16.0 // narrowing per-row machinery vs one window pass
-        over.filter { r =>
-          val n = r.getLong(1).toDouble
-          val spill = math.max(1.0, n * rowBytes / taskMem)
-          gamma * (totalRows + narrowPasses * n) / parallelism < n * spill
-        }.map(_.get(0))
-    }
-    require(hotKeys.length <= maxHotKeys,
-      s"${hotKeys.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
-        "raise the threshold — a workload where this many keys are oversized " +
-        "is big everywhere, not skewed")
-
-    val psLit = lit(ps.toArray)
-    def finishKeys(df: DataFrame): DataFrame =
-      df.select(col("__k").as(key), col("__p").as("p"),
-        col("__med").as("quantile"))
-    def hotJoin(left: DataFrame, right: DataFrame, how: String): DataFrame = {
-      val r = broadcast(right.withColumnRenamed("__k", "__hk"))
-      val j = left.join(r, col("__k") <=> col("__hk"), how)
-      if (how == "inner") j.drop("__hk") else j
-    }
-    val hotKeysDf = spark.createDataFrame(
-      hotKeys.map(k => Row(k)).toSeq.asJava, StructType(Seq(keyField)))
-
-    // small path: windowed cumsum replay; the RANGE default frame sums
-    // through value ties, so cumw is a function of the VALUE — the
-    // exact cumw(v) the definition wants. T uses the same double
-    // multiply as the hot path so both paths agree bit-for-bit.
-    val wByV = Window.partitionBy(col("__k")).orderBy(col("__v"))
-    val wAll = Window.partitionBy(col("__k"))
-    val smallQuantiles = (if (hotKeys.isEmpty) base
-      else hotJoin(base, hotKeysDf, "left_anti"))
-      .withColumn("__cw", sum(col("__w")).over(wByV))
-      .withColumn("__tw", sum(col("__w")).over(wAll))
-      .select(col("__k"), col("__v"), col("__cw"), col("__tw"),
-        explode(psLit).as("__p"))
-      .withColumn("__t",
-        greatest(lit(1L), ceil(col("__p") * col("__tw")).cast("long")))
-      .filter(col("__cw") >= col("__t"))
-      .groupBy(col("__k"), col("__p"))
-      .agg(min(col("__v")).as("__med"))
-    if (hotKeys.isEmpty) return finishKeys(smallQuantiles)
-
-    // hot path: one extraction pass, then shared narrowing passes. The
-    // EXACT per-key stats the narrowing needs — row count, total
-    // weight W (the T = ⌈p·W⌉ targets), value brackets — ride one
-    // cheap aggregate over the (persisted, small) extracted subset, so
-    // they are exact even when the classification above was sampled,
-    // and replay-routed runs never compute them. As in the unweighted
-    // twin (round 17 second pass), the subset rows carry a dense key
-    // index so each narrowing pass is one raw single-stage RDD job
-    // over the cached scan — zero planning, zero exchange per pass.
-    val hotIdxDf = spark.createDataFrame(
-      hotKeys.zipWithIndex.map { case (k, ki) => Row(k, ki) }.toSeq.asJava,
-      StructType(Seq(keyField.copy(name = "__hk"),
-        StructField("__ki", IntegerType))))
-    val hotRows = base
-      .join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), "inner")
-      .select(col("__ki"), col("__v"),
-        SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val hotScan = hotRows.queryExecution.toRdd
-    val hotStats = hotRows.groupBy(col("__ki")).agg(
-      count(lit(1)).as("__n"), sum(col("__w")).as("__tw"),
-      min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
-      .collect()
-
-    final class WState(val sid: Int, val key: Any, val p: Double,
-        val target: Long, var lo: Long, var hi: Long, var inRows: Long) {
-      var belowW: Long = 0L
-      var result: Option[Double] = None
-      def open(finishAt: Long): Boolean =
-        result.isEmpty && lo != hi && inRows > finishAt
-    }
-    val states = hotStats.flatMap { r =>
-      val ki = r.getInt(0)
-      val loV = r.getDouble(3)
-      val hiV = r.getDouble(4)
-      val loB = SortableDoubleBits.toSortable(if (loV == 0.0) -0.0 else loV)
-      val hiB = SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV)
-      ps.zipWithIndex.map { case (p, pi) =>
-        val t = math.max(1L, math.ceil(p * r.getLong(2)).toLong)
-        new WState(ki * ps.size + pi, hotKeys(ki), p, t, loB, hiB,
-          r.getLong(1))
-      }
-    }
-
-    val maxIter = 66 / (63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)).toInt + 4
-    var iter = 0
-    while (states.exists(_.open(finish)) && iter < maxIter) {
-      iter += 1
-      val active = states.filter(_.open(finish))
-      case class Geo(s: WState, shift: Int, sLo: Long, sHi: Long, w: Long)
-      val geo = active.map { s =>
-        val wide = s.lo < 0 && s.hi > 0 &&
-          (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
-        val shift = if (wide) 1 else 0
-        val sLo = s.lo >> shift
-        val sHi = s.hi >> shift
-        Geo(s, shift, sLo, sHi, (sHi - sLo) / buckets + 1)
-      }
-      // Same per-pass discipline as the unweighted loop (round 17
-      // second pass): under the bound the weighted histogram — bucket
-      // WEIGHT SUMS beside bucket counts, two longs per cell — is one
-      // raw single-stage RDD job over the cached subset scan, and the
-      // cumulative weight-rank scan runs on the driver; the sentinel
-      // buckets keep the cumulative weight ABSOLUTE (bucket -1 carries
-      // the below-interval weight), so the target weight rank needs no
-      // carrying between passes. Integer weight sums, so narrowing is
-      // bit-identical to the Catalyst executor-side reduction kept for
-      // above the bound (spec-pinned both ways).
-      val nBkts = buckets + 2
-      val edges: Map[Int, (Long, Long, Long, Long)] =
-        if (active.length.toLong * nBkts <= histCollectMax) {
-          val psN = ps.size
-          val slotLo = geo.map(_.s.lo)
-          val slotHi = geo.map(_.s.hi)
-          val slotSLo = geo.map(_.sLo)
-          val slotW = geo.map(_.w)
-          val slotShift = geo.map(_.shift)
-          val slotsArr: Array[Array[Int]] = {
-            val m = Array.fill(hotKeys.length)(
-              scala.collection.mutable.ArrayBuffer.empty[Int])
-            geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / psN) += j }
-            m.map(_.toArray)
-          }
-          val bucketsL = buckets.toLong
-          val hist = histAggregate(hotScan, active.length * nBkts * 2) {
-            (h, row) =>
-              val slots = slotsArr(row.getInt(0))
-              val b = row.getLong(2)
-              val w = row.getLong(3)
-              var i = 0
-              while (i < slots.length) {
-                val j = slots(i)
-                val bkt =
-                  if (b < slotLo(j)) -1L
-                  else if (b > slotHi(j)) bucketsL
-                  else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
-                val off = (j * nBkts + (bkt + 1L).toInt) * 2
-                h(off) += w
-                h(off + 1) += 1L
-                i += 1
-              }
-          }
-          geo.zipWithIndex.map { case (g, j) =>
-            val s = g.s
-            var cum = 0L
-            var e: (Long, Long, Long, Long) = null
-            var idx = 0
-            while (idx < nBkts && e == null) {
-              val off = (j * nBkts + idx) * 2
-              val ws = hist(off)
-              val c = hist(off + 1)
-              if (c != 0L) {
-                cum += ws
-                if (cum >= s.target) e = (idx - 1L, cum, ws, c)
-              }
-              idx += 1
-            }
-            require(e != null,
-              s"pass histogram never reached target weight ${s.target} " +
-                s"(p=${s.p}) — narrowing invariant broken")
-            s.sid -> e
-          }.toMap
-        } else {
-          val boundsSchema = StructType(Seq(
-            StructField("__ki", IntegerType),
-            StructField("__sid", IntegerType),
-            StructField("__lo", LongType), StructField("__hi", LongType),
-            StructField("__slo", LongType), StructField("__w0", LongType),
-            StructField("__shift", IntegerType),
-            StructField("__t", LongType)))
-          val bounds = spark.createDataFrame(
-            geo.map(g => Row(g.s.sid / ps.size, g.s.sid, g.s.lo, g.s.hi,
-              g.sLo, g.w, g.shift, g.s.target)).toSeq.asJava, boundsSchema)
-          val bkt = when(col("__b") < col("__lo"), lit(-1L))
-            .when(col("__b") > col("__hi"), lit(buckets.toLong))
-            .otherwise(expr("(shiftright(__b, __shift) - __slo) div __w0"))
-          val bucketed = hotRows.join(broadcast(bounds), Seq("__ki"))
-            .withColumn("__bkt", bkt)
-            .groupBy(col("__sid"), col("__bkt"))
-            .agg(sum(col("__w")).as("__ws"), count(lit(1)).as("__c"),
-              first(col("__t")).as("__tt"))
-          val wnd = Window.partitionBy(col("__sid")).orderBy(col("__bkt"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          graft.GraftSession.withAdaptiveOff(spark) {
-            bucketed
-              .withColumn("__cum", sum(col("__ws")).over(wnd))
-              .groupBy(col("__sid"))
-              .agg(min(when(col("__cum") >= col("__tt"),
-                struct(col("__bkt"), col("__cum"), col("__ws"), col("__c"))))
-                .as("__e"))
-              .collect()
-          }.map(r => r.getInt(0) -> (r.getStruct(1).getLong(0),
-              r.getStruct(1).getLong(1), r.getStruct(1).getLong(2),
-              r.getStruct(1).getLong(3))).toMap
-        }
-
-      geo.foreach { g =>
-        val s = g.s
-        val (b, cum, ws, c) = edges(s.sid)
-        require(b >= 0 && b < buckets,
-          s"weight rank left the bracketed interval (b=$b, p=${s.p}) — " +
-            "narrowing invariant broken")
-        val mask = (1L << g.shift) - 1
-        val bHiS = math.min(g.sHi, g.sLo + (b + 1) * g.w - 1)
-        s.lo = math.max(s.lo, (g.sLo + b * g.w) << g.shift)
-        s.hi = math.min(s.hi, (bHiS << g.shift) | mask)
-        s.belowW = cum - ws
-        s.inRows = c
-      }
-    }
-    require(!states.exists(_.open(finish)),
-      s"weighted quantile narrowing did not converge in $maxIter passes")
-
-    // plateau endgame: a single-bit interval IS the value
-    states.filter(s => s.result.isEmpty && s.lo == s.hi)
-      .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
-
-    // collect endgame: the ≤ finish interval rows fold EXECUTOR-SIDE
-    // (sorted (value, weight) walk until the absolute cumulative
-    // weight reaches the target); one (sid, value) row returns per pair
-    val collecting = states.filter(_.result.isEmpty)
-    if (collecting.nonEmpty) {
-      val fin = spark.createDataFrame(
-        collecting.map(s => Row(s.sid / ps.size, s.sid, s.lo, s.hi,
-          s.belowW, s.target)).toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__lo", LongType), StructField("__hi", LongType),
-          StructField("__bw", LongType), StructField("__t", LongType))))
-      val bySid = collecting.map(s => s.sid -> s).toMap
-      graft.GraftSession.withAdaptiveOff(spark) {
-      hotRows.join(broadcast(fin), Seq("__ki"))
-        .filter(col("__b") >= col("__lo") && col("__b") <= col("__hi"))
-        .groupBy(col("__sid"))
         .agg(sort_array(collect_list(struct(col("__v"), col("__w"))))
-          .as("__vs"),
-          first(col("__bw")).as("__bw"), first(col("__t")).as("__t"))
+          .as("__vs"), first(col("__bw")).as("__bw"),
+          first(col("__t1")).as("__t1"), first(col("__t2")).as("__t2"))
         .select(col("__sid"), expr(
           """aggregate(__vs,
-            |  struct(__bw AS acc, CAST(NULL AS DOUBLE) AS res),
-            |  (a, x) -> CASE
-            |    WHEN a.res IS NOT NULL THEN a
-            |    WHEN a.acc + x.__w >= __t
-            |      THEN struct(a.acc + x.__w AS acc, x.__v AS res)
-            |    ELSE struct(a.acc + x.__w AS acc, CAST(NULL AS DOUBLE) AS res)
-            |  END,
-            |  a -> a.res)""".stripMargin).as("__med"))
-        .collect()
-        .foreach { r =>
-          require(!r.isNullAt(1),
-            "a hot (key, p) fold reached no target weight — endgame " +
-              "invariant broken")
-          bySid(r.getInt(0)).result = Some(r.getDouble(1))
-        }
-      }
+            |  struct(__bw AS acc, CAST(NULL AS DOUBLE) AS v1,
+            |    CAST(NULL AS DOUBLE) AS v2),
+            |  (a, x) -> struct(a.acc + x.__w AS acc,
+            |    coalesce(a.v1, IF(a.acc + x.__w >= __t1, x.__v, NULL)) AS v1,
+            |    coalesce(a.v2, IF(a.acc + x.__w >= __t2, x.__v, NULL)) AS v2))"""
+            .stripMargin).as("__f"))
+        .select(col("__sid"), col("__f.v1").as("__v1"),
+          col("__f.v2").as("__v2"))
     }
+    val bySid = states.map(s => s.sid -> s).toMap
+    if (endgames.nonEmpty)
+      graft.GraftSession.withAdaptiveOff(spark) {
+        endgames.reduce(_ unionByName _).collect()
+      }.foreach { r =>
+        require(!r.isNullAt(1) && !r.isNullAt(2),
+          "a hot (key, p) endgame reached no target — endgame invariant broken")
+        val s = bySid(r.getInt(0))
+        val (v1, v2) = (r.getDouble(1), r.getDouble(2))
+        // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
+        // would manufacture NaN where percentile/quantile_cont return Inf
+        s.result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * s.frac)
+      }
     hotRows.unpersist()
     require(states.forall(_.result.isDefined),
       "a hot (key, p) resolved no result — endgame invariant broken")
@@ -1026,8 +788,7 @@ object Quantiles {
       states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
       StructType(Seq(keyField, StructField("__p", DoubleType),
         StructField("__med", DoubleType))))
-    finishKeys(smallQuantiles.select(col("__k"), col("__p"), col("__med"))
-      .unionByName(hotQuantiles))
+    finishKeys(smallQuantiles.unionByName(hotQuantiles))
   }
 
   /** `q_median_narrow` gate surface: the narrowing median against the
@@ -1112,15 +873,10 @@ object Quantiles {
       rows: DataFrame, key: String, value: String, weight: String,
       ps: Seq[Double], ident: Seq[String],
       sampleK: Int = 10000): DataFrame = {
-    require(ps.nonEmpty && ps.distinct.size == ps.size &&
-      ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"ps must be distinct quantiles in [0, 1], got $ps")
+    checkOutput(key, ps)
     require(ident.nonEmpty, "ident columns seed the deterministic draw")
     require(sampleK >= 16 && sampleK <= 10000000,
       s"sampleK=$sampleK out of the executor-sized range")
-    require(key != "p" && key != "quantile",
-      s"key column '$key' collides with the fixed output columns " +
-        "(key, p, quantile) — alias it before calling")
     val v = col(value).cast("double")
     val wD = col(weight).cast("double")
     val keep = col(value).isNotNull && !isnan(v) &&

@@ -190,8 +190,7 @@ class QuantilesSpec extends SparkSpec {
     assert(got == Map("h" -> 249.0))
   }
 
-  test("weighted hot route: all three policies agree; cost model picks " +
-    "the replay at test scale and the narrowing in a starved budget") {
+  test("weighted hot route: CostAware equals Narrow; cost model regimes") {
     val rows = Seq.tabulate(3000)(i =>
         ("hot", hashDouble(i, 61, 1e5), 1L + (i % 5))) ++
       Seq.tabulate(40)(i => ("small", hashDouble(i, 62, 9.0), 1L + (i % 2)))
@@ -202,11 +201,11 @@ class QuantilesSpec extends SparkSpec {
         route = route)
         .collect()
         .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    // at test scale the cost model sends the hot key to the replay, so
+    // this pins the replay against the narrowing
     val narrow = run(Quantiles.HotRoute.Narrow)
-    val replay = run(Quantiles.HotRoute.SortReplay)
     val auto = run(Quantiles.HotRoute.CostAware)
-    assert(narrow == replay, "routing must be semantics-preserving")
-    assert(auto == narrow)
+    assert(auto == narrow, "routing must be semantics-preserving")
     // the model itself, replayed at the two calibration regimes
     def narrows(n: Long, total: Long, heap: Double, par: Double): Boolean = {
       val spill = math.max(1.0, n * 48.0 / (heap * 0.3 / par))
@@ -227,16 +226,12 @@ class QuantilesSpec extends SparkSpec {
   test("fractional weights fail loudly instead of truncating") {
     val df = (Seq.tabulate(20)(i => ("k1", i.toDouble, 1.0)) :+
       (("k1", 99.0, 0.5))).toDF("k", "v", "w")
-    // the check rides the row pipeline (raise_error), so it fires when
-    // any plan over the frame actually reads the violating row
-    val e = intercept[Exception] {
-      Quantiles.exactWeightedQuantilesAnyScale(
-        df, "k", "v", "w", Seq(0.5)).collect()
+    // the check is the classification pass's eager `require`, so the
+    // call itself throws, before any plan is handed back
+    val e = intercept[IllegalArgumentException] {
+      Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w", Seq(0.5))
     }
-    def messages(t: Throwable): String =
-      if (t == null) "" else Option(t.getMessage).getOrElse("") +
-        "|" + messages(t.getCause)
-    assert(messages(e).contains("non-integral"))
+    assert(e.getMessage.contains("non-integral"))
   }
 
   test("weighted sketch: exact when every key fits the sample; " +
@@ -309,39 +304,88 @@ class QuantilesSpec extends SparkSpec {
     }
   }
 
-  test("per-pass rank location: driver cum-scan equals the executor " +
-    "window reduction (histCollectMax both ways)") {
-    // round 17: the knob-bounded per-pass histogram collects to the
-    // driver under histCollectMax (one exchange per pass) and reduces
-    // executor-side above it — both must narrow identically, pass by
-    // pass, so the final quantiles are bit-equal.
-    val rows = Seq.tabulate(4000)(i => ("h1", hashDouble(i, 91, 1e6))) ++
-      Seq.tabulate(3001)(i => ("h2", hashDouble(i, 92, 1e3) - 500.0)) ++
-      Seq.tabulate(40)(i => ("small", hashDouble(i, 93, 10.0)))
-    val df = rows.toDF("k", "v")
-    val ps = Seq(0.25, 0.5, 0.99)
-    def run(max: Long): Map[(String, Double), Double] =
-      Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
-        hotThreshold = 100, buckets = 16, finish = 8, histCollectMax = max)
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val driverPath = run(1L << 20)
-    val executorPath = run(0L)
-    assert(driverPath == executorPath && driverPath.size == 9)
+  test("narrowing with more active pairs than the histogram cell cap") {
+    // 6 hot keys x 5 ps = 30 pairs at 2^16 buckets overflow the 2^20
+    // cell cap, so each pass derives fewer buckets than asked for;
+    // results must not move
+    val keys = (1 to 6).map(i => s"h$i")
+    val rows = keys.zipWithIndex.flatMap { case (k, ki) =>
+      Seq.tabulate(400 + 37 * ki)(i =>
+        (k, hashDouble(i, 100 + ki, 1e4) - 5e3, 1L + (i % 4)))
+    } ++ Seq.tabulate(30)(i => ("small", hashDouble(i, 99, 3.0), 1L))
+    val df = rows.toDF("k", "v", "w")
+    val ps = Seq(0.0, 0.1, 0.5, 0.77, 1.0)
+    val got = Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
+      hotThreshold = 100, buckets = 1 << 16, finish = 8)
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    val classic = df.groupBy("k")
+      .agg(percentile(col("v"), lit(ps.toArray)).as("q"))
+      .collect().flatMap(r => ps.zip(r.getSeq[Double](1)).map {
+        case (p, q) => (r.getString(0), p) -> q
+      }).toMap
+    assert(got.keySet == classic.keySet && got.size == 35)
+    classic.foreach { case (kp, q) =>
+      assert(math.abs(got(kp) - q) <= math.max(1e-9, math.abs(q) * 1e-12),
+        s"$kp: got ${got(kp)}, want $q")
+    }
+    val wgot = Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w",
+      ps, hotThreshold = 100, buckets = 1 << 16, finish = 8,
+      route = Quantiles.HotRoute.Narrow)
+      .collect()
+      .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+    val wwant = rows.groupBy(_._1).toSeq.flatMap { case (k, g) =>
+      ps.map(p => (k, p) -> referenceWeightedQ(g.map(t => (t._2, t._3)), p))
+    }.toMap
+    assert(wgot == wwant)
+  }
 
-    val wrows = Seq.tabulate(3000)(i =>
-        ("hot", hashDouble(i, 94, 1e5), 1L + (i % 5))) ++
-      Seq.tabulate(800)(i => ("ties", (i % 7).toDouble, 2L + (i % 3)))
-    val wdf = wrows.toDF("k", "v", "w")
-    def runW(max: Long): Map[(String, Double), Double] =
-      Quantiles.exactWeightedQuantilesAnyScale(wdf, "k", "v", "w",
-        Seq(0.5, 0.9), hotThreshold = 100, buckets = 8, finish = 16,
-        route = Quantiles.HotRoute.Narrow, histCollectMax = max)
+  test("infinities and signed zeros in hot groups match the references") {
+    // groups whose middle order statistics are both +Inf, both -Inf,
+    // or -0.0 next to 0.0: v1 == v2 must return v1, never
+    // Inf + (Inf - Inf) * frac = NaN
+    val rows = Seq.tabulate(600)(_ => ("pinf", Double.PositiveInfinity)) ++
+      Seq.tabulate(400)(i => ("pinf", i.toDouble)) ++
+      Seq.tabulate(600)(_ => ("ninf", Double.NegativeInfinity)) ++
+      Seq.tabulate(400)(i => ("ninf", i.toDouble)) ++
+      Seq.tabulate(500)(_ => ("zeros", -0.0)) ++
+      Seq.tabulate(500)(_ => ("zeros", 0.0)) ++
+      Seq.tabulate(250)(i => ("zeros", -1.0 - i)) ++
+      Seq.tabulate(250)(i => ("zeros", 1.0 + i))
+    val df = rows.map(t => (t._1, t._2, 1L + (t._2.hashCode & 1)))
+      .toDF("k", "v", "w")
+    val ps = Seq(0.0, 0.5, 1.0)
+    val classic = df.groupBy("k")
+      .agg(percentile(col("v"), lit(ps.toArray)).as("q"))
+      .collect().flatMap(r => ps.zip(r.getSeq[Double](1)).map {
+        case (p, q) => (r.getString(0), p) -> q
+      }).toMap
+    val wwant = df.collect().groupBy(_.getString(0)).toSeq.flatMap {
+      case (k, g) => ps.map(p => (k, p) ->
+        referenceWeightedQ(g.map(r => (r.getDouble(1), r.getLong(2))), p))
+    }.toMap
+    // finish = 8 narrows to the plateau/straddle endgames; finish =
+    // 4096 sends every pair straight to the collect-and-fold endgame
+    Seq(8L, 4096L).foreach { finish =>
+      val got = Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
+        hotThreshold = 100, buckets = 16, finish = finish)
         .collect()
         .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    val wDriver = runW(1L << 20)
-    val wExecutor = runW(0L)
-    assert(wDriver == wExecutor && wDriver.size == 4)
+      assert(got.keySet == classic.keySet)
+      // == is numeric: -0.0 == 0.0, Inf == Inf, and NaN fails
+      classic.foreach { case (kp, q) =>
+        assert(got(kp) == q, s"finish=$finish $kp: got ${got(kp)}, want $q")
+      }
+      val wgot = Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w",
+        ps, hotThreshold = 100, buckets = 16, finish = finish,
+        route = Quantiles.HotRoute.Narrow)
+        .collect()
+        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+      assert(wgot.keySet == wwant.keySet)
+      wwant.foreach { case (kp, q) =>
+        assert(wgot(kp) == q, s"finish=$finish $kp: got ${wgot(kp)}, want $q")
+      }
+    }
   }
 
   test("q_median_narrow matches the classic percentile on lineitem") {
