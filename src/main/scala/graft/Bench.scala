@@ -121,7 +121,7 @@ object Bench {
     // artifact itself says how contended the run was
     val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
     // cumulative iowait jiffies beside each loadavg sample: the
-    // round-14 IndexSoak runs showed intermittent ~180 s stalls on
+    // round-14 `Soak index` runs showed intermittent ~180 s stalls on
     // otherwise-identical probes (the same magnitude as r13's
     // unexplained soak10x row) — an IO-stall signature the artifact
     // should carry so a stalled run is diagnosable from the numbers
@@ -153,10 +153,9 @@ object Bench {
     // the block retries (bounded), and per-query minima prefer
     // quiet-window samples. The artifact carries a per-block
     // quiet flag so the headline is valid by construction.
-    // Round 16: sampling + gating live in graft.StealGate (shared with
-    // IndexSoak/Soak so SPARK_GRAFT_STEAL_RATE overrides all three
-    // surfaces), and a failed /proc/stat read now gates as NOISY
-    // instead of quiet — StealGate.delta maps a -1 sample to an
+    // Sampling + gating live in graft.StealGate (shared with
+    // ClusterBench and the Soak scenarios), and a failed /proc/stat
+    // read gates as NOISY instead of quiet — StealGate.delta maps a -1 sample to an
     // unknown (-1) delta, which quietWindow rejects (ADVICE r15).
     import StealGate.{stealNow, quietWindow}
     val stealRate = StealGate.rate

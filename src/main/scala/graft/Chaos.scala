@@ -379,7 +379,7 @@ object Chaos {
 
     // RocksDB keyed state on the EXECUTORS — the store the restart leg
     // must restore from the checkpoint in a relaunched executor JVM —
-    // with changelog checkpointing ON: the StreamBench-measured
+    // with changelog checkpointing ON: the `Soak stream`-measured
     // production default (SCALING.md round-9 section), and the harder
     // recovery path (state restores by snapshot + changelog REPLAY,
     // not a plain snapshot load).

@@ -75,7 +75,7 @@ object ExplainAudit {
     // trained codebook — the k-means fits run eagerly at build time)
     // and the two compaction gates (the returned plan is the landed
     // probe / compacted index read; the rewrite runs eagerly and is
-    // audited by IndexSoak)
+    // audited by `Soak index`)
     "sim_pq_trained", "dedup_compact_probe", "dedup_compact_grams",
     "src_zorder_roundtrip",
     // round 15: the composed LLM-corpus pipeline (the engine's largest
@@ -87,7 +87,7 @@ object ExplainAudit {
     "pipe_report",
     // round 16: the materialized-stage report (the returned plan is
     // the seven single-row aggregates over LANDED frames — the stage
-    // landing runs eagerly and is measured by PipeSoak)
+    // landing runs eagerly and is measured by `Soak pipe`)
     "pipe_report_mat")
 
   def main(args: Array[String]): Unit = {

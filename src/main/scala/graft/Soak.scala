@@ -3,12 +3,35 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale soak: materialize K-times-sf0.1 datasets and run the
-  * scale-critical operator families at 1x / 10x / 100x, so the "would
-  * survive 100x" claims in the operator docs are CURVES, not prose
-  * (docs/SCALING.md holds the recorded results).
+/** The measurement runner behind docs/SCALING.md's numbers: one main
+  * whose scenarios each define only their data, their steps and their
+  * row fields, while the runner owns everything they share.
   *
-  * Scaled data (under /tmp/graft_soak/x<K>, generated once, reused):
+  * Usage:
+  * {{{
+  *   runMain graft.Soak <scenario> [scales] [steps]
+  *   runMain graft.Soak stream [secs] [rps] [blowupSecs] [steps]
+  * }}}
+  *   scenario  queries | skew | layout | index | pipe | stream |
+  *             median | pq | rp | substring
+  *   scales    comma list of corpus multiples of sf0.1 (per-scenario
+  *             default; `pq` reads the three testdata dirs instead)
+  *   steps     comma list: run only these steps (a query, variant,
+  *             family, leg or pipeline name); empty runs them all
+  *
+  * The runner owns: the session (`SPARK_GRAFT_CPUS`, default 32, and
+  * `SPARK_GRAFT_MASTER`), a q1 codegen warm-up on sf0.001, the step
+  * filter, the append-only JSONL sink (`soak_results.jsonl`, or
+  * `stream_bench.jsonl` for `stream`) with one sanitized `error` row
+  * per failed step and a skipped row once a fatal error stopped the
+  * SparkContext, one task listener ([[Soak.TaskClock]]), one
+  * save-set-restore conf scope and the generated-data version gate.
+  * Steal-gated timing lives in [[StealGate]]. A run with any failed
+  * step exits 1.
+  *
+  * The `queries` scenario soaks the scale-critical operator families at
+  * 1x / 10x / 100x over K-times-sf0.1 datasets (under
+  * /tmp/graft_soak/x<K>, generated once, reused):
   *
   *  - `documents` — K disjoint copies of the corpus. Copy 0 is the
   *    original; copy k > 0 keeps every column but deterministically
@@ -40,12 +63,8 @@ import org.apache.spark.sql.functions._
   *  - dimension tables are copied verbatim (they stay broadcast-sized
   *    at any corpus scale — that is their design point).
   *
-  * Usage: runMain graft.Soak [scales] [queries]
-  *   scales  comma list, default "1,10,100"
-  *   queries comma list, default the soak set below
-  * Emits one JSON line per (scale, query) AS IT FINISHES (partial runs
-  * still yield data) plus a per-scale total, and appends everything to
-  * soak_results.jsonl.
+  * It emits one `soak` row per (scale, query) as it finishes (partial
+  * runs still yield data) plus a per-scale `soak_total`.
   */
 object Soak {
 
@@ -88,7 +107,247 @@ object Soak {
     "pipe_llm_corpus", "pipe_report", "text_url_canon")
 
   private val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private val root = "/tmp/graft_soak"
+
+  /** The generated testdata at scale factor `sf` (warm-ups and `pq`). */
+  private[graft] def testdata(sf: String): String = s"/root/testdata/$sf"
+  private[graft] val root = "/tmp/graft_soak"
+
+  // ---- the runner ---------------------------------------------------
+
+  /** One JSONL row: field name → value, in output order. */
+  type Row = Seq[(String, Any)]
+
+  /** A decimal written with fixed places (`1.500`), as rows always were. */
+  final case class Num(text: String)
+  def num(x: Double, places: Int = 3): Num = Num(s"%.${places}f".format(x))
+
+  private[graft] def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private[graft] def sanitize(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .replaceAll("[\"\\n]", " ").take(160)
+
+  private[graft] val Stopped =
+    "skipped: SparkContext stopped by a prior step's fatal error"
+
+  /** Per-stage successful-task durations (the skew ratio: max / median
+    * task of the stage holding the longest task — wall time says
+    * WHETHER a hot key hurt, the ratio says WHY), plus scan input and
+    * shuffle-write totals (what proves pruning or bucketing did what
+    * the plan said, not just that wall time moved).
+    */
+  final class TaskClock extends org.apache.spark.scheduler.SparkListener {
+    private val byStage = new java.util.concurrent.ConcurrentHashMap[
+      Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
+    val inputRows, inputBytes, shuffleWriteBytes =
+      new java.util.concurrent.atomic.AtomicLong
+    override def onTaskEnd(
+        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      if (t.taskInfo != null && t.taskInfo.successful)
+        byStage.computeIfAbsent(t.stageId,
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
+          .add(t.taskInfo.duration): Unit
+      val m = t.taskMetrics
+      if (m != null) {
+        inputRows.addAndGet(m.inputMetrics.recordsRead): Unit
+        inputBytes.addAndGet(m.inputMetrics.bytesRead): Unit
+        shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
+      }
+    }
+    /** (max task ms, median task ms, max/median) of the stage with the
+      * longest task; zeros when no task finished.
+      */
+    def skew(): (Long, Long, Double) = {
+      import scala.jdk.CollectionConverters._
+      val stages = byStage.values().asScala.map(_.asScala.toVector.sorted)
+        .filter(_.nonEmpty)
+      if (stages.isEmpty) (0L, 0L, 0.0)
+      else {
+        val worst = stages.maxBy(_.last)
+        val (mx, md) = (worst.last, worst(worst.size / 2))
+        (mx, md, if (md > 0) mx.toDouble / md else 0.0)
+      }
+    }
+  }
+
+  /** One scenario run: the session, the sink and the step filter. */
+  final class Run(val spark: SparkSession, sinkPath: String,
+      val args: IndexedSeq[String], val only: Set[String]) {
+    private val sink = new java.io.PrintWriter(
+      new java.io.FileWriter(sinkPath, true))
+    private[graft] var failures = 0
+
+    def close(): Unit = sink.close()
+
+    def wants(step: String): Boolean = only.isEmpty || only(step)
+
+    /** The first positional arg as a sorted comma list of scales. */
+    def scales(default: Int*): Seq[Int] =
+      args.headOption.filter(_.nonEmpty)
+        .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(default)
+        .sorted
+
+    def emit(row: Row): Unit = {
+      val line = row.map { case (k, v) =>
+        val s = v match {
+          case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+          case Num(t) => t
+          case x => x.toString
+        }
+        s"\"$k\":$s"
+      }.mkString("{", ",", "}")
+      println(line); sink.println(line); sink.flush()
+    }
+
+    /** Runs step `name` unless the filter excludes it and emits
+      * `key ++ body`. A throw emits `key ++ failed(message)` instead and
+      * the run goes on; once a fatal error has stopped the
+      * SparkContext, every later step emits `key ++ failed(Stopped)`.
+      */
+    def step(name: String, key: Row,
+        failed: String => Row = msg => Seq("error" -> msg))
+        (body: => Row): Unit =
+      if (wants(name)) {
+        val row =
+          if (spark.sparkContext.isStopped) { failures += 1; failed(Stopped) }
+          else try body catch { case e: Throwable =>
+            failures += 1
+            failed(sanitize(e))
+          }
+        emit(key ++ row)
+      }
+
+    /** Save-set-restore for session conf: `keys` are restored (or unset)
+      * after `body`, whatever `body` sets.
+      */
+    def confScope[A](keys: String*)(body: => A): A = {
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      try body
+      finally saved.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+
+    def withConf[A](kv: (String, String)*)(body: => A): A =
+      confScope(kv.map(_._1): _*) {
+        kv.foreach { case (k, v) => spark.conf.set(k, v) }
+        body
+      }
+
+    /** `body` with a fresh [[TaskClock]] registered on the context. */
+    def tasks[A](body: TaskClock => A): A = {
+      val clock = new TaskClock
+      spark.sparkContext.addSparkListener(clock)
+      try body(clock) finally spark.sparkContext.removeSparkListener(clock)
+    }
+
+    /** Drains the listener bus before a [[TaskClock]] is read. */
+    def drain(): Unit = Thread.sleep(1000)
+
+    /** A cold one-shot measurement: releases the previous step's
+      * shuffle files first (at 1000x each join shuffles ~15 GB, and
+      * dead shuffle data would exhaust the scratch disk; ContextCleaner
+      * removes it only after the owning objects are collected), then
+      * times `body` under a [[TaskClock]]. A throw becomes the status,
+      * so a variant that dies still reports how long it ran.
+      */
+    def cold(body: => Unit): (Double, TaskClock, String) = {
+      System.gc()
+      Thread.sleep(2000)
+      tasks { clock =>
+        val t0 = System.nanoTime()
+        val status = try { body; "ok" } catch { case e: Throwable =>
+          failures += 1
+          sanitize(e)
+        }
+        val sec = (System.nanoTime() - t0) / 1e9
+        drain()
+        (sec, clock, status)
+      }
+    }
+  }
+
+  private final case class Scenario(sink: String, stepsArg: Int,
+      body: Run => Unit)
+
+  private val scenarios: Map[String, Scenario] = {
+    import SoakScenarios._
+    val soak = "soak_results.jsonl"
+    Map(
+      "queries" -> Scenario(soak, 1, queries),
+      "skew" -> Scenario(soak, 1, skew),
+      "layout" -> Scenario(soak, 1, layout),
+      "index" -> Scenario(soak, 1, index),
+      "pipe" -> Scenario(soak, 1, pipe),
+      "stream" -> Scenario("stream_bench.jsonl", 3, stream),
+      "median" -> Scenario(soak, 1, median),
+      "pq" -> Scenario(soak, 1, pq),
+      "rp" -> Scenario(soak, 1, rp),
+      "substring" -> Scenario(soak, 1, substring))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sc = args.headOption.flatMap(scenarios.get).getOrElse {
+      System.err.println("usage: graft.Soak <" +
+        scenarios.keys.toSeq.sorted.mkString("|") + "> [scales] [steps]" +
+        "  (stream: [secs] [rps] [blowupSecs] [steps])")
+      sys.exit(2)
+    }
+    val rest = args.toIndexedSeq.drop(1)
+    val only = rest.lift(sc.stepsArg).filter(_.nonEmpty)
+      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val spark = GraftSession
+      .builder(master = master, shufflePartitions = cpus.toInt)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    val run = new Run(spark, sc.sink, rest, only)
+    try {
+      // codegen warm-up on the smallest data so the first timed step
+      // measures plans, not classloading
+      noop(SparkEntry.queries("q1_pricing_summary")(spark,
+        testdata("sf0.001")))
+      sc.body(run)
+    } finally {
+      run.close()
+      spark.stop()
+    }
+    if (run.failures > 0) sys.exit(1)
+  }
+
+  // ---- generated data -----------------------------------------------
+
+  /** The version gate every generated directory shares: unless `dir`'s
+    * `marker` file names `version`, the directory is wiped, recreated
+    * and stamped before anything is built into it (a layout from an
+    * older generator, silently reused by a per-table `_SUCCESS` skip,
+    * would invalidate the measurements). True when the stamp was
+    * already current, i.e. whatever `dir` holds is this generator's.
+    */
+  private[graft] def versionGate(dir: String, marker: String,
+      version: Int): Boolean = {
+    val m = new java.io.File(s"$dir/$marker")
+    val current = m.exists() && scala.util.Try(
+      new String(java.nio.file.Files.readAllBytes(m.toPath)).trim.toInt
+    ).getOrElse(-1) == version
+    if (!current) {
+      System.err.println(s"[soak] $dir: not generator v$version — (re)building")
+      rmTree(new java.io.File(dir))
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.write(m.toPath, version.toString.getBytes): Unit
+    }
+    current
+  }
+
+  private[graft] def rmTree(f: java.io.File): Unit = {
+    // listFiles() is null (not empty) on I/O error or racing delete
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
+    f.delete(): Unit
+  }
+
+  private[graft] def done(dir: String, tables: String*): Boolean =
+    tables.forall(t => new java.io.File(s"$dir/$t.parquet/_SUCCESS").exists())
 
   /** K disjoint copies. The base table is re-split across the worker
     * count BEFORE the explode: the sf0.1 bases are single parquet
@@ -135,18 +394,16 @@ object Soak {
       Set("dedup_embedding", "dedup_semantic", "dedup_semantic_sweep")
         .contains(q)
 
-  /** Bump whenever a generator's SEMANTICS change (not just perf):
-    * a pre-change /tmp/graft_soak/x* layout would otherwise be
-    * silently reused by the per-table _SUCCESS skip and invalidate
-    * the measurements (r6 ADVICE: the per-copy orthogonal sign-flip
-    * changed embeddings semantics but old dirs kept quadratic
-    * verbatim copies). v2 = sign-flipped embeddings + text-seeded
-    * doc permutation. v3 = timestamp columns carried as session-TZ
-    * TIMESTAMP: engine-written parquet embeds the Spark schema in the
-    * footer, and a pre-flip corpus pins TIMESTAMP_NTZ through that
-    * metadata REGARDLESS of the session's inferTimestampNTZ=false —
-    * keeping every date filter over the corpus on the inert-pushdown
-    * path the flip exists to close (round 12).
+  /** Bump whenever a generator's SEMANTICS change (not just perf).
+    * v2 = sign-flipped embeddings + text-seeded doc permutation (r6:
+    * the per-copy orthogonal sign-flip changed embeddings semantics
+    * but old dirs kept quadratic verbatim copies). v3 = timestamp
+    * columns carried as session-TZ TIMESTAMP: engine-written parquet
+    * embeds the Spark schema in the footer, and a pre-flip corpus pins
+    * TIMESTAMP_NTZ through that metadata REGARDLESS of the session's
+    * inferTimestampNTZ=false — keeping every date filter over the
+    * corpus on the inert-pushdown path the flip exists to close
+    * (round 12).
     */
   val GeneratorVersion = 3
 
@@ -156,31 +413,8 @@ object Soak {
   def materialize(spark: SparkSession, k: Int,
       needFacts: Boolean, needDocs: Boolean = true): String = {
     val dir = s"$root/x$k"
-    // Version gate: a layout built by a different generator version is
-    // regenerated wholesale instead of trusted table-by-table.
-    val marker = new java.io.File(s"$dir/_SOAK_SCHEMA")
-    val stale = new java.io.File(dir).exists() && {
-      val v = if (marker.exists())
-        scala.util.Try(
-          new String(java.nio.file.Files.readAllBytes(marker.toPath)).trim.toInt
-        ).getOrElse(-1)
-      else -1
-      v != GeneratorVersion
-    }
-    if (stale) {
-      System.err.println(s"[soak] $dir was built by generator v!=" +
-        s"$GeneratorVersion — deleting and regenerating")
-      def rm(f: java.io.File): Unit = {
-        // listFiles() is null (not empty) on I/O error or racing delete
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
-    }
+    versionGate(dir, "_SOAK_SCHEMA", GeneratorVersion): Unit
     System.err.println(s"[soak] materializing $dir (existing tables kept) ...")
-    new java.io.File(dir).mkdirs()
-    java.nio.file.Files.write(marker.toPath,
-      GeneratorVersion.toString.getBytes): Unit
     def t(name: String) = graft.sources.Tables.load(spark, base, name)
     // Multi-file output layout comes from `copies`' INPUT-side
     // repartition (32 splits before the explode), so each expansion
@@ -193,7 +427,7 @@ object Soak {
     // schema fix to ONE table regenerate just that table by deleting
     // its directory, without rebuilding the whole scale dir.
     def write(df: DataFrame, name: String): Unit =
-      if (!new java.io.File(s"$dir/$name.parquet/_SUCCESS").exists())
+      if (!done(dir, name))
         df.write.mode("overwrite").parquet(s"$dir/$name.parquet")
 
     if (needDocs) write(permutedDocs(t("documents"), k), "documents")
@@ -230,74 +464,53 @@ object Soak {
     dir
   }
 
-  def main(args: Array[String]): Unit = {
-    val scales = args.headOption.filter(_.nonEmpty)
-      .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Seq(1, 10, 100))
-    val picked = args.drop(1).headOption.filter(_.nonEmpty)
-      .map(_.split(",").toSeq.filter(soakQueries.contains))
-      .getOrElse(soakQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession
-      .builder(master = master, shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sink = new java.io.PrintWriter(
-      new java.io.FileWriter("soak_results.jsonl", true))
-    def emit(line: String): Unit = {
-      println(line); sink.println(line); sink.flush()
-    }
-    // codegen warm-up on the smallest data so scale-1 timings are plans,
-    // not classloading
-    SparkEntry.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
-      .write.format("noop").mode("overwrite").save()
-    for (k <- scales.sorted) {
-      val dir = materialize(spark, k,
+  // ---- the `queries` scenario --------------------------------------
+
+  private[graft] def queries(run: Run): Unit = {
+    val picked = soakQueries.filter(run.wants)
+    for (k <- run.scales(1, 10, 100)) {
+      val dir = materialize(run.spark, k,
         needFacts = picked.exists(q => !corpusOnly(q)),
         needDocs = picked.exists(q => !embeddingsOnly(q)))
-      var total = 0.0
-      // Two passes at EVERY scale, reported separately: sec_cold is
-      // the first pass (includes substrate cache build + codegen),
-      // sec is the min. Growth factors must compare cold-to-cold —
-      // the first soak design ran one pass at 100x but min-of-two at
-      // smaller scales, and the warm substrate cache (the deliberate
-      // Dedup cross-query cache) made the 10x points reflect CACHED
-      // re-runs, inflating the 10x->100x factor into a spurious
-      // super-linear flag for the dedup family.
-      val passes = if (k >= 1000) 1 else 2
-      // Per-row steal annotation (the round-15 discipline — see
-      // Bench/IndexSoak): no retries here (growth factors compare
-      // cold-to-cold, so synthetic extra passes would change the
-      // semantics), but every row records whether its window was
-      // quiet so a contaminated curve is diagnosable from the row.
-      // Sampling + threshold live in graft.StealGate since round 16
-      // (ADVICE r15: the 25 j/s gate was hardcoded here).
-      for (name <- picked) {
-        SparkEntry.queries.get(name).foreach { fn =>
-          try {
-            val s0 = StealGate.stealNow()
-            val t0All = System.nanoTime()
-            val times = (1 to passes).map { _ =>
-              val t0 = System.nanoTime()
-              fn(spark, dir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
-            val sd = StealGate.delta(s0, StealGate.stealNow())
-            val wallAll = (System.nanoTime() - t0All) / 1e9
-            val quiet = StealGate.quietWindow(sd, wallAll)
-            val sec = times.min
-            total += sec
-            emit(f"""{"metric":"soak","scale":$k,"query":"$name","sec":$sec%.3f,"sec_cold":${times.head}%.3f,"quiet":$quiet,"steal":$sd}""")
-          } catch { case e: Throwable =>
-            emit(s"""{"metric":"soak","scale":$k,"query":"$name","error":"${
-              Option(e.getMessage).getOrElse(e.getClass.getName)
-                .replaceAll("[\"\\n]", " ").take(160)}"}""")
+      val total = picked.flatMap(queryStep(run, k, dir, _)).sum
+      run.emit(Seq("metric" -> "soak_total", "scale" -> k,
+        "sec" -> num(total), "n" -> picked.size))
+    }
+  }
+
+  /** One `soak` row: the query run cold-to-cold at scale `k` over `dir`,
+    * returning its seconds when it succeeded.
+    *
+    * Two passes at EVERY scale, reported separately: sec_cold is the
+    * first pass (includes substrate cache build + codegen), sec is the
+    * min. Growth factors must compare cold-to-cold — the first soak
+    * design ran one pass at 100x but min-of-two at smaller scales, and
+    * the warm substrate cache (the deliberate Dedup cross-query cache)
+    * made the 10x points reflect CACHED re-runs, inflating the
+    * 10x->100x factor into a spurious super-linear flag for the dedup
+    * family. No steal retries here (synthetic extra passes would change
+    * the cold-to-cold semantics), but every row records whether its
+    * window was quiet so a contaminated curve is diagnosable from the
+    * row.
+    */
+  private[graft] def queryStep(run: Run, k: Int, dir: String,
+      name: String): Option[Double] = {
+    var sec: Option[Double] = None
+    SparkEntry.queries.get(name).foreach { fn =>
+      run.step(name, Seq("metric" -> "soak", "scale" -> k, "query" -> name)) {
+        val passes = if (k >= 1000) 1 else 2
+        val (times, _, steal, quiet) = StealGate.timedWindow {
+          (1 to passes).map { _ =>
+            val t0 = System.nanoTime()
+            noop(fn(run.spark, dir))
+            (System.nanoTime() - t0) / 1e9
           }
         }
+        sec = Some(times.min)
+        Seq("sec" -> num(times.min), "sec_cold" -> num(times.head),
+          "quiet" -> quiet, "steal" -> steal)
       }
-      emit(f"""{"metric":"soak_total","scale":$k,"sec":$total%.3f,"n":${picked.size}}""")
     }
-    sink.close()
-    spark.stop()
+    sec
   }
 }

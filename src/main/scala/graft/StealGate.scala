@@ -1,31 +1,25 @@
 package graft
 
-/** Shared CPU-steal gating for every measurement main (Bench, the Soak
-  * family, IndexSoak). This host is a VM with intermittent hypervisor
+/** CPU-steal gating for every measurement (Bench, ClusterBench, the
+  * Soak scenarios). This host is a VM with intermittent hypervisor
   * steal (0.6k quiet → 10k+ noisy jiffies per ~90 s window — the
   * round-14/15 forensics), so a wall-clock number is only evidence when
-  * its window's cumulative-steal delta is known. Round 15 put the gate
-  * into Bench; round 16 hoists it here because the threshold was
-  * env-configurable in Bench (`SPARK_GRAFT_STEAL_RATE`) but HARDCODED
-  * in IndexSoak and Soak — overriding the gate changed one of three
-  * surfaces (ADVICE r15).
+  * its window's cumulative-steal delta is known.
   *
-  * Unknown ≠ quiet (ADVICE r15): if /proc/stat is unreadable,
-  * `stealNow()` returns -1 on both samples and the naive `s1 - s0`
-  * delta is 0 — which would mark every window quiet on a host where
-  * steal was never measured. `delta` maps any failed sample to -1 and
-  * `quietWindow` rejects negative deltas, so an unmeasurable window is
-  * reported noisy (the conservative direction: it can only demand
-  * retries, never bless a contaminated number).
+  * Unknown ≠ quiet: if /proc/stat is unreadable, `stealNow()` returns
+  * -1 on both samples and the naive `s1 - s0` delta is 0 — which would
+  * mark every window quiet on a host where steal was never measured.
+  * `delta` maps any failed sample to -1 and `quietWindow` rejects
+  * negative deltas, so an unmeasurable window is reported noisy (the
+  * conservative direction: it can only demand retries, never bless a
+  * contaminated number).
   */
 object StealGate {
 
   /** Jiffies-per-second-of-window threshold; quiet runs measure <10/s,
-    * contaminated ones >100/s (round-15 calibration). Env-overridable
-    * everywhere via SPARK_GRAFT_STEAL_RATE.
+    * contaminated ones >100/s (round-15 calibration).
     */
-  val rate: Double = sys.env.get("SPARK_GRAFT_STEAL_RATE")
-    .map(_.toDouble).getOrElse(25.0)
+  val rate: Double = 25.0
 
   /** Sub-20 s windows aren't gated on noise blips. */
   val floorJiffies: Double = 500.0
@@ -57,5 +51,20 @@ object StealGate {
     val sec = (System.nanoTime() - t0) / 1e9
     val sd = delta(s0, stealNow())
     (a, sec, sd, quietWindow(sd, sec))
+  }
+
+  /** Steal-gated best-of: runs `body` at least twice and at most four
+    * times, stopping once some attempt's window was quiet. Returns the
+    * last attempt's value, the fastest quiet attempt's seconds (the
+    * fastest overall when none was quiet), whether any attempt was
+    * quiet, and the worst steal delta, so the row is self-diagnosing.
+    */
+  def bestOf[A](body: => A): (A, Double, Boolean, Long) = {
+    val runs = scala.collection.mutable.ArrayBuffer(timedWindow(body),
+      timedWindow(body))
+    while (runs.size < 4 && !runs.exists(_._4)) runs += timedWindow(body)
+    val quiet = runs.filter(_._4)
+    (runs.last._1, (if (quiet.nonEmpty) quiet else runs).map(_._2).min,
+      quiet.nonEmpty, runs.map(_._3).foldLeft(0L)(math.max))
   }
 }

@@ -619,10 +619,6 @@ object Dedup {
     * the native `graft_jaccard` expression — O(|candidates|·doclen),
     * never the Σdf² of a shingle self-join.
     */
-  /** Probe-only alias of [[verifyJaccard]] (ProbeOph stage timing). */
-  private[graft] def verifyJaccardProbe(sh: DataFrame, cand: DataFrame,
-      threshold: Double): DataFrame = verifyJaccard(sh, cand, threshold)
-
   /** `sh` carries pre-hashed 60-bit shingle ids: (doc_id, h: long).
     * Long rows cache AND shuffle ~3x smaller than the md5 hex strings
     * the callers used to carry — at the 1000x soak the billion-row
@@ -972,7 +968,7 @@ object Dedup {
     *   is ~35 GB at that scale, which on a single host collides with
     *   the very shuffle spill it avoids (docs/SCALING.md round 13);
     *   where it fits, the knob is worth 1.65x cold at 100x, 1.19x at
-    *   10x (graft.SubstringEdge, identical span multiset both ways).
+    *   10x (`Soak substring`, identical span multiset both ways).
     *   `None` (the DEFAULT since round 14) routes size-aware via
     *   [[persistOccAuto]]: persist when the estimated occurrence
     *   bytes fit comfortably in free scratch, recompute when they
@@ -1031,7 +1027,7 @@ object Dedup {
     *     round-trip of a frame too big to stay cached costs more than
     *     re-running the tokenize+hash lineage. At 100x the 3.5 GB
     *     frame stays resident and persist wins 1.26-1.65x
-    *     (graft.SubstringEdge). The quarter-of-available bound keeps
+    *     (`Soak substring`). The quarter-of-available bound keeps
     *     the frame cached through the groupBy that runs between the
     *     two consumers.
     *
@@ -1181,7 +1177,7 @@ object Dedup {
     * batches the per-append partial rows re-aggregate to one row per
     * gram ([[compactGramIndex]], probe-identical by spec); 0 disables.
     *
-    * Family-specific default (round 15): the quiet-window IndexSoak
+    * Family-specific default (round 15): the quiet-window `Soak index`
     * re-measures showed the gram probe flat through ~100 small files
     * and only mildly climbing after (2.2× at 328 files over a 40-
     * append run — a hash-only LEFT SEMI probe has no witness heap and

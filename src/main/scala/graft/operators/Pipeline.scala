@@ -221,7 +221,7 @@ object Pipeline {
     // chain). Spread repartitions ONLY when the frame carries fewer
     // partitions than default parallelism — a no-op at real scan
     // widths — and every operator in the chain is partition-layout
-    // independent by contract (LayoutSoak + layout-invariance specs).
+    // independent by contract (`Soak layout` + layout-invariance specs).
     val s1 = Stabilize(s1Of(Spread(docs, col("doc_id"))))
     val s2 = Stabilize(s2Of(Spread(s1, col("doc_id"))))
     val s3 = Stabilize(s3Of(Spread(s2, col("doc_id"))))
@@ -266,7 +266,7 @@ object Pipeline {
     * soak). The durable-artifact twin — land the stage frames the run
     * is already shipping and aggregate those — is
     * [[materializeStageFrames]] + [[llmReportFrom]] (gated as
-    * `pipe_report_mat`, measured by graft.PipeSoak).
+    * `pipe_report_mat`, measured by `Soak pipe`).
     */
   def llmReport(spark: SparkSession, dir: String): DataFrame = {
     val (docs, s1, s2, s3, s4, s5, s6) = stageFrames(spark, dir)
@@ -360,7 +360,7 @@ object Pipeline {
   /** The attrition report aggregated from LANDED stage frames: seven
     * single-row scans instead of seven recomputed stage prefixes —
     * the report drops from ≈one pipeline run to the cost of reading
-    * the frames back (graft.PipeSoak measures the ratio at the 10x
+    * the frames back (`Soak pipe` measures the ratio at the 10x
     * soak). Row-identical to [[llmReport]] by construction (the
     * frames are the same stages, landed), and gated against the same
     * DuckDB oracle as `pipe_report_mat`.

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * Why: the r10 skew soak measured the boundary of the classic exact
   * median (`percentile`, a per-group count-map buffer): a Zipf hot key
   * with ~40M distinct values completes at 1000x on a 48 GB heap at
-  * 1.52x the GK sketch — and graft.MedianEdge then measured the next
+  * 1.52x the GK sketch — and a child-JVM harness then measured the next
   * step directly: 50M distinct values on one key is FATAL (OOM) in the
   * 4 GB heap a normal executor gets (docs/SCALING.md round 11). The
   * usual answer is "switch to the sketch", which gives up exactness.
@@ -189,7 +189,7 @@ object Quantiles {
     *    needed across scale: the default threshold keeps the classic
     *    buffer executor-sized and the narrowing path has no
     *    data-scaling state (measured surviving 50M+ distinct values
-    *    on one key in a 4 GiB JVM — graft.MedianEdge `auto` leg).
+    *    on one key in a 4 GiB JVM — docs/SCALING.md round 13).
     *  - `mode = Sketch(acc)`: `percentile_approx` per key — one pass,
     *    mergeable, bounded rank error; for when the caller asks for
     *    an estimate, never chosen implicitly.

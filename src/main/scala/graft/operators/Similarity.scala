@@ -190,7 +190,7 @@ object Similarity {
     pqAdcTopK(exploded, pqSampleCodebook(exploded, nCode), k, m, cand = None)
   }
 
-  /** Harness-visible aliases for the PQ internals (graft.PqEdge probes
+  /** Harness-visible aliases for the PQ internals (`Soak pq` probes
     * codebook variants without widening the operator API).
     */
   private[graft] def pqSubvectorsPublic(emb: DataFrame, m: Int,
@@ -465,7 +465,7 @@ object Similarity {
     * Why query-blind: `pqTopK`'s deterministic codebook (lowest-nCode
     * vec_ids) CONTAINS the query vectors, so a query's neighbors
     * encode to the query's own codeword with near-zero ADC distance —
-    * a query-aware advantage no real index build has (graft.PqEdge
+    * a query-aware advantage no real index build has (`Soak pq`
     * measured it at +0.10–0.25 recall@5; the honest baseline,
     * codewords drawn past the query ids, scores 0.000/0.125/0.000 at
     * sf0.001/0.01/0.1 over 8 queries). Against that baseline k-means
@@ -518,7 +518,7 @@ object Similarity {
     * composition — k-means coarse quantizer (the `sim_ivf_kmeans`
     * build) × k-means-trained PQ sub-quantizers (the `sim_pq_trained`
     * build) — where `sim_ivfpq_topk` still composes IVF with the
-    * sample codebook PqEdge measured query-aware. The comparison
+    * sample codebook `Soak pq` measured query-aware. The comparison
     * holds the coarse side CONSTANT (both arms rank the same k-means
     * probed candidate sets) and differs only in the PQ codebook:
     * trained vs the query-blind sample at the identical code budget —
@@ -526,7 +526,7 @@ object Similarity {
     * sub-quantizers buys inside the composed index. Verdict-collapsed
     * like its two parents (seeded k-means per-row rankings are
     * float-summation-order sensitive; total hits over 64 queries are
-    * not). Measured hits over 64 queries × k=5 (320 slots, PqEdge
+    * not). Measured hits over 64 queries × k=5 (320 slots, `Soak pq`
     * ivfpq_gate64 leg): trained 57/65/30 vs blind-sample 28/29/14 at
     * sf0.001/0.01/0.1 — ge-margin 29/36/16 flips, and trained clears
     * the 0.03·320 ≈ 10-hit floor with 47/55/20 flips of headroom.
@@ -553,7 +553,7 @@ object Similarity {
         (col("t_hits") >= col("s_hits")).as("trained_ge_sample"))
 
   /** One row (n_queries, t_hits, s_hits) behind `ivfpqTrainedGate` —
-    * also read raw by graft.PqEdge's ivfpq leg, which records the
+    * also read raw by `Soak pq`'s ivfpq leg, which records the
     * measured margins the gate's verdict thresholds rest on.
     */
   private[graft] def ivfpqTrainedStats(spark: SparkSession, dir: String,
@@ -664,7 +664,7 @@ object Similarity {
   val RpHugeCutoff = 4000000L
 
   /** Fourth widening cutoff, placed by MEASUREMENT rather than
-    * extrapolation: the 16384x edge run (graft.RpEdge, SCALING.md)
+    * extrapolation: the 16384x edge run (`Soak rp`, SCALING.md)
     * showed within-tier candidate volume growing ~n²/2^26 exactly as
     * predicted — 1.17 cand/vec at 4.1M vectors (occupancy 0.06),
     * 9.4 at 32.8M (occupancy 0.49) — so tier 4's random-collision

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * no-op (zero added shuffles at scale).
   *
   * Correctness: every graft operator is partition-layout independent
-  * by contract (LayoutSoak + the layout-invariance specs; survivor
+  * by contract (`Soak layout` + the layout-invariance specs; survivor
   * draws are md5-keyed, orderings fully tie-broken), and the helpers
   * that DO observe physical layout (Prefix, batchPack, shardPack)
   * establish their own partitioning downstream of any Spread.
@@ -31,14 +31,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
-  /** Env kill-switch (dev A/B + escape hatch): SPARK_GRAFT_SPREAD=0
-    * makes every Spread the identity.
-    */
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_SPREAD").contains("0")
-
   def apply(df: DataFrame, key: Column): DataFrame = {
-    if (!enabled) return df
     // Contract enforced structurally (round 17, VERDICT r16 item 3):
     // on a frame with exchanges, `.rdd.getNumPartitions` would execute
     // the upstream plan HERE and again when the caller consumes the

@@ -214,7 +214,7 @@ object Ingest {
     * a 1000-executor cluster pays it 1000-wide.
     *
     * `src_ts_normalize` gates the VALUE side (normalize → read back →
-    * hourly rollup vs DuckDB over the raw source); the LayoutSoak
+    * hourly rollup vs DuckDB over the raw source); the `Soak layout`
     * `scan_events_*` legs measure the rows-read side at scale.
     */
   def normalizeTimestamps(spark: SparkSession, srcPath: String,
@@ -272,7 +272,7 @@ object Ingest {
     * over the RAW source, so the gate pins that Z-ordering is a pure
     * LAYOUT change (row order + file assignment), never a value
     * change. The rows-read payoff is measured separately by the
-    * LayoutSoak `scan_events_2d_*` legs: a conjunctive
+    * `Soak layout` `scan_events_2d_*` legs: a conjunctive
     * (user range AND time window) filter skips on BOTH dimensions
     * only under this layout.
     */

@@ -19,6 +19,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStream {
 
+  /** The off-heap state store a keyed pipeline needs once its state
+    * outgrows an executor heap (the `stream` soak scenario measures it
+    * against the in-memory default).
+    */
+  val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Tumbling-window counts with a watermark: late events beyond the
     * watermark are dropped and window state is reclaimed.
     */

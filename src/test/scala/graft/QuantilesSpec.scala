@@ -218,7 +218,7 @@ class QuantilesSpec extends SparkSpec {
     // small keys on the test JVM likewise
     assert(!narrows(3000L, 3040L, Runtime.getRuntime.maxMemory.toDouble,
       spark.sparkContext.defaultParallelism.toDouble))
-    // the executor-sized 4 GiB MedianEdge child (local[8], 50M-distinct
+    // the executor-sized 4 GiB child JVM (local[8], 50M-distinct
     // hot key) must flip to the narrowing (measured 3.8x better)
     assert(narrows(50000000L, 60000000L, 4e9, 8))
   }

@@ -152,7 +152,7 @@ class ScaleSpec extends SparkSpec {
     // footer, and inference prefers that metadata over the conf — an
     // NTZ-typed frame written before the flip stays NTZ (and inert)
     // forever. If either behavior changes in a future Spark, the
-    // corpus-versioning story (Soak v3 / LayoutSoak v4) needs a
+    // corpus-versioning story (Soak v3 / `Soak layout` v4) needs a
     // re-decision — fail here, loudly.
     assert(spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
       == "false")

@@ -241,7 +241,7 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.rpBandConfig(33554432L) == (6, 26))
     // tier 5 (measured-in at round 9): past 64M vectors the rule
     // widens to 6x30 — occupancy back to ~0.06 where tier 4's was
-    // approaching 1 (the RpEdge curve)
+    // approaching 1 (the `Soak rp` curve)
     assert(Similarity.rpBandConfig(Similarity.RpVastCutoff) == (6, 26))
     assert(Similarity.rpBandConfig(Similarity.RpVastCutoff + 1) == (6, 30))
     def vec(seed: Int): Array[Float] = {

@@ -513,7 +513,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.types.{LongType, StructType}
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, StreamBench.RocksDbProvider)
+    spark.conf.set(providerKey, EventStream.RocksDbProvider)
     try {
       val base = java.nio.file.Files.createTempDirectory("graft_rocks").toString
       val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
