@@ -10,9 +10,13 @@ import org.apache.spark.sql.execution.ExplainMode
   * scale checklist — broadcast joins present, parquet filter pushdown,
   * whole-stage-codegen span count, shuffle (Exchange) count. This is
   * the artifact the ".explain and iterate" loop leaves behind: re-run
-  * after any operator change and diff.
+  * after any operator change and diff. Each plan is EXECUTED first so
+  * AQE's final plan (codegen ids, runtime join strategies, coalesced
+  * exchanges) is what gets audited.
   *
-  * Usage: runMain graft.ExplainAudit [sfDir] [outFile]
+  * Usage: runMain graft.ExplainAudit [sfDir] [outFile] [query,query...]
+  * — with a query list, only those queries are audited (same table,
+  * lint list and formatted plans), e.g. for a before/after plan pair.
   */
 object ExplainAudit {
   val audited: Seq[String] = Bench.headline ++ Seq(
@@ -93,6 +97,11 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
+    val names = args.lift(2).fold(audited) { list =>
+      val qs = list.split(",").toSeq
+      require(qs.forall(SparkEntry.queries.contains), s"unknown query in $list")
+      qs
+    }
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sb = new StringBuilder
@@ -102,7 +111,7 @@ object ExplainAudit {
     sb ++= "|---|---|---|---|---|---|---|\n"
     val lintLog = new StringBuilder
     val conf = spark.sessionState.conf
-    val plans = audited.distinct.flatMap { name =>
+    val plans = names.distinct.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         val df = fn(spark, sfDir)
         // Execute THIS QueryExecution instance (a write would plan a

@@ -31,10 +31,18 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // Lookup sides (code tables, cutoff calendars, the valid-id set)
+      // are tiny and never worth a shuffle; 32 MiB instead of Spark's
+      // 10 MiB also broadcasts mid-size dimension tables that would
+      // otherwise sort-merge. This is the engine's one broadcast
+      // threshold: the planner's size check and AQE's run-time
+      // conversion (its adaptive key defaults to this one) both read
+      // it, and -1 turns every size-based broadcast off.
+      .config("spark.sql.autoBroadcastJoinThreshold", (32L << 20).toString)
       // Plan-time size estimates for file scans are COMPRESSED bytes;
       // an UnsafeHashedRelation of the same rows is ~4x larger, so a
-      // borderline fact scan (est. just under the 10 MB broadcast
-      // threshold) gets broadcast and real executors die deserializing
+      // borderline fact scan (est. just under the broadcast threshold)
+      // gets broadcast and real executors die deserializing
       // a ~1 GB relation — caught by the round-7 local-cluster 10x
       // soak (q_star_join_agg / q_salted_join_agg OOMed in
       // UnsafeHashedRelation.readExternal; local[n] masks it because

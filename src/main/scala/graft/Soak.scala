@@ -121,6 +121,12 @@ object Soak {
   final case class Num(text: String)
   def num(x: Double, places: Int = 3): Num = Num(s"%.${places}f".format(x))
 
+  /** A timed window's host-noise fields: the steal gate's verdict and
+    * delta, the GC seconds inside it and the load average at its end.
+    */
+  def windowFields(w: StealGate.Timed[_]): Row = Seq("quiet" -> w.quiet,
+    "steal" -> w.steal, "gc_s" -> num(w.gcSec), "load1" -> num(w.load1, 2))
+
   private[graft] def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -499,16 +505,16 @@ object Soak {
     SparkEntry.queries.get(name).foreach { fn =>
       run.step(name, Seq("metric" -> "soak", "scale" -> k, "query" -> name)) {
         val passes = if (k >= 1000) 1 else 2
-        val (times, _, steal, quiet) = StealGate.timedWindow {
+        val w = StealGate.timedWindow {
           (1 to passes).map { _ =>
             val t0 = System.nanoTime()
             noop(fn(run.spark, dir))
             (System.nanoTime() - t0) / 1e9
           }
         }
-        sec = Some(times.min)
-        Seq("sec" -> num(times.min), "sec_cold" -> num(times.head),
-          "quiet" -> quiet, "steal" -> steal)
+        sec = Some(w.value.min)
+        Seq("sec" -> num(w.value.min), "sec_cold" -> num(w.value.head)) ++
+          windowFields(w)
       }
     }
     sec

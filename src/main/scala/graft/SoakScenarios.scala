@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Pipeline, Quantiles, Similarity, SkewAdvisor, Temporal}
 import graft.sources.{Sink, Tables}
-import Soak.{Row, Run, noop, num}
+import Soak.{Row, Run, noop, num, windowFields}
 
 /** The [[Soak]] runner's scenarios other than `queries`. Each defines
   * its data, its steps and its row fields; docs/SCALING.md holds the
@@ -732,9 +732,9 @@ private[graft] object SoakScenarios {
           run.step(fam, Seq("metric" -> "index_soak", "family" -> fam,
             "scale" -> k, "step" -> step)) {
             before
-            val (n, sec, quiet, steal) = StealGate.bestOf(probe)
-            Seq("probe_sec" -> num(sec), nName -> n, fName -> files,
-              "quiet" -> quiet, "steal" -> steal)
+            val w = StealGate.bestOf(probe)
+            Seq("probe_sec" -> num(w.sec), nName -> w.value, fName -> files) ++
+              windowFields(w)
           }
         build
         measure("base")(())
@@ -784,9 +784,9 @@ private[graft] object SoakScenarios {
       def timed(step: String, before: => Unit = ())(body: => Unit): Unit =
         run.step(step, Seq("metric" -> "pipe_soak", "scale" -> k, "step" -> step)) {
           before
-          val (_, sec, quiet, steal) = StealGate.bestOf(body)
-          secs(step) = sec
-          Seq("sec" -> num(sec), "quiet" -> quiet, "steal" -> steal)
+          val w = StealGate.bestOf(body)
+          secs(step) = w.sec
+          Seq("sec" -> num(w.sec)) ++ windowFields(w)
         }
       def land(): String = Pipeline.materializeStageFrames(spark, dir)
       timed("pipeline")(noop(Pipeline.llmCorpus(spark, dir)))

@@ -13,6 +13,11 @@ package graft
   * negative deltas, so an unmeasurable window is reported noisy (the
   * conservative direction: it can only demand retries, never bless a
   * contaminated number).
+  *
+  * `quiet` rules out steal only. A 3x swing in a soak step's wall has
+  * passed the gate with every window quiet, so each window also
+  * carries the JVM's GC seconds and the host's 1-minute load average
+  * at its end: a row is read as evidence only when all three are low.
   */
 object StealGate {
 
@@ -44,27 +49,54 @@ object StealGate {
   def quietWindow(stealDelta: Long, sec: Double): Boolean =
     stealDelta >= 0 && stealDelta <= math.max(floorJiffies, rate * sec)
 
-  /** Time `body`, returning (seconds, steal delta, quiet). */
-  def timedWindow[A](body: => A): (A, Double, Long, Boolean) = {
-    val s0 = stealNow(); val t0 = System.nanoTime()
+  /** The JVM's cumulative GC seconds over all collectors (each bean's
+    * `getCollectionTime`; a bean that reports -1 is skipped).
+    */
+  private def gcSecNow(): Double = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).filter(_ >= 0).sum / 1e3
+  }
+
+  /** The 1-minute load average (first field of /proc/loadavg); -1 when
+    * the read fails.
+    */
+  private def load1Now(): Double = try {
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")(0).toDouble
+  } catch { case _: Exception => -1.0 }
+
+  /** One timed window: `body`'s value, its seconds, the steal delta,
+    * whether the steal gate calls it quiet, the GC seconds inside it
+    * and the 1-minute load average at its end.
+    */
+  final case class Timed[A](value: A, sec: Double, steal: Long,
+      quiet: Boolean, gcSec: Double, load1: Double)
+
+  /** Time `body` as one [[Timed]] window. */
+  def timedWindow[A](body: => A): Timed[A] = {
+    val s0 = stealNow(); val g0 = gcSecNow(); val t0 = System.nanoTime()
     val a = body
     val sec = (System.nanoTime() - t0) / 1e9
     val sd = delta(s0, stealNow())
-    (a, sec, sd, quietWindow(sd, sec))
+    Timed(a, sec, sd, quietWindow(sd, sec), gcSecNow() - g0, load1Now())
   }
 
   /** Steal-gated best-of: runs `body` at least twice and at most four
-    * times, stopping once some attempt's window was quiet. Returns the
-    * last attempt's value, the fastest quiet attempt's seconds (the
-    * fastest overall when none was quiet), whether any attempt was
-    * quiet, and the worst steal delta, so the row is self-diagnosing.
+    * times, stopping once some attempt's window was quiet. The reported
+    * attempt is the fastest quiet one (the fastest overall when none
+    * was quiet); the result carries the last attempt's value, the
+    * reported attempt's seconds, GC seconds and load, whether any
+    * attempt was quiet, and the worst steal delta, so the row is
+    * self-diagnosing.
     */
-  def bestOf[A](body: => A): (A, Double, Boolean, Long) = {
+  def bestOf[A](body: => A): Timed[A] = {
     val runs = scala.collection.mutable.ArrayBuffer(timedWindow(body),
       timedWindow(body))
-    while (runs.size < 4 && !runs.exists(_._4)) runs += timedWindow(body)
-    val quiet = runs.filter(_._4)
-    (runs.last._1, (if (quiet.nonEmpty) quiet else runs).map(_._2).min,
-      quiet.nonEmpty, runs.map(_._3).foldLeft(0L)(math.max))
+    while (runs.size < 4 && !runs.exists(_.quiet)) runs += timedWindow(body)
+    val quiet = runs.filter(_.quiet)
+    val best = (if (quiet.nonEmpty) quiet else runs).minBy(_.sec)
+    best.copy(value = runs.last.value, quiet = quiet.nonEmpty,
+      steal = runs.map(_.steal).foldLeft(0L)(math.max))
   }
 }

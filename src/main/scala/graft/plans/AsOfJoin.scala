@@ -32,9 +32,8 @@ case class AsOfJoin(
     left: LogicalPlan, right: LogicalPlan,
     leftKey: Attribute, rightKey: Attribute,
     leftTs: Attribute, rightTs: Attribute,
-    // Some(true) = force broadcast, Some(false) = force the
-    // co-partitioned merge, None = let the strategy pick from stats.
-    strategyHint: Option[Boolean] = None) extends BinaryNode {
+    // true = the broadcast exec, false = the co-partitioned merge
+    broadcast: Boolean) extends BinaryNode {
   // Right-side columns become nullable: unmatched left rows emit nulls.
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
@@ -43,25 +42,17 @@ case class AsOfJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Strategy = the operator's own JoinSelection: a dim-sized (or
-  * hinted) right side plans as the BROADCAST exec — the fact side is
-  * never shuffled at all — while a fact-sized right side plans as the
-  * co-partitioned streaming merge. Mirrors how Spark itself picks
-  * broadcast-hash vs sort-merge, threshold-configurable via
-  * `spark.graft.asofBroadcastThreshold`.
+/** Strategy = the operator's own JoinSelection: the caller picks the
+  * exec. A broadcast node plans as the BROADCAST exec — the fact side
+  * is never shuffled at all — and any other as the co-partitioned
+  * streaming merge.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoin(l, r, lk, rk, lt, rt, hint) =>
-      val threshold = org.apache.spark.sql.internal.SQLConf.get.getConfString(
-        "spark.graft.asofBroadcastThreshold",
-        (32L * 1024 * 1024).toString).toLong
-      val small = threshold > 0 && r.stats.sizeInBytes >= 0 &&
-        r.stats.sizeInBytes <= threshold
-      if (hint.getOrElse(small))
-        BroadcastAsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
-      else
-        AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
+    case AsOfJoin(l, r, lk, rk, lt, rt, true) =>
+      BroadcastAsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
+    case AsOfJoin(l, r, lk, rk, lt, rt, false) =>
+      AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
     case _ => Nil
   }
 }
@@ -227,26 +218,20 @@ object AsOfJoinOps {
     */
   def asOfJoinNative(spark: SparkSession, left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String): DataFrame = {
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    def attr(p: LogicalPlan, name: String): Attribute =
-      p.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"column $name not in ${p.output.map(_.name).mkString(",")}"))
-    DatasetBridge.ofRows(spark,
-      AsOfJoin(lPlan, rPlan,
-        attr(lPlan, leftKey), attr(rPlan, rightKey),
-        attr(lPlan, leftTs), attr(rPlan, rightTs),
-        strategyHint = Some(false)))
-  }
+      leftTs: String, rightTs: String): DataFrame =
+    asOf(spark, left, right, leftKey, rightKey, leftTs, rightTs, broadcast = false)
 
   /** The broadcast variant: identical semantics, right side collected
     * + indexed + broadcast, fact side never shuffled.
     */
   def asOfJoinBroadcastNative(spark: SparkSession, left: DataFrame,
       right: DataFrame, leftKey: String, rightKey: String,
-      leftTs: String, rightTs: String): DataFrame = {
+      leftTs: String, rightTs: String): DataFrame =
+    asOf(spark, left, right, leftKey, rightKey, leftTs, rightTs, broadcast = true)
+
+  private def asOf(spark: SparkSession, left: DataFrame, right: DataFrame,
+      leftKey: String, rightKey: String, leftTs: String, rightTs: String,
+      broadcast: Boolean): DataFrame = {
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =
@@ -256,7 +241,6 @@ object AsOfJoinOps {
     DatasetBridge.ofRows(spark,
       AsOfJoin(lPlan, rPlan,
         attr(lPlan, leftKey), attr(rPlan, rightKey),
-        attr(lPlan, leftTs), attr(rPlan, rightTs),
-        strategyHint = Some(true)))
+        attr(lPlan, leftTs), attr(rPlan, rightTs), broadcast))
   }
 }

@@ -4,24 +4,20 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** SparkSessionExtensions installer for graft.
   *
-  * Registers the native vector expressions (SQL-callable) and the
-  * small-dimension auto-broadcast rule. Mirrors the reference's implicit
-  * assumption that lookup tables (code tables, cutoff calendars —
-  * /root/reference/create_view_vw_valid_collision_from_oracle.sql:2-26)
-  * are tiny and never worth a shuffle.
+  * Registers the native SQL-callable expressions, the top-k aggregate
+  * rewrite, the `graft_docgen` table function and the as-of and
+  * interval join strategies. Which join sides broadcast is Spark's own
+  * size-based choice (`spark.sql.autoBroadcastJoinThreshold`, which
+  * [[graft.GraftSession.builder]] sets), not an extension rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     graft.functions.VectorFunctions.registerSql(e)
     graft.functions.JaccardFunctions.registerSql(e)
     graft.functions.TopKFunctions.registerSql(e)
-    e.injectOptimizerRule(_ => BroadcastSmallDims)
     e.injectOptimizerRule(_ => TopKRewrite)
     // SQL table-valued function surface of the graft-docgen DSv2
     // source: `SELECT * FROM graft_docgen(n)` expands to the same
@@ -49,42 +45,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => IntervalJoinStrategy)
-  }
-}
-
-/** Optimizer rule: hint BROADCAST on un-hinted join sides whose
-  * estimated size is below `spark.graft.broadcastDimThreshold` (default
-  * 32 MiB — wider than Spark's 10 MiB autoBroadcastJoinThreshold, so
-  * mid-size dimension tables that Spark would sort-merge still
-  * broadcast). Hints only — join semantics are untouched, and Spark's
-  * JoinSelection still owns the final strategy choice.
-  */
-object BroadcastSmallDims extends Rule[LogicalPlan] {
-
-  private def smallEnough(p: LogicalPlan, threshold: Long): Boolean =
-    !p.isStreaming && p.stats.sizeInBytes >= 0 && p.stats.sizeInBytes <= threshold
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val threshold = conf.getConfString(
-      "spark.graft.broadcastDimThreshold", (32L * 1024 * 1024).toString).toLong
-    if (threshold <= 0) return plan
-    plan.transformUp {
-      case j @ Join(left, right, joinType, _, JoinHint.NONE) =>
-        val canRight = joinType match {
-          case Inner | Cross | LeftOuter | LeftSemi | LeftAnti => true
-          case _ => false
-        }
-        val canLeft = joinType match {
-          case Inner | Cross | RightOuter => true
-          case _ => false
-        }
-        val rightHint = if (canRight && smallEnough(right, threshold))
-          Some(HintInfo(strategy = Some(BROADCAST))) else None
-        // Prefer broadcasting the smaller eligible side; never both.
-        val leftHint = if (rightHint.isEmpty && canLeft && smallEnough(left, threshold))
-          Some(HintInfo(strategy = Some(BROADCAST))) else None
-        if (rightHint.isEmpty && leftHint.isEmpty) j
-        else j.copy(hint = JoinHint(leftHint, rightHint))
-    }
   }
 }

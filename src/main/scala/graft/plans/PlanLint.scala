@@ -57,10 +57,13 @@ final case class LintFinding(
   *    filtering — at 100 TB the difference between a pushed and an
   *    unpushed predicate is the whole scan.
   *  - `non-broadcast-small-side` (info under AQE, warn without): a
-  *    shuffle join whose smaller side's optimizer estimate fits the
-  *    broadcast threshold — plan-time stats missed it; AQE usually
-  *    rescues this at runtime from actual shuffle sizes (hence info),
-  *    but with AQE off it is a real lost broadcast.
+  *    shuffle join whose smaller side's optimizer estimate fits
+  *    `spark.sql.autoBroadcastJoinThreshold` — the one threshold the
+  *    planner and AQE broadcast by, so a flagged join is one the
+  *    planner's own size check did not take (a hint or join type kept
+  *    it out, or plan-time stats missed it); AQE usually rescues this
+  *    at runtime from actual shuffle sizes (hence info), but with AQE
+  *    off it is a real lost broadcast.
   *  - `large-collect-limit` (warn): a CollectLimit above 1M rows
   *    materializes on the driver.
   *  - `unpruned-partitioned-scan` (info): a partitioned table scanned

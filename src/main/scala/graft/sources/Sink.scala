@@ -89,31 +89,24 @@ object Sink {
       .parquet(path)
 
   /** Incremental partition reload: overwrite ONLY the hive partitions
-    * present in `df` (dynamic partitionOverwriteMode), leaving every
-    * other partition untouched — the daily-reload pattern that replaces
-    * the reference's whole-table delete-then-insert once a table is
-    * date-partitioned. Rows are pre-shuffled onto their partition
-    * columns so each touched partition is written as ONE file (small-
-    * file compaction); `maxRecordsPerFile` re-splits oversized
-    * partitions so a skewed date cannot produce an unsplittable file.
+    * present in `df`, leaving every other partition untouched — the
+    * daily-reload pattern that replaces the reference's whole-table
+    * delete-then-insert once a table is date-partitioned. The dynamic
+    * `partitionOverwriteMode` is a writer option, so the session's mode
+    * (and any write planned concurrently under it) is never touched.
+    * Rows are pre-shuffled onto their partition columns so each touched
+    * partition is written as ONE file (small-file compaction);
+    * `maxRecordsPerFile` re-splits oversized partitions so a skewed
+    * date cannot produce an unsplittable file.
     */
   def overwritePartitionsDynamic(df: DataFrame, path: String,
-      partCols: Seq[String], maxRecordsPerFile: Long = 0L): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try {
-      df.repartition(partCols.map(col): _*)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-        .partitionBy(partCols: _*)
-        .parquet(path)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+      partCols: Seq[String], maxRecordsPerFile: Long = 0L): Unit =
+    df.repartition(partCols.map(col): _*)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .partitionBy(partCols: _*)
+      .parquet(path)
 
   /** Small-file compaction: rewrite a parquet table into
     * ceil(bytes/targetFileBytes) files via staging + atomic swap.

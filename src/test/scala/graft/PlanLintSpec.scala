@@ -12,14 +12,11 @@ class PlanLintSpec extends SparkSpec {
     PlanLint.lint(df).map(_.rule).toSet
 
   test("non-broadcast cartesian is an error") {
-    val graftKey = "spark.graft.broadcastDimThreshold"
     val prev = spark.conf.get(autoKey)
     try {
-      // disable BOTH broadcast paths (Spark's size threshold and the
-      // graft small-dim hint rule) so the planner has to pick
+      // disable size-based broadcast so the planner has to pick
       // CartesianProductExec
       spark.conf.set(autoKey, "-1")
-      spark.conf.set(graftKey, "1")
       val a = spark.range(100).toDF("x")
       val b = spark.range(100).toDF("y")
       val cross = a.crossJoin(b)
@@ -28,10 +25,7 @@ class PlanLintSpec extends SparkSpec {
         fs.mkString("\n"))
       val ex = intercept[AssertionError] { PlanLint.assertClean(cross) }
       assert(ex.getMessage.contains("cartesian-product"))
-    } finally {
-      spark.conf.set(autoKey, prev)
-      spark.conf.unset(graftKey)
-    }
+    } finally spark.conf.set(autoKey, prev)
   }
 
   test("broadcast nested-loop join is a warn, not an error") {

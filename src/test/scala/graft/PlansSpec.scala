@@ -4,48 +4,40 @@ import org.apache.spark.sql.functions._
 
 class PlansSpec extends SparkSpec {
 
-  test("BroadcastSmallDims hints broadcast when Spark's own threshold is off") {
-    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(autoKey)
+  /** `lineitem ⋈ nation` planned with Spark's broadcast threshold at
+    * -1, returning the physical plan's string.
+    */
+  private def liNationPlanNoThreshold(
+      hint: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): String = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
     try {
-      // Disable Spark's size-based broadcast so only the graft rule can
-      // produce a broadcast join.
-      spark.conf.set(autoKey, "-1")
+      spark.conf.set(key, "-1")
       val li = graft.sources.Tables.load(spark, sf, "lineitem")
-      val n = graft.sources.Tables.load(spark, sf, "nation")
-      val joined = li.join(n, li("l_suppkey") % 25 === n("n_nationkey"))
+      val n = hint(graft.sources.Tables.load(spark, sf, "nation"))
+      li.join(n, li("l_suppkey") % 25 === n("n_nationkey"))
         .groupBy(col("n_name")).count()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"),
-        s"expected graft broadcast hint to fire, got:\n$plan")
-    } finally spark.conf.set(autoKey, prev)
+        .queryExecution.executedPlan.toString
+    } finally spark.conf.set(key, prev)
   }
 
-  test("rule leaves joins alone when both sides exceed the threshold") {
-    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
-    val graftKey = "spark.graft.broadcastDimThreshold"
-    val prev = spark.conf.get(autoKey)
-    try {
-      spark.conf.set(autoKey, "-1")
-      spark.conf.set(graftKey, "1") // 1 byte: nothing qualifies
-      val li = graft.sources.Tables.load(spark, sf, "lineitem")
-      val o = graft.sources.Tables.load(spark, sf, "orders")
-      val joined = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .groupBy(col("o_orderpriority")).count()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"expected no broadcast with thresholds off, got:\n$plan")
-    } finally {
-      spark.conf.set(autoKey, prev)
-      spark.conf.unset(graftKey)
-    }
+  test("Spark's threshold at -1 turns off every size-based broadcast") {
+    // nation is a few KB; with the threshold off nothing broadcasts it by size
+    val plan = liNationPlanNoThreshold(identity)
+    assert(!plan.contains("BroadcastHashJoin"),
+      s"expected a shuffle join with the threshold off, got:\n$plan")
+  }
+
+  test("an explicit broadcast() hint still broadcasts with the threshold off") {
+    val plan = liNationPlanNoThreshold(broadcast(_))
+    assert(plan.contains("BroadcastHashJoin"),
+      s"expected the hinted side to broadcast, got:\n$plan")
   }
 
   test("AQE splits a skewed sort-merge join partition at runtime") {
     import spark.implicits._
     val confs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
-      "spark.graft.broadcastDimThreshold" -> "0",
       "spark.sql.shuffle.partitions" -> "16",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
@@ -109,6 +101,7 @@ class PlansSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == (32L << 20).toString)
   }
 
   test("broadcast as-of join matches the merge exec and never shuffles the fact side") {

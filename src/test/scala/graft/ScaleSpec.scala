@@ -34,7 +34,6 @@ class ScaleSpec extends SparkSpec {
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.graft.broadcastDimThreshold" -> "1",
       // Make the tiny test data look skewed to the planner: any
       // partition 1.5x over the 16KB floor and over the median splits.
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
@@ -88,7 +87,6 @@ class ScaleSpec extends SparkSpec {
     withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.graft.broadcastDimThreshold" -> "1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // The application-side floor defaults to 10GB; drop it so the
       // sf-scale fact qualifies and the mechanism is observable.

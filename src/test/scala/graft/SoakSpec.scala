@@ -62,7 +62,8 @@ class SoakSpec extends SparkSpec {
     }
     assert(out.size == 2)
     assert(fields(out(0)) ==
-      Set("metric", "scale", "query", "sec", "sec_cold", "quiet", "steal"))
+      Set("metric", "scale", "query", "sec", "sec_cold", "quiet", "steal",
+        "gc_s", "load1"))
     assert(out(0).get("metric").asText == "soak")
     assert(out(0).get("query").asText == "q1_pricing_summary")
     assert(out(0).get("sec").asDouble <= out(0).get("sec_cold").asDouble)
