@@ -241,7 +241,7 @@ object Dedup {
     // feed the band projection.
     signaturesFromShingles(shinglesRaw(docs))
       .write.mode("overwrite").parquet(s"$path/sigs.parquet")
-    docs.sparkSession.read.parquet(s"$path/sigs.parquet")
+    Tables.read(docs.sparkSession, s"$path/sigs.parquet")
       .select(col("doc_id"), explode(bandHashArray).as("band_hash"))
       .write.mode("overwrite").parquet(s"$path/bands.parquet")
   }
@@ -343,7 +343,7 @@ object Dedup {
     val nOut = math.max(1, math.ceil(
       files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
     val staging = new Path(path + "__compact")
-    f(spark.read.parquet(path)).coalesce(nOut)
+    f(Tables.read(spark, path)).coalesce(nOut)
       .write.mode("overwrite").parquet(staging.toString)
     fs.delete(target, true)
     fs.rename(staging, target)
@@ -418,8 +418,8 @@ object Dedup {
         val spark = batch.sparkSession
         if (!batch.isEmpty) graft.GraftSession.withObjectAggHeadroom(spark) {
           val pairs = probeMinhashIndex(batch,
-            spark.read.parquet(s"$indexPath/bands.parquet"),
-            spark.read.parquet(s"$indexPath/sigs.parquet"),
+            Tables.read(spark, s"$indexPath/bands.parquet"),
+            Tables.read(spark, s"$indexPath/sigs.parquet"),
             threshold, maxWitnesses)
           val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
           // Stabilize, not persist (round 16): the index append fires
@@ -468,13 +468,13 @@ object Dedup {
     // and the gate returns the landed rows.
     graft.GraftSession.withObjectAggHeadroom(spark) {
       probeMinhashIndex(docs.filter(col("doc_id") % 4 === 0),
-        spark.read.parquet(s"$idx/bands.parquet"),
-        spark.read.parquet(s"$idx/sigs.parquet"), threshold,
+        Tables.read(spark, s"$idx/bands.parquet"),
+        Tables.read(spark, s"$idx/sigs.parquet"), threshold,
         freshSigsPre = Some(scala.concurrent.Await.result(batchSigs,
           scala.concurrent.duration.Duration.Inf)))
         .write.mode("overwrite").parquet(s"$idx/probe.parquet")
     }
-    spark.read.parquet(s"$idx/probe.parquet")
+    Tables.read(spark, s"$idx/probe.parquet")
       .orderBy(col("new_id"), col("old_id"))
   }
 
@@ -520,13 +520,13 @@ object Dedup {
     compactMinhashIndex(spark, idx)
     graft.GraftSession.withObjectAggHeadroom(spark) {
       probeMinhashIndex(docs.filter(col("doc_id") % 4 === 0),
-        spark.read.parquet(s"$idx/bands.parquet"),
-        spark.read.parquet(s"$idx/sigs.parquet"), threshold,
+        Tables.read(spark, s"$idx/bands.parquet"),
+        Tables.read(spark, s"$idx/sigs.parquet"), threshold,
         freshSigsPre = Some(scala.concurrent.Await.result(batchSigs,
           scala.concurrent.duration.Duration.Inf)))
         .write.mode("overwrite").parquet(s"$idx/probe.parquet")
     }
-    spark.read.parquet(s"$idx/probe.parquet")
+    Tables.read(spark, s"$idx/probe.parquet")
       .orderBy(col("new_id"), col("old_id"))
   }
 
@@ -548,7 +548,7 @@ object Dedup {
     appendToGramIndex(docs.filter(col("doc_id") % 4 === 2), idx, window)
     appendToGramIndex(docs.filter(col("doc_id") % 4 === 2), idx, window)
     compactGramIndex(spark, idx)
-    spark.read.parquet(s"$idx/grams.parquet").orderBy(col("h"))
+    Tables.read(spark, s"$idx/grams.parquet").orderBy(col("h"))
   }
 
   /** MinHash + LSH banding: band_j = hash of 4 consecutive signature
@@ -1200,7 +1200,7 @@ object Dedup {
         val spark = batch.sparkSession
         if (!batch.isEmpty) {
           val spans = probeGramIndex(batch,
-            spark.read.parquet(s"$indexPath/grams.parquet"),
+            Tables.read(spark, s"$indexPath/grams.parquet"),
             window, minTokens)
           // Stabilize, not persist — see dedupStreamAgainstIndex: the
           // gram append's recacheByPath would otherwise evict this
@@ -1229,7 +1229,7 @@ object Dedup {
     val idx = graft.Scratch.dir("gram_index")
     writeGramIndex(docs.filter(col("doc_id") % 4 =!= 0), idx, window)
     probeGramIndex(docs.filter(col("doc_id") % 4 === 0),
-      spark.read.parquet(s"$idx/grams.parquet"), window, minTokens)
+      Tables.read(spark, s"$idx/grams.parquet"), window, minTokens)
   }
 
   /** Span scrub (`dedup_substring_apply`) — the apply half of

@@ -165,7 +165,7 @@ object Fusion {
 
   def runFusionEtl(spark: SparkSession, dir: String, outPath: String): Long = {
     graft.sources.Sink.overwrite(fusionEtl(spark, dir), outPath)
-    spark.read.parquet(outPath).count()
+    Tables.read(spark, outPath).count()
   }
 
   /** MERGE INTO semantics (`q_merge`): apply a keyed change feed to a

@@ -60,7 +60,7 @@ object Incremental {
   def run(spark: SparkSession, targetPath: String, incoming: DataFrame,
       pk: Seq[String], partCol: String,
       maxRecordsPerFile: Long = 0L): (Long, Long) = {
-    val target = spark.read.parquet(targetPath)
+    val target = graft.sources.Tables.read(spark, targetPath)
     val delta = diff(target, incoming, pk)
     val partOfKey = incoming.select((pk :+ partCol).map(col): _*)
       .unionByName(target.select((pk :+ partCol).map(col): _*))

@@ -368,7 +368,7 @@ object Pipeline {
   def llmReportFrom(spark: SparkSession, dir: String,
       stagesDir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    def s(n: Int) = spark.read.parquet(s"$stagesDir/s$n.parquet")
+    def s(n: Int) = Tables.read(spark, s"$stagesDir/s$n.parquet")
     reportOver(Spread(docs, col("doc_id")), s(1), s(2), s(3), s(4), s(5), s(6))
   }
 
@@ -439,13 +439,13 @@ object Pipeline {
             .filter(col("keep") === 1L).select(col("doc_id"))
           val passed = batch.join(keepIds, Seq("doc_id"), "left_semi")
           val pairs = Dedup.probeMinhashIndex(passed,
-            spark.read.parquet(s"$mhIndexPath/bands.parquet"),
-            spark.read.parquet(s"$mhIndexPath/sigs.parquet"),
+            Tables.read(spark, s"$mhIndexPath/bands.parquet"),
+            Tables.read(spark, s"$mhIndexPath/sigs.parquet"),
             threshold, maxWitnesses)
           val dupIds = pairs.select(col("new_id").as("doc_id")).distinct()
           val survivors = passed.join(dupIds, Seq("doc_id"), "left_anti")
           val spans = Dedup.probeGramIndex(survivors,
-            spark.read.parquet(s"$gramIndexPath/grams.parquet"),
+            Tables.read(spark, s"$gramIndexPath/grams.parquet"),
             window, minTokens)
           val scrubbed = Stabilize(Dedup.applySpans(survivors, spans))
           graft.sources.Sink.dedupUpsert(spark, outPath, scrubbed,

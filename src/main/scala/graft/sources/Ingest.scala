@@ -56,8 +56,11 @@ object Ingest {
 
   /** Format-generic readers with EXPLICIT schemas — at 100 TB a schema
     * inference pass is a full extra read of the input, so the engine
-    * never infers. CSV/JSON are the interchange formats the reference's
-    * source databases export to.
+    * never infers. Parquet carries its schema in the footer: the
+    * engine's parquet reads ([[Tables.read]]) take it from one footer
+    * on the driver instead of running Spark's inference job. CSV/JSON
+    * are the interchange formats the reference's source databases
+    * export to.
     */
   def loadCsv(spark: SparkSession, path: String,
       schema: StructType, header: Boolean = true): DataFrame =
@@ -221,7 +224,7 @@ object Ingest {
       destPath: String, tsCols: Seq[String] = Seq("ts"),
       sortBy: Option[String] = None, numFiles: Int = 32): DataFrame = {
     require(tsCols.nonEmpty, "name at least one time column")
-    val raw = spark.read.parquet(srcPath)
+    val raw = Tables.read(spark, srcPath)
     val missing = tsCols.filterNot(raw.columns.contains)
     require(missing.isEmpty, s"time columns not in source: $missing")
     val cols = raw.schema.fields.toIndexedSeq.map { f =>
@@ -239,7 +242,7 @@ object Ingest {
     val df = raw.select(cols: _*)
     val cluster = sortBy.getOrElse(tsCols.head)
     Sink.writeSorted(df, destPath, Seq(cluster), numFiles)
-    spark.read.parquet(destPath)
+    Tables.read(spark, destPath)
   }
 
   /** `src_ts_normalize` gate surface: run the first-ingest
@@ -291,7 +294,7 @@ object Ingest {
       scale(col("user_id"), mm.getLong(0), mm.getLong(1)),
       scale(tMicros, mm.getLong(2), mm.getLong(3)), bits = 16)
     Sink.writeZOrderedBy(e, out, z, numFiles = 8)
-    spark.read.parquet(out)
+    Tables.read(spark, out)
       .groupBy((col("user_id") % 16).as("bucket"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("sum_value"),
@@ -432,7 +435,7 @@ object Ingest {
     Sink.dedupUpsert(spark, destPath, pull2,
       keys = Seq("o_orderkey"), versionCol = "o_orderdate")
 
-    spark.read.parquet(destPath).orderBy(col("o_orderkey"))
+    Tables.read(spark, destPath).orderBy(col("o_orderkey"))
   }
 
   /** Semi-structured property extraction: pull typed fields out of a

@@ -125,7 +125,7 @@ object Sink {
     val totalBytes = files.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     val staging = new Path(path + "__compact")
-    spark.read.parquet(path).coalesce(nOut)
+    Tables.read(spark, path).coalesce(nOut)
       .write.mode("overwrite").parquet(staging.toString)
     val target = new Path(path)
     fs.delete(target, true)
@@ -159,7 +159,7 @@ object Sink {
     val target = new Path(path)
     val merged =
       if (fs.exists(target))
-        SchemaAlign.unionLineages(spark.read.parquet(path), incoming)
+        SchemaAlign.unionLineages(Tables.read(spark, path), incoming)
       else incoming
     val tieCols = merged.columns.toSeq
       .filterNot(c => keys.contains(c) || c == versionCol)
@@ -213,7 +213,7 @@ object Sink {
   }
 
   def readVersion(spark: SparkSession, path: String, version: Long): DataFrame =
-    spark.read.parquet(s"$path/v=$version")
+    Tables.read(spark, s"$path/v=$version")
 
   def readLatest(spark: SparkSession, path: String): DataFrame = {
     val vs = listVersions(spark, path)

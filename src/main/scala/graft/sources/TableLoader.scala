@@ -12,6 +12,12 @@ import org.apache.spark.sql.types._
   * ingest_ecollision_oracle_data.py:16-46). Here the catalog is the
   * parquet footer; the policy is declarative casts applied in a single
   * `select`, so column pruning and filter pushdown still reach the scan.
+  *
+  * The footer is read on the driver, with no Spark job: [[read]] opens
+  * the one file Spark's own (non-merging) schema inference would open
+  * and converts its footer with Spark's converter, then hands the
+  * schema to the reader. `spark.read.parquet` without a schema would
+  * run that same one-footer read as a whole job per table.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -19,7 +25,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = read(spark, s"$dir/$name.parquet")
     // events.ts arrives as epoch-nanos long (see GraftSession nanosAsLong
     // note); floor-divide to micros. Presented as session-TZ TIMESTAMP
     // (UTC session — same naive value as every other engine timestamp
@@ -27,6 +33,79 @@ object Tables {
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else df
+  }
+
+  /** A single-schema parquet table (one file, or a directory of them,
+    * hive-partitioned or not) read with the schema Spark would infer,
+    * taken from one footer on the driver. The footer is the one Spark's
+    * non-merging inference touches: `_common_metadata`, else
+    * `_metadata`, else the first data file by path. The conversion is
+    * Spark's own, so the footer's Spark-schema metadata, `nanosAsLong`
+    * and `inferTimestampNTZ` read exactly as they do there; Spark adds
+    * partition columns from the directory names. With no data file, or
+    * an unreadable footer, this is `spark.read.parquet(path)`, so the
+    * error is Spark's own. Tables whose files differ in schema go
+    * through [[SchemaAlign.loadEvolved]] instead.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    scala.util.Try(footerSchema(spark, path)).toOption.flatten match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      // no readable footer: Spark's inference raises Spark's own error
+      case None => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val all = leafFiles(conf, path)
+    def named(n: String) = all.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(all.find(f => !summary(f))).map { f =>
+        // the footer read Spark's inference task makes, minus the job
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
+
+  /** The parquet data files of a table path, sorted by path: the path
+    * itself if it is a file, else every file below it that Spark's
+    * listing keeps (no `_`/`.` names outside `k=v` directories), less
+    * the `_metadata`/`_common_metadata` summaries.
+    */
+  def dataFiles(spark: SparkSession,
+      path: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    leafFiles(spark.sparkContext.hadoopConfiguration, path)
+      .filterNot(summary)
+
+  private def summary(f: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val n = f.getPath.getName
+    n == "_metadata" || n == "_common_metadata"
+  }
+
+  // Spark's leaf-file listing (HadoopFSUtils.shouldFilterOutPathName),
+  // sorted by path as ParquetUtils.splitFiles sorts it.
+  private def leafFiles(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    def kept(n: String): Boolean =
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) ||
+        n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filter(c => kept(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root)).sortBy(_.getPath.toString)
   }
 }
 
@@ -161,6 +240,7 @@ object SchemaAlign {
     */
   def loadEvolved(spark: SparkSession, paths: Seq[String],
       target: Option[StructType] = None): DataFrame = {
+    // Spark's inference, not Tables.read: mergeSchema unions every footer.
     val merged = spark.read.option("mergeSchema", "true").parquet(paths: _*)
     target.fold(merged)(SchemaAlign.project(merged, _))
   }
@@ -169,8 +249,8 @@ object SchemaAlign {
     * reference reads information_schema.columns to drive its schema
     * mapping (helper_db_operation.py get_table_columns,
     * on_demand_db_query.sql). Here the catalog IS the parquet footer:
-    * the schemas come from the planned reads (metadata only, no data
-    * scan), emitted with engine-neutral type names so any SQL engine's
+    * the schemas come from one footer per table read on the driver
+    * ([[Tables.read]]: no Spark job, no data scan), emitted with engine-neutral type names so any SQL engine's
     * information_schema agrees.
     */
   def catalogColumns(spark: SparkSession, dir: String,
@@ -206,24 +286,19 @@ object SchemaAlign {
     * parquet FOOTERS ONLY — the planner's view of a table, no data
     * pages touched. The oracle recomputes num_rows by actually counting
     * rows, so the check is exactly the integrity question a catalog
-    * cares about: do the footers tell the truth? Footer reads here loop
+    * cares about: do the footers tell the truth? A table is a file or a
+    * directory of them ([[Tables.dataFiles]]): num_rows sums every data
+    * file's footer, n_columns is the first file's. Footer reads loop
     * on the driver over a handful of tables; a lake-wide stats sweep
     * maps the same read over the file list in executors.
     */
   def fileStats(spark: SparkSession, dir: String,
       tables: Seq[String]): DataFrame = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
     val rows = tables.sorted.map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try {
-        val footer = reader.getFooter
-        (t, footer.getBlocks.asScala.map(_.getRowCount).sum,
-          footer.getFileMetaData.getSchema.getFieldCount.toLong)
-      } finally reader.close()
+      val footers = footersOf(spark, s"$dir/$t.parquet")
+      (t, footers.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum,
+        footers.head.getFileMetaData.getSchema.getFieldCount.toLong)
     }
     import spark.implicits._
     rows.toDF("table_name", "num_rows", "n_columns")
@@ -234,34 +309,43 @@ object SchemaAlign {
     * min/max/null-count column statistics parquet stores per ROW
     * GROUP — the metadata row-group pruning reads before touching any
     * data page (SinkSpec's writeSorted test proves the skipping; this
-    * op surfaces the stats themselves, per group). Footer reads loop
-    * on the driver for one table here; a lake-wide sweep maps the
+    * op surfaces the stats themselves, per group). Row groups number
+    * across the table's data files in file-name order. Footer reads
+    * loop on the driver for one table here; a lake-wide sweep maps the
     * same read over the file list in executors. Spec cross-checks the
     * stats against the actual data (footer truthfulness, the
     * src_file_stats property at row-group granularity).
     */
   def rowGroupStats(spark: SparkSession, dir: String,
       table: String = "orders", column: String = "o_orderkey"): DataFrame = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    val rows = try {
-      reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.map { case (b, i) =>
-        val cc = b.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .getOrElse(sys.error(s"column $column not in $table footer"))
-        val st = cc.getStatistics
-        (i.toLong, b.getRowCount,
-          st.genericGetMin.toString.toLong, st.genericGetMax.toString.toLong,
-          st.getNumNulls)
-      }
-    } finally reader.close()
+    val blocks = footersOf(spark, s"$dir/$table.parquet")
+      .flatMap(_.getBlocks.asScala)
+    val rows = blocks.zipWithIndex.map { case (b, i) =>
+      val cc = b.getColumns.asScala
+        .find(_.getPath.toDotString == column)
+        .getOrElse(sys.error(s"column $column not in $table footer"))
+      val st = cc.getStatistics
+      (i.toLong, b.getRowCount,
+        st.genericGetMin.toString.toLong, st.genericGetMax.toString.toLong,
+        st.getNumNulls)
+    }
     import spark.implicits._
     rows.toDF("row_group", "n_rows", "min_key", "max_key", "n_nulls")
       .orderBy(col("row_group"))
+  }
+
+  private def footersOf(spark: SparkSession, path: String)
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Tables.dataFiles(spark, path)
+    require(files.nonEmpty, s"no parquet data file under $path")
+    files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try reader.getFooter finally reader.close()
+    }
   }
 
   /** Content checksum per table (`src_table_checksum`): an

@@ -236,4 +236,76 @@ class IngestSpec extends SparkSpec {
       .orderBy(col("l_returnflag")).collect()
     assert(got.map(_.toSeq).toSeq == want.map(_.toSeq).toSeq)
   }
+
+  test("Tables.read takes Spark's inferred schema from one footer") {
+    import graft.sources.Tables
+    def same(p: String): Unit = {
+      val inferred = spark.read.parquet(p).schema
+      assert(Tables.read(spark, p).schema == inferred, p)
+    }
+    // the corpus, events' TIMESTAMP(NANOS) (nanosAsLong) included
+    Tables.all.foreach(t => same(s"$sf/$t.parquet"))
+    val base = java.nio.file.Files.createTempDirectory("graft-read").toString
+    // a Spark-written multi-file directory
+    spark.range(0, 100, 1, 3).write.parquet(s"$base/multi")
+    assert(Tables.dataFiles(spark, s"$base/multi").length == 3)
+    same(s"$base/multi")
+    // hive-partitioned (Incremental.run's target): Spark adds `p`
+    spark.range(60).select(col("id"), (col("id") % 3).as("p"))
+      .write.partitionBy("p").parquet(s"$base/parted")
+    same(s"$base/parted")
+    assert(Tables.read(spark, s"$base/parted").columns.toSeq == Seq("id", "p"))
+    // engine-written NTZ: the footer's Spark-schema metadata pins it
+    Tables.load(spark, sf, "lineitem").limit(10)
+      .select(col("l_shipdate").cast(TimestampNTZType).as("ts_ntz"),
+        col("l_shipdate").as("ts_ltz"))
+      .write.parquet(s"$base/ntz")
+    same(s"$base/ntz")
+  }
+
+  test("Tables.load and catalogColumns submit no Spark job") {
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(body: => Unit): Unit = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    jobsOf("graft-footer-read") {
+      graft.sources.Tables.all.foreach(graft.sources.Tables.load(spark, sf, _))
+      SchemaAlign.catalogColumns(spark, sf, graft.sources.Tables.all)
+    }
+    // Spark's inference runs a job: once the listener has seen it, it
+    // has seen every job submitted before it
+    jobsOf("graft-inferred-read") { spark.read.parquet(s"$sf/orders.parquet") }
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("graft-inferred-read").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-inferred-read").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-footer-read").isEmpty)
+  }
+
+  test("Tables.read on an empty directory raises Spark's inference error") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.sources.Tables.read(spark, empty))
+    assert(e.getMessage.contains("Unable to infer schema"), e.getMessage)
+  }
+
+  test("fileStats and rowGroupStats read every file of a table directory") {
+    val base = java.nio.file.Files.createTempDirectory("graft-stats").toString
+    spark.range(0, 100, 1, 3).write.parquet(s"$base/t.parquet")
+    val stats = SchemaAlign.fileStats(spark, base, Seq("t")).head()
+    assert((stats.getLong(1), stats.getLong(2)) == ((100L, 1L)))
+    val groups = SchemaAlign.rowGroupStats(spark, base, "t", "id").collect()
+    // one row group per file, numbered in file-name order
+    val perFile = graft.sources.Tables.dataFiles(spark, s"$base/t.parquet")
+      .map { f =>
+        spark.read.parquet(f.getPath.toString)
+          .agg(count(lit(1)), min(col("id")), max(col("id")))
+          .as[(Long, Long, Long)].head()
+      }
+    assert(groups.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4))).toSeq ==
+      perFile.zipWithIndex.map { case ((n, lo, hi), i) =>
+        (i.toLong, n, lo, hi, 0L) })
+  }
 }

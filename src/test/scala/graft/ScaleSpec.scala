@@ -171,5 +171,9 @@ class ScaleSpec extends SparkSpec {
       "footer Spark-schema metadata no longer pins the written type — " +
         "re-decide the corpus-versioning story")
     assert(back.schema("ts_ltz").dataType == TimestampType)
+    // the engine's footer read keeps the same pin
+    val viaFooter = graft.sources.Tables.read(spark, base)
+    assert(viaFooter.schema("ts_ntz").dataType == TimestampNTZType)
+    assert(viaFooter.schema("ts_ltz").dataType == TimestampType)
   }
 }

@@ -4,15 +4,33 @@ output dir (per-query parquet + oracle_sql.json), run each oracle in
 DuckDB against the same sf parquet tables, and compare row count,
 sorted-column-name schema, and value hash.
 
+Oracles run with their CTEs MATERIALIZED (perfbench/oracle.py's
+`materialized`): DuckDB otherwise inlines each CTE into every
+reference, and the composed `pipe_*` oracles then exhaust memory. An
+oracle with a named WINDOW clause runs as written, because the rewrite
+would mark `WINDOW w AS (...)` too. The DuckDB memory limit is fixed
+so a runaway oracle fails instead of taking the host's memory.
+
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
 import json
 import math
+import re
 import sys
 from pathlib import Path
 
 import duckdb
 import pandas as pd
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "perfbench"))
+from oracle import materialized  # noqa: E402
+
+MEMORY_LIMIT = "3GB"
+NAMED_WINDOW = re.compile(r"\bWINDOW\s+\w+\s+AS\s*\(", re.I)
+
+
+def runnable(sql: str) -> str:
+    return sql if NAMED_WINDOW.search(sql) else materialized(sql)
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -37,6 +55,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{MEMORY_LIMIT}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
@@ -54,7 +73,7 @@ def main():
             n_skip += 1
             continue
         try:
-            ref = con.execute(oracles[name]).fetchdf()
+            ref = con.execute(runnable(oracles[name])).fetchdf()
         except Exception as e:
             print(f"FAIL {name}: oracle SQL error: {e}")
             n_fail += 1
