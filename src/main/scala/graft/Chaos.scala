@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Executor-loss resilience harness: runs under a REAL multi-JVM
   * master (local-cluster[2,1,1024] by default — two executor
   * processes, each its own JVM) and proves the failure-recovery
@@ -439,7 +441,7 @@ object Chaos {
     q2.processAllAvailable()
     q2.stop()
 
-    val sink = spark.read.parquet(out)
+    val sink = Tables.read(spark, out)
       .select(col("k"), col("total"), col("n"))
     val oracle = spark.read.schema(schema).parquet(in)
       .groupBy("k").agg(sum(col("v")).as("total"), count(lit(1)).as("n"))
@@ -549,7 +551,7 @@ object Chaos {
     val q = startDriverQuery(spark)
     q.processAllAvailable()
     q.stop()
-    val sink = spark.read.parquet(s"$driverRoot/out")
+    val sink = Tables.read(spark, s"$driverRoot/out")
       .select(col("k"), col("total"), col("n"))
     val oracle = spark.read.schema(driverSchema)
       .parquet(s"$driverRoot/in")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
 /** Session factory: one place for the engine's Spark configuration.
@@ -8,6 +9,10 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions sized for the harness (local[32]) rather than the
   * 200 default; on a real cluster these come from spark-submit conf and
   * this builder only fills in what is unset.
+  *
+  * Engine code changes session conf in one scope only,
+  * [[withObjectAggHeadroom]], and runs work beside its caller through
+  * one helper only, [[branches]].
   */
 object GraftSession {
   def builder(
@@ -130,28 +135,71 @@ object GraftSession {
     }
   }
 
-  /** Scoped AQE off for an eager action over knob-bounded frames
-    * (round 17, guide §1.2 step 3). Its one call site is the exact
-    * quantiles' endgame action (`Quantiles.narrowHot`): it moves a few
-    * KB through its exchange, but under AQE it pays query-stage
-    * materialization (broadcast stage + shuffle stage + result stage —
-    * three scheduled jobs where one suffices) and per-stage
-    * re-planning; graft.Profile measured the quantile family spending
-    * ~40% of wall in that driver gap. Inside the scope the action
-    * plans once and runs once. Results are exact order statistics —
-    * plan-shape-independent by construction. Confined to eager
-    * actions inside the scope; the conf is restored before any lazy
-    * plan is handed back, so callers' queries keep AQE (coalescing,
-    * skew splits) untouched.
+  /** Work that runs beside its caller: `body` forks labelled branches
+    * through the [[Branches]] it is handed, and the call returns only
+    * once `body` and every branch it forked have ended. This is the one
+    * place engine code starts work on another thread.
+    *
+    *  - Each branch runs on a fresh thread, which starts from a clone
+    *    of the caller's local properties: its jobs carry the caller's
+    *    job group and job tags, plus the call's own tag, with the
+    *    branch's label as their description. The thread ends with the
+    *    branch, and these properties with it. `body` carries the call's
+    *    tag too, for the span of the call.
+    *  - The first failure, in a branch or in `body`, cancels the call's
+    *    jobs (again every 100 ms until the call ends, so a job a
+    *    survivor submits later is cancelled too), waits for every
+    *    branch to end, and is rethrown.
+    *  - `fork` returns the branch's await: it blocks until the branch
+    *    ends, then returns its value or rethrows its failure.
     */
-  def withAdaptiveOff[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private[graft] def branches[A](spark: SparkSession)(body: Branches => A): A =
+    new Branches(spark.sparkContext).run(body)
+
+  private[graft] final class Branches private[GraftSession] (sc: SparkContext) {
+    private val tag = s"graft-branches-${java.util.UUID.randomUUID}"
+    private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    private var failure: Option[Throwable] = None // guarded by this
+    @volatile private var ended = false
+
+    private def start(name: String)(run: => Unit): Thread = {
+      val t = new Thread(() => run, name)
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+
+    def fork[T](label: String)(work: => T): () => T = {
+      var out: Either[Throwable, T] = null
+      val t = start(s"graft-branch: $label") {
+        out = try { sc.addJobTag(tag); sc.setJobDescription(label); Right(work) }
+          catch { case e: Throwable => fail(e); Left(e) }
+      }
+      threads.add(t)
+      () => { t.join(); out.toTry.get }
+    }
+
+    private def fail(e: Throwable): Unit = synchronized {
+      if (failure.isEmpty) {
+        failure = Some(e)
+        start("graft-branches: cancel") {
+          while (!ended) {
+            sc.cancelJobsWithTag(tag, s"a sibling failed: $e")
+            Thread.sleep(100)
+          }
+        }
+      }
+    }
+
+    private[GraftSession] def run[A](body: Branches => A): A = {
+      sc.addJobTag(tag)
+      val out = try Some(body(this))
+        catch { case e: Throwable => fail(e); None }
+        finally sc.removeJobTag(tag)
+      threads.forEach(_.join())
+      ended = true
+      synchronized(failure).foreach(e => throw e)
+      out.get
     }
   }
 }

@@ -8,7 +8,7 @@ package graft
   * indexes + Derby zips accumulated on the shared scratch disk until
   * the later blocks measured the disk, not the engine):
   *
-  *  1. '''Fixed per-tag paths, wiped on reuse.''' `dir("mh_index")`
+  *  1. '''Fixed per-tag paths, wiped on reuse.''' `dir("dedup_incremental")`
   *     always resolves to the same location inside this JVM's scratch
   *     root; re-invoking the same gate wipes and reuses it instead of
   *     leaking a fresh sibling. A bench pass-3 invocation therefore
@@ -78,7 +78,7 @@ object Scratch {
     */
   def freeBytes(): Long = root.toFile.getUsableSpace
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       val stream = java.nio.file.Files.walk(p)
       try {

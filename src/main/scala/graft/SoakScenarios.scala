@@ -45,7 +45,7 @@ private[graft] object SoakScenarios {
       java.nio.file.Files.copy(p, dst.resolve(p.getFileName),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
     }
-    val orders = spark.read.parquet(s"$baseDir/orders.parquet")
+    val orders = Tables.read(spark, s"$baseDir/orders.parquet")
     // Soak's scaled orders keys are a CLOSED FORM — copy c of the base
     // table shifts keys by c·1e8, and the base keys are dense 0..B-1 —
     // so rank→key needs no materialized table at all: dense index
@@ -71,7 +71,7 @@ private[graft] object SoakScenarios {
     // sharing 3/5 works — computed, not assumed)
     var mult = 2654435761L % nKeys
     while (BigInt(mult).gcd(BigInt(nKeys)) != 1) mult += 1
-    val li = spark.read.parquet(s"$baseDir/lineitem.parquet")
+    val li = Tables.read(spark, s"$baseDir/lineitem.parquet")
     // u in (0,1): per-row deterministic uniform; raw = floor(u^-10) is
     // the inverse-CDF Pareto tail matching Zipf s=1.1 (P(rank 1) =
     // 1 - 2^-0.1 ≈ 6.7%). The unbounded tail is WRAPPED into the key
@@ -129,9 +129,9 @@ private[graft] object SoakScenarios {
       val skewed = materializeSkew(spark, k, base)
       // prime the page cache for BOTH fact layouts so variant order
       // doesn't decide who pays the disk reads
-      spark.read.parquet(s"$base/lineitem.parquet").count(): Unit
-      val total = spark.read.parquet(s"$skewed/lineitem.parquet").count()
-      val top = spark.read.parquet(s"$skewed/lineitem.parquet")
+      Tables.read(spark, s"$base/lineitem.parquet").count(): Unit
+      val total = Tables.read(spark, s"$skewed/lineitem.parquet").count()
+      val top = Tables.read(spark, s"$skewed/lineitem.parquet")
         .groupBy("l_orderkey").count()
         .agg(max(col("count"))).head().getLong(0)
       run.emit(Seq("metric" -> "skew_profile", "scale" -> k, "rows" -> total,
@@ -335,12 +335,12 @@ private[graft] object SoakScenarios {
     layoutDir(dir, "lineitem", "monthdim") {
       // repartition BY the partition column so each month directory
       // gets a bounded number of files (~84 months land on 96 tasks)
-      spark.read.parquet(s"$baseDir/lineitem.parquet")
+      Tables.read(spark, s"$baseDir/lineitem.parquet")
         .withColumn("l_shipmonth", date_format(col("l_shipdate"), "yyyy-MM"))
         .repartition(96, col("l_shipmonth"))
         .write.partitionBy("l_shipmonth")
         .mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      spark.read.parquet(s"$dir/lineitem.parquet")
+      Tables.read(spark, s"$dir/lineitem.parquet")
         .select(col("l_shipmonth")).distinct()
         .orderBy(col("l_shipmonth"))
         .withColumn("m_rank",
@@ -371,7 +371,7 @@ private[graft] object SoakScenarios {
       spark.catalog.tableExists(t) || {
         val loc = new java.io.File(s"$warehouse/$t")
         new java.io.File(loc, "_SUCCESS").exists() && {
-          val ddl = spark.read.parquet(loc.toString).schema.toDDL
+          val ddl = Tables.read(spark, loc.toString).schema.toDDL
           spark.sql(s"CREATE TABLE $t ($ddl) USING parquet " +
             s"CLUSTERED BY ($key) SORTED BY ($key) INTO 32 BUCKETS " +
             s"LOCATION '${loc.getAbsolutePath}'")
@@ -390,11 +390,11 @@ private[graft] object SoakScenarios {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       Soak.rmTree(new java.io.File(s"$warehouse/$t"))
     }
-    Sink.writeBucketed(spark.read.parquet(s"$baseDir/lineitem.parquet")
+    Sink.writeBucketed(Tables.read(spark, s"$baseDir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
       .repartition(32, col("l_orderkey")),
       liTable, "l_orderkey", numBuckets = 32, sortCol = Some("l_orderkey"))
-    Sink.writeBucketed(spark.read.parquet(s"$baseDir/orders.parquet")
+    Sink.writeBucketed(Tables.read(spark, s"$baseDir/orders.parquet")
       .select(col("o_orderkey"), col("o_orderpriority"))
       .repartition(32, col("o_orderkey")),
       ordTable, "o_orderkey", numBuckets = 32, sortCol = Some("o_orderkey"))
@@ -410,7 +410,7 @@ private[graft] object SoakScenarios {
       baseDir: String): String = {
     val dir = s"${Soak.root}/x${k}_bydate"
     layoutDir(dir, "lineitem") {
-      Sink.writeSorted(spark.read.parquet(s"$baseDir/lineitem.parquet")
+      Sink.writeSorted(Tables.read(spark, s"$baseDir/lineitem.parquet")
         .withColumn("l_shipday", to_date(col("l_shipdate")))
         .withColumn("l_shipts", col("l_shipdate").cast("timestamp")),
         s"$dir/lineitem.parquet", Seq("l_shipdate"), numFiles = 32)
@@ -442,7 +442,7 @@ private[graft] object SoakScenarios {
       normDir: String): String = {
     val dir = s"${Soak.root}/x${k}_events_zorder"
     layoutDir(dir, "events") {
-      val e = spark.read.parquet(s"$normDir/events.parquet")
+      val e = Tables.read(spark, s"$normDir/events.parquet")
       val tMicros = unix_micros(col("ts"))
       val mm = e.agg(min(col("user_id")), max(col("user_id")),
         min(tMicros), max(tMicros)).head()
@@ -462,7 +462,7 @@ private[graft] object SoakScenarios {
     */
   private def monthJoin(spark: SparkSession, factDf: DataFrame,
       dimPath: String): DataFrame = {
-    val dim = spark.read.parquet(dimPath).filter(col("m_rank") <= 3)
+    val dim = Tables.read(spark, dimPath).filter(col("m_rank") <= 3)
     factDf.join(dim, factDf("l_shipmonth") === dim("m_month"))
       .groupBy(col("m_month"))
       .agg(round(sum(col("l_extendedprice")), 2).as("rev"),
@@ -557,14 +557,14 @@ private[graft] object SoakScenarios {
     // codegen/classload warm-up on sf0.1 so the first timed variant
     // doesn't absorb compilation
     val warm = Soak.testdata("sf0.1")
-    val warmLi = spark.read.parquet(s"$warm/lineitem.parquet")
-    noop(revenueJoin(warmLi, spark.read.parquet(s"$warm/orders.parquet")))
+    val warmLi = Tables.read(spark, s"$warm/lineitem.parquet")
+    noop(revenueJoin(warmLi, Tables.read(spark, s"$warm/orders.parquet")))
     noop(keyAgg(warmLi))
     noop(tsWindowScan(warmLi))
     noop(dayWindowScan(warmLi.withColumn("l_shipday", to_date(col("l_shipdate")))))
     noop(tsLtzWindowScan(warmLi.withColumn("l_shipts",
       col("l_shipdate").cast("timestamp"))))
-    noop(eventsScan(spark.read.parquet(s"$warm/events.parquet"), users = false))
+    noop(eventsScan(Tables.read(spark, s"$warm/events.parquet"), users = false))
 
     // unpart reads the UNpartitioned base but joins the month dim the
     // partitioned layout materializes, so it stays in needPart
@@ -578,7 +578,7 @@ private[graft] object SoakScenarios {
     for (k <- run.scales(10)) {
       val base = Soak.materialize(spark, k, needFacts = true, needDocs = false)
       def read(dir: String, table: String) =
-        spark.read.parquet(s"$dir/$table.parquet")
+        Tables.read(spark, s"$dir/$table.parquet")
       val part = if (needPart) materializePartitioned(spark, k, base) else ""
       val (liT, ordT) =
         if (needBuck) materializeBucketed(spark, k, base) else ("", "")
@@ -629,7 +629,7 @@ private[graft] object SoakScenarios {
         monthJoin(spark, factPart, dimPath)
       }
       variant("part_static", k) {
-        val months = spark.read.parquet(dimPath).filter(col("m_rank") <= 3)
+        val months = Tables.read(spark, dimPath).filter(col("m_rank") <= 3)
           .select("m_month").collect().map(_.getString(0)).toSeq
         factPart.filter(col("l_shipmonth").isin(months: _*))
           .groupBy(col("l_shipmonth").as("m_month"))
@@ -748,8 +748,8 @@ private[graft] object SoakScenarios {
         Dedup.compactMinhashIndex(spark, mh))(
         GraftSession.withObjectAggHeadroom(spark) {
           Dedup.probeMinhashIndex(probeDocs,
-            spark.read.parquet(s"$mh/bands.parquet"),
-            spark.read.parquet(s"$mh/sigs.parquet"), threshold = 0.5).count()
+            Tables.read(spark, s"$mh/bands.parquet"),
+            Tables.read(spark, s"$mh/sigs.parquet"), threshold = 0.5).count()
         },
         parquetFiles(s"$mh/bands.parquet"))
       val gr = Scratch.dir(s"index_soak_gram_x$k")
@@ -758,7 +758,7 @@ private[graft] object SoakScenarios {
         Dedup.appendToGramIndex(batch, gr),
         Dedup.compactGramIndex(spark, gr))(
         Dedup.probeGramIndex(probeDocs,
-          spark.read.parquet(s"$gr/grams.parquet")).count(),
+          Tables.read(spark, s"$gr/grams.parquet")).count(),
         parquetFiles(s"$gr/grams.parquet"))
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.sources.Tables
+import graft.sources.{Sink, Tables}
 
 /** Document deduplication family for a training-data pipeline.
   *
@@ -326,30 +326,6 @@ object Dedup {
     sigs.unpersist(): Unit
   }
 
-  /** Rewrite one index artifact through `f` with staging + atomic
-    * swap (the Sink.compact discipline — a reader of `path` never
-    * observes a half-written table), coalescing the result to
-    * ceil(inputBytes / targetFileBytes) files so compaction also
-    * heals the small-file accretion of per-batch appends. Returns
-    * (files before, files after).
-    */
-  private def rewriteArtifact(spark: SparkSession, path: String,
-      targetFileBytes: Long)(f: DataFrame => DataFrame): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(target)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-    val nOut = math.max(1, math.ceil(
-      files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    val staging = new Path(path + "__compact")
-    f(Tables.read(spark, path)).coalesce(nOut)
-      .write.mode("overwrite").parquet(staging.toString)
-    fs.delete(target, true)
-    fs.rename(staging, target)
-    (files.length, nOut)
-  }
-
   /** Compact the persisted MinHash index (`writeMinhashIndex` layout).
     *
     * Why this exists: `appendToMinhashIndex` is append-only — under
@@ -380,9 +356,9 @@ object Dedup {
     val keep = dropBelowDocId
       .map(w => col("doc_id") >= w).getOrElse(lit(true))
     Map(
-      "sigs" -> rewriteArtifact(spark, s"$path/sigs.parquet",
+      "sigs" -> Sink.rewrite(spark, s"$path/sigs.parquet",
         targetFileBytes)(_.filter(keep).dropDuplicates("doc_id")),
-      "bands" -> rewriteArtifact(spark, s"$path/bands.parquet",
+      "bands" -> Sink.rewrite(spark, s"$path/bands.parquet",
         targetFileBytes)(
         _.filter(keep).distinct().repartition(col("band_hash"))))
   }
@@ -433,7 +409,7 @@ object Dedup {
           // order dependence (Pipeline.corpusStream scaladoc).
           val survivors = Stabilize(
             batch.join(dupIds, Seq("doc_id"), "left_anti"))
-          graft.sources.Sink.dedupUpsert(spark, outPath, survivors,
+          Sink.dedupUpsert(spark, outPath, survivors,
             keys = Seq("doc_id"), versionCol = "doc_id")
           appendToMinhashIndex(survivors, indexPath)
           if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
@@ -450,49 +426,47 @@ object Dedup {
     * a signature mismatch all hash-fail.
     */
   def dedupIncremental(spark: SparkSession, dir: String,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = 0.5): DataFrame =
+    probeGate(spark, dir, "dedup_incremental", threshold) {
+      (docs, idx) => writeMinhashIndex(docs.filter(col("doc_id") % 4 =!= 0), idx)
+    }
+
+  /** The incremental gates' shared shape: `build` lays down the index
+    * at `idx` from the spread corpus, then the new slice
+    * (doc_id % 4 = 0) probes it and the landed probe rows are the gate.
+    *
+    * The slice's signature frame depends only on the slice, never on
+    * the index — it is prefetched on a branch concurrently with the
+    * build (guide §2.6), and the probe consumes the identical
+    * Stabilized frame it would otherwise compute serially. The probe's
+    * aggregate state is |batch| witness-capped heaps — provably
+    * bounded — so it runs under scoped ObjectHashAggregate headroom
+    * (125k keys/task fell back to a 44 GB sort-spill under the 128-key
+    * default at the 100x soak). The conf is read at physical planning,
+    * so the probe lands eagerly inside the scope and the gate returns
+    * the landed rows.
+    */
+  private def probeGate(spark: SparkSession, dir: String, name: String,
+      threshold: Double)(
+      build: (DataFrame, String) => Unit): DataFrame = {
     val docs = Spread(Tables.load(spark, dir, "documents"), col("doc_id"))
-    val idx = graft.Scratch.dir("mh_index")
-    // The batch's signature frame depends only on the batch slice,
-    // never on the index — prefetch it concurrently with the history
-    // index build (guide §2.6); the probe consumes the identical
-    // Stabilized frame it would otherwise compute serially.
-    val batchSigs = prefetchSigs(docs.filter(col("doc_id") % 4 === 0),
-      "dedup_incremental")
-    writeMinhashIndex(docs.filter(col("doc_id") % 4 =!= 0), idx)
-    // The probe's aggregate state is |batch| witness-capped heaps —
-    // provably bounded — so it runs under scoped ObjectHashAggregate
-    // headroom (125k keys/task fell back to a 44 GB sort-spill under
-    // the 128-key default at the 100x soak). The conf is read at
-    // physical planning, so the probe lands eagerly inside the scope
-    // and the gate returns the landed rows.
-    graft.GraftSession.withObjectAggHeadroom(spark) {
-      probeMinhashIndex(docs.filter(col("doc_id") % 4 === 0),
-        Tables.read(spark, s"$idx/bands.parquet"),
-        Tables.read(spark, s"$idx/sigs.parquet"), threshold,
-        freshSigsPre = Some(scala.concurrent.Await.result(batchSigs,
-          scala.concurrent.duration.Duration.Inf)))
-        .write.mode("overwrite").parquet(s"$idx/probe.parquet")
+    val idx = graft.Scratch.dir(name)
+    val batch = docs.filter(col("doc_id") % 4 === 0)
+    graft.GraftSession.branches(spark) { br =>
+      val batchSigs = br.fork(s"$name: batch sigs (prefetch)")(
+        Stabilize(signaturesFromShingles(shinglesRaw(batch))))
+      build(docs, idx)
+      val freshSigs = batchSigs()
+      graft.GraftSession.withObjectAggHeadroom(spark) {
+        probeMinhashIndex(batch,
+          Tables.read(spark, s"$idx/bands.parquet"),
+          Tables.read(spark, s"$idx/sigs.parquet"), threshold,
+          freshSigsPre = Some(freshSigs))
+          .write.mode("overwrite").parquet(s"$idx/probe.parquet")
+      }
     }
     Tables.read(spark, s"$idx/probe.parquet")
       .orderBy(col("new_id"), col("old_id"))
-  }
-
-  /** Prefetch a batch slice's Stabilized signature frame on a
-    * background thread (guide §2.6): the incremental gates know the
-    * probe batch before their index-build phase starts, so the
-    * shingle+signature kernel and its materialization run on executor
-    * capacity the index landing leaves idle.
-    */
-  private def prefetchSigs(batch: DataFrame, tag: String)
-      : scala.concurrent.Future[DataFrame] = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val spark = batch.sparkSession
-    scala.concurrent.Future {
-      spark.sparkContext.setJobDescription(s"$tag: batch sigs (prefetch)")
-      try Stabilize(signaturesFromShingles(shinglesRaw(batch)))
-      finally spark.sparkContext.setJobDescription(null)
-    }
   }
 
   /** `dedup_compact_probe` gate surface: compaction inside the oracle
@@ -507,28 +481,14 @@ object Dedup {
     * DedupIndexLifecycleSpec's result-identity specs.
     */
   def dedupCompactProbe(spark: SparkSession, dir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val docs = Spread(Tables.load(spark, dir, "documents"), col("doc_id"))
-    val idx = graft.Scratch.dir("mh_index_gate")
-    // Same batch-signature prefetch as [[dedupIncremental]]: the probe
-    // slice is independent of the build/append/compact phases.
-    val batchSigs = prefetchSigs(docs.filter(col("doc_id") % 4 === 0),
-      "dedup_compact_probe")
-    writeMinhashIndex(docs.filter(col("doc_id") % 4 === 1), idx)
-    appendToMinhashIndex(docs.filter(col("doc_id") % 4 === 2), idx)
-    appendToMinhashIndex(docs.filter(col("doc_id") % 4 === 2), idx)
-    compactMinhashIndex(spark, idx)
-    graft.GraftSession.withObjectAggHeadroom(spark) {
-      probeMinhashIndex(docs.filter(col("doc_id") % 4 === 0),
-        Tables.read(spark, s"$idx/bands.parquet"),
-        Tables.read(spark, s"$idx/sigs.parquet"), threshold,
-        freshSigsPre = Some(scala.concurrent.Await.result(batchSigs,
-          scala.concurrent.duration.Duration.Inf)))
-        .write.mode("overwrite").parquet(s"$idx/probe.parquet")
+      threshold: Double = 0.5): DataFrame =
+    probeGate(spark, dir, "dedup_compact_probe", threshold) {
+      (docs, idx) =>
+        writeMinhashIndex(docs.filter(col("doc_id") % 4 === 1), idx)
+        appendToMinhashIndex(docs.filter(col("doc_id") % 4 === 2), idx)
+        appendToMinhashIndex(docs.filter(col("doc_id") % 4 === 2), idx)
+        compactMinhashIndex(spark, idx): Unit
     }
-    Tables.read(spark, s"$idx/probe.parquet")
-      .orderBy(col("new_id"), col("old_id"))
-  }
 
   /** `dedup_compact_grams` gate surface: the gram index's exact
     * re-aggregation contract under replayed appends — history
@@ -1136,7 +1096,7 @@ object Dedup {
     */
   def compactGramIndex(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, (Int, Int)] =
-    Map("grams" -> rewriteArtifact(spark, s"$path/grams.parquet",
+    Map("grams" -> Sink.rewrite(spark, s"$path/grams.parquet",
       targetFileBytes)(
       _.groupBy(col("h"))
         .agg(sum(col("n_occ")).as("n_occ"),
@@ -1208,7 +1168,7 @@ object Dedup {
           // batch's own grams (every window self-duplicated → the doc
           // scrubbed to nothing on any later read of the frame).
           val scrubbed = Stabilize(applySpans(batch, spans))
-          graft.sources.Sink.dedupUpsert(spark, outPath, scrubbed,
+          Sink.dedupUpsert(spark, outPath, scrubbed,
             keys = Seq("doc_id"), versionCol = "doc_id")
           appendToGramIndex(
             scrubbed.select(col("doc_id"), col("scrub").as("text")),

@@ -99,8 +99,8 @@ object Pipeline {
     * slice is Spread before the gram kernel (round 17 second pass):
     * a 1/97 filter of a single-row-group scan is one task.
     *
-    * Depends ONLY on the raw corpus — never on stages 1-4 — so both
-    * chains prefetch it on a background thread (round 17 third pass,
+    * Depends ONLY on the raw corpus — never on stages 1-4 — so
+    * [[stageFrames]] prefetches it on a branch (round 17 third pass,
     * guide §2.6 independent-job submission): its materialization +
     * count jobs fill executor capacity the driver-sequenced s1-s4
     * chain leaves idle, instead of running serially right before the
@@ -112,17 +112,6 @@ object Pipeline {
         "text")
         .select(col("h")).distinct().withColumn("hit", lit(1L)))
     (evalGrams, evalGrams.count())
-  }
-
-  private def prefetchEvalGrams(docs: DataFrame)
-      : scala.concurrent.Future[(DataFrame, Long)] = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val spark = docs.sparkSession
-    scala.concurrent.Future {
-      // pooled threads outlive the task: clear the label on the way out
-      spark.sparkContext.setJobDescription("pipe s5: eval grams (prefetch)")
-      try evalGramsOf(docs) finally spark.sparkContext.setJobDescription(null)
-    }
   }
 
   /** Stage 5 — decontamination. Eval grams come from the ORIGINAL
@@ -184,55 +173,70 @@ object Pipeline {
       .filter(bucket < col("accept_permille"))
   }
 
-  /** The stage survivor frames, shared by the corpus gate and the
-    * attrition report. s1–s3 are full-width document frames; s4–s6
-    * carry (doc_id, source, n_tok, scrub) with n_tok the SCRUBBED
-    * token count.
+  /** The stage survivor frames, shared by the corpus gate, the
+    * attrition report and the materialized mode. s1–s3 are full-width
+    * document frames; s4–s6 carry (doc_id, source, n_tok, scrub) with
+    * n_tok the SCRUBBED token count. With `landIn` set, each stage
+    * frame also lands as `s<k>.parquet` there.
+    *
+    * Work beside the chain runs as [[graft.GraftSession.branches]]:
+    * the eval-gram prefetch (round 17 third pass, guide §2.6 — stage
+    * 5's eval side reads the raw corpus only, so it materializes
+    * concurrently with s1-s4 and is merely awaited where stage 5 needs
+    * its route decision) and each landing. The call returns once every
+    * branch has ended; a failure anywhere cancels the rest and is
+    * rethrown.
     */
   private def stageFrames(spark: SparkSession, dir: String,
-      evalBroadcastMax: Long = 8000000L)
+      evalBroadcastMax: Long = 8000000L, landIn: Option[String] = None)
       : (DataFrame, DataFrame, DataFrame, DataFrame,
-         DataFrame, DataFrame, DataFrame) = {
-    val docs = Tables.load(spark, dir, "documents")
-    // Eval-gram prefetch (round 17 third pass, guide §2.6): stage 5's
-    // eval side reads the raw corpus only, so it materializes
-    // concurrently with the s1-s4 chain below and is merely awaited
-    // where stage 5 needs its route decision.
-    val evalFut = prefetchEvalGrams(docs)
-    // Every stage frame is Stabilized (round 16, guide §5): each stage
-    // has at least two consumers — the next stage references its input
-    // 2-3 times (detector + semi-join back), and the report reads all
-    // seven — so a lazy chain re-executes stage k's prefix once per
-    // downstream reference and the EARLY stages re-run exponentially
-    // in depth (profiled at sf0.1: the same gopher map stage executed
-    // 6x, 112 jobs and 44 s of task time for a 21 s wall). With each
-    // stage a value (localCheckpoint; reliable-dir escape on
-    // clusters), every stage executes exactly once — the in-session
-    // twin of the landed-parquet production shape
-    // ([[materializeStageFrames]]), same rows by construction.
-    //
-    // Each stage's INPUT is Spread (round 17 second pass, guide §2):
-    // the gate corpus scans as ONE unsplittable task and AQE's
-    // tiny-volume coalescing leaves the checkpointed stage frames at
-    // one partition, so every per-doc detector kernel downstream
-    // (gopher word rules, fingerprint md5, shingle+signature, token
-    // windows, gram explosion) ran on one core while the rest idled
-    // (graft.Profile: 0.4-1.1 s single-task stages throughout the
-    // chain). Spread repartitions ONLY when the frame carries fewer
-    // partitions than default parallelism — a no-op at real scan
-    // widths — and every operator in the chain is partition-layout
-    // independent by contract (`Soak layout` + layout-invariance specs).
-    val s1 = Stabilize(s1Of(Spread(docs, col("doc_id"))))
-    val s2 = Stabilize(s2Of(Spread(s1, col("doc_id"))))
-    val s3 = Stabilize(s3Of(Spread(s2, col("doc_id"))))
-    val s4 = Stabilize(s4Of(Spread(s3, col("doc_id"))))
-    val s5 = Stabilize(s5Of(
-      scala.concurrent.Await.result(evalFut,
-        scala.concurrent.duration.Duration.Inf),
-      Spread(s4, col("doc_id")), evalBroadcastMax))
-    val s6 = Stabilize(s6Of(spark, Spread(s5, col("doc_id"))))
-    (docs, s1, s2, s3, s4, s5, s6)
-  }
+         DataFrame, DataFrame, DataFrame) =
+    graft.GraftSession.branches(spark) { br =>
+      val docs = Tables.load(spark, dir, "documents")
+      val eval = br.fork("pipe s5: eval grams (prefetch)")(evalGramsOf(docs))
+      // Every stage frame is Stabilized (round 16, guide §5): each stage
+      // has at least two consumers — the next stage references its
+      // input 2-3 times (detector + semi-join back), and the report
+      // reads all seven — so a lazy chain re-executes stage k's prefix
+      // once per downstream reference and the EARLY stages re-run
+      // exponentially in depth (profiled at sf0.1: the same gopher map
+      // stage executed 6x, 112 jobs and 44 s of task time for a 21 s
+      // wall). With each stage a value (localCheckpoint; reliable-dir
+      // escape on clusters), every stage executes exactly once.
+      //
+      // Overlapped landings (round 17, guide §2.6 — independent-job
+      // submission): a landing writes FROM the stage's value on a
+      // branch while the next stage computes from the same value, so
+      // the write of stage k no longer serializes stage k+1, and the
+      // landed artifacts are byte-for-byte the stabilized frames' rows.
+      def value(name: String, df: DataFrame): DataFrame = {
+        val v = Stabilize(df)
+        landIn.foreach(out => br.fork(s"pipe_stages: land $name")(
+          v.write.mode("overwrite").parquet(s"$out/$name.parquet")))
+        v
+      }
+      // Each stage's INPUT is Spread (round 17 second pass, guide §2):
+      // the gate corpus scans as ONE unsplittable task and AQE's
+      // tiny-volume coalescing leaves the checkpointed stage frames at
+      // one partition, so every per-doc detector kernel downstream
+      // (gopher word rules, fingerprint md5, shingle+signature, token
+      // windows, gram explosion) ran on one core while the rest idled
+      // (graft.Profile: 0.4-1.1 s single-task stages throughout the
+      // chain), and the landings inherit the spread layout (parallel
+      // parquet writes). Spread repartitions ONLY when the frame
+      // carries fewer partitions than default parallelism — a no-op at
+      // real scan widths — and every operator in the chain is
+      // partition-layout independent by contract (`Soak layout` +
+      // layout-invariance specs).
+      val s1 = value("s1", s1Of(Spread(docs, col("doc_id"))))
+      val s2 = value("s2", s2Of(Spread(s1, col("doc_id"))))
+      val s3 = value("s3", s3Of(Spread(s2, col("doc_id"))))
+      val s4 = value("s4", s4Of(Spread(s3, col("doc_id"))))
+      val s5 = value("s5",
+        s5Of(eval(), Spread(s4, col("doc_id")), evalBroadcastMax))
+      val s6 = value("s6", s6Of(spark, Spread(s5, col("doc_id"))))
+      (docs, s1, s2, s3, s4, s5, s6)
+    }
 
   def llmCorpus(spark: SparkSession, dir: String,
       capacity: Long = 512L,
@@ -301,59 +305,26 @@ object Pipeline {
 
   /** Materialized-stage-frames mode (round 16, VERDICT r15 item 5):
     * run the pipeline LANDING each stage's survivor frame as parquet
-    * (Scratch-managed) — s2 is computed from s1's LANDED frame, not
-    * s1's lazy plan, so every stage prefix executes exactly once and
-    * the landed frames are the artifacts a production run ships
-    * anyway. Returns the stage directory for [[llmReportFrom]] (and
-    * any other consumer that wants a stage's output without replaying
-    * its prefix — the dashboard-over-shipped-frames shape the
-    * recompute report's scaladoc documents).
+    * (Scratch-managed) — the [[stageFrames]] chain with every stage
+    * value also written out on a branch, so every stage prefix
+    * executes exactly once and the landed frames are the artifacts a
+    * production run ships anyway. Every landing has ended when it
+    * returns, so the directory is complete; a failed call cancels the
+    * rest, deletes the directory and rethrows. Returns the stage
+    * directory for [[llmReportFrom]] (and any other consumer that
+    * wants a stage's output without replaying its prefix — the
+    * dashboard-over-shipped-frames shape the recompute report's
+    * scaladoc documents).
     */
   def materializeStageFrames(spark: SparkSession, dir: String,
       evalBroadcastMax: Long = 8000000L): String = {
-    val docs = Tables.load(spark, dir, "documents")
-    // Same eval-gram prefetch as [[stageFrames]] (guide §2.6): the s5
-    // landing awaits it instead of computing it serially.
-    val evalFut = prefetchEvalGrams(docs)
     val out = graft.Scratch.dir("pipe_stages")
-    // Overlapped landings (round 17, guide §2.6 — independent-job
-    // submission): each stage is Stabilized (computed exactly once,
-    // now a value) and its parquet landing writes FROM that value in a
-    // background thread while the next stage computes from the same
-    // value — the write of stage k no longer serializes stage k+1.
-    // The landed artifacts are byte-for-byte the stabilized frames'
-    // rows, every stage frame still lands, and the report still
-    // aggregates the LANDED parquet (llmReportFrom unchanged), so the
-    // materialized mode's contract — stage prefixes execute once,
-    // artifacts ship — is intact; only the wall-clock serialization
-    // of compute → write → read-back per stage is gone. All landings
-    // are joined before returning: the directory is complete.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def land(df: DataFrame, name: String): (DataFrame, Future[Unit]) = {
-      val v = Stabilize(df)
-      val w = Future {
-        spark.sparkContext.setJobDescription(s"pipe_stages: land $name")
-        try v.write.mode("overwrite").parquet(s"$out/$name.parquet")
-        finally spark.sparkContext.setJobDescription(null)
-      }
-      (v, w)
+    // a failed call leaves no stage directory that could look complete
+    try stageFrames(spark, dir, evalBroadcastMax, Some(out))
+    catch { case e: Throwable =>
+      graft.Scratch.deleteRecursively(java.nio.file.Paths.get(out))
+      throw e
     }
-    // Stage inputs Spread exactly as in [[stageFrames]] (round 17
-    // second pass): the detector kernels otherwise run single-task on
-    // the one-partition gate scan / coalesced stage frames, and the
-    // landings inherit the spread layout (parallel parquet writes).
-    val (s1, w1) = land(s1Of(Spread(docs, col("doc_id"))), "s1")
-    val (s2, w2) = land(s2Of(Spread(s1, col("doc_id"))), "s2")
-    val (s3, w3) = land(s3Of(Spread(s2, col("doc_id"))), "s3")
-    val (s4, w4) = land(s4Of(Spread(s3, col("doc_id"))), "s4")
-    val (s5, w5) = land(s5Of(
-      Await.result(evalFut, Duration.Inf),
-      Spread(s4, col("doc_id")), evalBroadcastMax), "s5")
-    val (_, w6) = land(s6Of(spark, Spread(s5, col("doc_id"))), "s6")
-    Seq(w1, w2, w3, w4, w5, w6)
-      .foreach(Await.result(_, Duration.Inf))
     out
   }
 

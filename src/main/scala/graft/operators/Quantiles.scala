@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -54,7 +55,8 @@ import graft.sources.Tables
   *     holds ≤ `finish` rows they are collected and folded in value
   *     order executor-side, from the weight below the interval, until
   *     the cumulative weight reaches each target rank. The straddle
-  *     and fold endgames run as one action.
+  *     and fold endgames run as one raw RDD job over the hot subset,
+  *     like the passes: no plan is built and no conf is scoped.
   *
   * Cost shape: 1 full pass for counts, 1 full pass that EXTRACTS the
   * hot keys' rows into a DISK_ONLY persisted subset (at Zipf(1.1) a
@@ -394,8 +396,8 @@ object Quantiles {
     * scan of the extracted hot subset sums (weight, row count) per
     * bucket, the target bucket is the first whose absolute cumulative
     * weight reaches T, and the endgame walks the ≤ `finish` collected
-    * rows of the final interval executor-side (an `aggregate` fold,
-    * only (key, p, value) rows return to the driver).
+    * rows of the final interval executor-side (a reducer-side fold;
+    * only one (v1, v2) per (key, p) returns to the driver).
     *
     * Contracts: `weight` must be integral-valued and positive — rows
     * with null/≤ 0 weight or null/NaN value are EXCLUDED (a zero
@@ -565,20 +567,21 @@ object Quantiles {
     // cost is job-submission latency, not lineage re-optimization —
     // and the eager checkpoint's separate materialization job cost
     // more than the persist's pipelined first-pass fill.) The subset
-    // rows carry a dense key index (__ki) so the endgames key on an
-    // int and the narrowing passes can run as raw RDD jobs over the
-    // cached scan (round 17 second pass, guide §1.2 step 1): the pass
-    // geometry travels in the task closure, making each pass ONE
-    // single-stage job with zero planning, zero broadcast build and
-    // zero exchange — the per-pass Catalyst cycle (analyze + optimize
-    // + codegen + broadcast + 2-stage shuffle) was the family's
-    // residual ~1 s driver gap after the round-17 collect fusion.
+    // rows carry a dense key index (__ki) so the narrowing passes and
+    // the endgame can run as raw RDD jobs over the cached scan (round
+    // 17 second pass, guide §1.2 step 1): the geometry travels in the
+    // task closure, making each pass ONE single-stage job with zero
+    // planning, zero broadcast build and zero exchange — the per-pass
+    // Catalyst cycle (analyze + optimize + codegen + broadcast +
+    // 2-stage shuffle) was the family's residual ~1 s driver gap after
+    // the round-17 collect fusion.
     val hotRows = hotJoin("inner")
       .select(col("__ki"), col("__v"),
         SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // fixed physical scan over the persisted subset — planned ONCE;
-    // each narrowing pass re-runs only its tasks against the cache
+    // each narrowing pass and the endgame re-run only its tasks
+    // against the cache
     val hotScan = hotRows.queryExecution.toRdd
     val states = stats(hotRows).flatMap { r =>
       val ki = r.getInt(0)
@@ -596,6 +599,13 @@ object Quantiles {
       }
     }
 
+    // per hot key index, the slots (indices into `pairs`) of its pairs:
+    // how a job fans each row out to every pair of its key
+    def slotsByKey(pairs: Array[HotState]): Array[Array[Int]] = {
+      val m = Array.fill(hotKeys.length)(Array.newBuilder[Int])
+      pairs.indices.foreach(j => m(pairs(j).sid / ps.size) += j)
+      m.map(_.result())
+    }
     // buckets per pair this pass, under the [[HistCells]] cap
     def passBuckets(active: Int): Int =
       math.max(2L, math.min(buckets.toLong, HistCells / active - 2)).toInt
@@ -642,12 +652,7 @@ object Quantiles {
       val slotSLo = geo.map(_.sLo)
       val slotW = geo.map(_.w)
       val slotShift = geo.map(_.shift)
-      val slotsArr: Array[Array[Int]] = {
-        val m = Array.fill(hotKeys.length)(
-          scala.collection.mutable.ArrayBuffer.empty[Int])
-        geo.zipWithIndex.foreach { case (g, j) => m(g.s.sid / ps.size) += j }
-        m.map(_.toArray)
-      }
+      val slotsArr = slotsByKey(active)
       val nBL = nB.toLong
       val hist = histAggregate(hotScan, active.length * cells * 2) {
         (h, row) =>
@@ -714,72 +719,77 @@ object Quantiles {
     states.filter(s => s.result.isEmpty && s.straddleCut.isEmpty && s.lo == s.hi)
       .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
 
-    // the remaining endgames resolve EAGERLY (one bounded job over the
-    // persisted subset, at most maxHotKeys·|ps| rows back), so the
-    // subset can be unpersisted and the returned plan stays lazy-cheap.
-    // Both return (sid, v1, v2) and run as branches of ONE unioned
-    // action (round 17), so their stages schedule inside a single job
-    // instead of two driver-sequenced ones.
-    val endgames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val straddled = states.filter(_.straddleCut.isDefined)
-    if (straddled.nonEmpty) {
-      val cuts = spark.createDataFrame(
-        straddled.map(s => Row(s.sid / ps.size, s.sid, s.straddleCut.get))
-          .toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__cut", LongType))))
-      endgames += hotRows.join(broadcast(cuts), Seq("__ki"))
-        .groupBy(col("__sid"))
-        .agg(max(when(col("__b") <= col("__cut"), col("__v"))).as("__v1"),
-          min(when(col("__b") > col("__cut"), col("__v"))).as("__v2"))
-    }
-
-    // collect endgame: the ≤ finish interval rows fold EXECUTOR-SIDE,
-    // a sorted (value, weight) walk from the absolute below-interval
-    // weight that keeps the first value reaching each target; with
-    // unit weights those are the t1-th and t2-th order statistics
-    val collecting = states.filter(s =>
-      s.result.isEmpty && s.straddleCut.isEmpty)
-    if (collecting.nonEmpty) {
-      val fin = spark.createDataFrame(
-        collecting.map(s => Row(s.sid / ps.size, s.sid, s.lo, s.hi,
-          s.belowW, s.t1, s.t2)).toSeq.asJava,
-        StructType(Seq(StructField("__ki", IntegerType),
-          StructField("__sid", IntegerType),
-          StructField("__lo", LongType), StructField("__hi", LongType),
-          StructField("__bw", LongType), StructField("__t1", LongType),
-          StructField("__t2", LongType))))
-      endgames += hotRows.join(broadcast(fin), Seq("__ki"))
-        .filter(col("__b") >= col("__lo") && col("__b") <= col("__hi"))
-        .groupBy(col("__sid"))
-        .agg(sort_array(collect_list(struct(col("__v"), col("__w"))))
-          .as("__vs"), first(col("__bw")).as("__bw"),
-          first(col("__t1")).as("__t1"), first(col("__t2")).as("__t2"))
-        .select(col("__sid"), expr(
-          """aggregate(__vs,
-            |  struct(__bw AS acc, CAST(NULL AS DOUBLE) AS v1,
-            |    CAST(NULL AS DOUBLE) AS v2),
-            |  (a, x) -> struct(a.acc + x.__w AS acc,
-            |    coalesce(a.v1, IF(a.acc + x.__w >= __t1, x.__v, NULL)) AS v1,
-            |    coalesce(a.v2, IF(a.acc + x.__w >= __t2, x.__v, NULL)) AS v2))"""
-            .stripMargin).as("__f"))
-        .select(col("__sid"), col("__f.v1").as("__v1"),
-          col("__f.v2").as("__v2"))
-    }
-    val bySid = states.map(s => s.sid -> s).toMap
-    if (endgames.nonEmpty)
-      graft.GraftSession.withAdaptiveOff(spark) {
-        endgames.reduce(_ unionByName _).collect()
-      }.foreach { r =>
-        require(!r.isNullAt(1) && !r.isNullAt(2),
+    // The straddle and collect endgames resolve EAGERLY in ONE raw RDD
+    // job over the cached scan, like the passes: the pair geometry
+    // rides the task closure, no plan is built, and at most
+    // maxHotKeys·|ps| (v1, v2) come back, so the subset can be
+    // unpersisted and the returned plan stays lazy-cheap. Map side, per
+    // open pair of a row's key: a straddled pair keeps the max bits at
+    // or below its cut and the min bits above it (a partial: the
+    // straddle reads every row of its key); a collecting pair keeps its
+    // ≤ finish interval rows as (bits, weight). One shuffle brings each
+    // pair to one reducer. A straddle's two order statistics are the
+    // max and min of its partials; a collecting pair's rows fold in the
+    // order sort_array(struct(value, weight)) gives (Spark's double
+    // ordering, −0.0 tying 0.0, then weight) from the absolute
+    // below-interval weight, keeping the first value that reaches each
+    // target; with unit weights those are the t1-th and t2-th order
+    // statistics. NaN marks a target no row reached (values are never
+    // NaN: the front ends drop them).
+    val open = states.filter(_.result.isEmpty)
+    if (open.nonEmpty) {
+      val slotsArr = slotsByKey(open)
+      val cut = open.map(_.straddleCut)
+      val lo = open.map(_.lo)
+      val hi = open.map(_.hi)
+      val belowW = open.map(_.belowW)
+      val t1 = open.map(_.t1)
+      val t2 = open.map(_.t2)
+      val n = open.length
+      hotScan.mapPartitions { it =>
+        val rows = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
+        val le = Array.fill(n)(Long.MinValue)
+        val gt = Array.fill(n)(Long.MaxValue)
+        it.foreach { row =>
+          val b = row.getLong(2)
+          slotsArr(row.getInt(0)).foreach { j =>
+            cut(j) match {
+              case Some(c) =>
+                if (b <= c) le(j) = math.max(le(j), b)
+                else gt(j) = math.min(gt(j), b)
+              case None =>
+                if (b >= lo(j) && b <= hi(j)) rows(j).addOne(b).addOne(row.getLong(3))
+            }
+          }
+        }
+        Iterator.tabulate(n)(j =>
+          j -> (if (cut(j).isDefined) Array(le(j), gt(j)) else rows(j).result()))
+      }.reduceByKey(_ ++ _).map { case (j, bs) =>
+        j -> (cut(j) match {
+          case Some(c) => (SortableDoubleBits.fromSortable(bs.filter(_ <= c).max),
+            SortableDoubleBits.fromSortable(bs.filter(_ > c).min))
+          case None =>
+            var acc = belowW(j)
+            var v1, v2 = Double.NaN
+            bs.grouped(2).map(r => (SortableDoubleBits.fromSortable(r(0)), r(1)))
+              .toArray.sortWith { (x, y) =>
+                val c = SQLOrderingUtil.compareDoubles(x._1, y._1)
+                c < 0 || c == 0 && x._2 < y._2
+              }.foreach { case (v, w) =>
+                acc += w
+                if (v1.isNaN && acc >= t1(j)) v1 = v
+                if (v2.isNaN && acc >= t2(j)) v2 = v
+              }
+            (v1, v2)
+        })
+      }.collect().foreach { case (j, (v1, v2)) =>
+        require(!v1.isNaN && !v2.isNaN,
           "a hot (key, p) endgame reached no target — endgame invariant broken")
-        val s = bySid(r.getInt(0))
-        val (v1, v2) = (r.getDouble(1), r.getDouble(2))
         // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
         // would manufacture NaN where percentile/quantile_cont return Inf
-        s.result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * s.frac)
+        open(j).result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * open(j).frac)
       }
+    }
     hotRows.unpersist()
     require(states.forall(_.result.isDefined),
       "a hot (key, p) resolved no result — endgame invariant broken")

@@ -133,50 +133,9 @@ object Ingest {
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val nation = Tables.load(spark, dir, "nation")
     val root = java.nio.file.Paths.get(graft.Scratch.dir("jdbc_rt"))
-    val dbDir = root.resolve("db")
-    // 1. driver-side batched insert into a directory-backed database
-    val conn = java.sql.DriverManager.getConnection(
-      s"jdbc:derby:$dbDir;create=true")
-    try {
-      val st = conn.createStatement()
-      try st.execute(Ddl.createTable("nation_rt", nation.schema, Ddl.Derby,
-        ifNotExists = false))
-      finally st.close()
-      val cols = nation.columns.toSeq
-      val ins = conn.prepareStatement(
-        s"INSERT INTO nation_rt ${cols.map(c => "\"" + c + "\"")
-          .mkString("(", ", ", ")")}" +
-          s" VALUES ${cols.map(_ => "?").mkString("(", ", ", ")")}")
-      try {
-        conn.setAutoCommit(false)
-        nation.collect().foreach { row => // dimension-sized by contract
-          cols.indices.foreach(i => ins.setObject(i + 1, row.get(i)))
-          ins.addBatch()
-        }
-        ins.executeBatch()
-        conn.commit()
-      } finally ins.close()
-    } finally conn.close()
-    // 2. freeze: shutting the database down flushes it consistent and
-    // releases the directory lock (success surfaces as SQLSTATE 08006)
-    try {
-      java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
-      ()
-    } catch { case _: java.sql.SQLException => () }
-    // 3. archive to a zip every JVM can open read-only
-    val zipPath = root.resolve("db.zip")
-    val zos = new java.util.zip.ZipOutputStream(
-      java.nio.file.Files.newOutputStream(zipPath))
-    try {
-      java.nio.file.Files.walk(dbDir).filter(p =>
-        java.nio.file.Files.isRegularFile(p)).forEach { p =>
-        zos.putNextEntry(new java.util.zip.ZipEntry(
-          "db/" + dbDir.relativize(p).toString.replace('\\', '/')))
-        java.nio.file.Files.copy(p, zos)
-        zos.closeEntry()
-      }
-    } finally zos.close()
-    val readCfg = JdbcConfig(s"jdbc:derby:jar:($zipPath)db", "nation_rt")
+    // the insert collects the dimension: dimension-sized by contract
+    val readCfg = JdbcConfig(derbySnapshot(root, "nation_rt", nation.schema,
+      nation.collect(), "db.zip"), "nation_rt")
     Jdbc.loadPartitioned(spark, readCfg, "n_nationkey",
         lowerBound = 0L, upperBound = 25L, numPartitions = 4)
       .orderBy(col("n_nationkey"))
@@ -333,15 +292,75 @@ object Ingest {
         col("o_orderpriority"), col("o_totalprice"), col("o_orderdate"))
     val cutoff = lit("1998-06-30").cast("timestamp")
     val root = java.nio.file.Paths.get(graft.Scratch.dir("jdbc_incr"))
-    val dbDir = root.resolve("db")
 
-    def withConn[A](url: String)(body: java.sql.Connection => A): A = {
-      val conn = java.sql.DriverManager.getConnection(url)
-      try body(conn) finally conn.close()
-    }
-    def batchInsert(conn: java.sql.Connection, table: String,
-        rows: Array[org.apache.spark.sql.Row]): Unit = {
-      val cols = orders.columns.toSeq
+    // the gate subset is dimension-sized (~1.9k rows at sf0.01), so
+    // the two epoch slices collect like the roundtrip's dimension —
+    // and the contract is ASSERTED (the quantile paths' discipline):
+    // a caller pointing this at a fact-sized table fails loudly
+    // before the driver heap does
+    val maxEpochRows = 1000000L
+    val nSubset = orders.count()
+    require(nSubset <= maxEpochRows,
+      s"jdbcIncremental's epoch slices collect to the driver by " +
+        s"contract (dimension-sized); got $nSubset rows > $maxEpochRows")
+    val epoch1 = orders.filter(col("o_orderdate") <= cutoff).collect()
+    val epoch2 = orders.filter(col("o_orderdate") > cutoff).collect()
+
+    // source v1: epoch-1 rows only, frozen for the bootstrap pull
+    val srcV1 = JdbcConfig(derbySnapshot(root, "orders_src", orders.schema,
+      epoch1, "db_v1.zip"), "orders_src")
+
+    // parquet target pre-seeded with stale epoch-2 rows (an earlier
+    // bad load the upsert must repair): totalprice −1, ancient date
+    val destPath = root.resolve("orders_dst.parquet").toString
+    val stale = orders.filter(col("o_orderdate") > cutoff &&
+        col("o_orderkey") % 5 === 0)
+      .withColumn("o_totalprice", lit(-1.0))
+      .withColumn("o_orderdate", lit("1990-01-01").cast("timestamp"))
+    Sink.overwrite(stale, destPath)
+
+    // epoch 1: bootstrap pull + land
+    val pull1 = Jdbc.loadIncremental(spark, srcV1, "o_orderdate", None)
+    Sink.dedupUpsert(spark, destPath, pull1,
+      keys = Seq("o_orderkey"), versionCol = "o_orderdate")
+    val wm1 = Jdbc.maxWatermark(srcV1, "o_orderdate")
+      .getOrElse(sys.error("epoch 1 left no watermark"))
+
+    // the source grows: epoch-2 rows arrive after the bootstrap
+    val srcV2 = JdbcConfig(derbySnapshot(root, "orders_src", orders.schema,
+      epoch2, "db_v2.zip"), "orders_src")
+
+    // epoch 2: delta pull (only rows past wm1 cross the wire) + land
+    val pull2 = Jdbc.loadIncremental(spark, srcV2, "o_orderdate", Some(wm1))
+    Sink.dedupUpsert(spark, destPath, pull2,
+      keys = Seq("o_orderkey"), versionCol = "o_orderdate")
+
+    Tables.read(spark, destPath).orderBy(col("o_orderkey"))
+  }
+
+  /** One Derby snapshot: a driver-side batched insert of `rows` into
+    * `table` of the database at `root/db` (created, with the table
+    * from `schema`, on the first snapshot there), then a freeze — shutting the
+    * database down flushes it consistent and releases the directory
+    * lock (success surfaces as SQLSTATE 08006) — and an archive to
+    * `root/zipName`. Returns the read-only `jdbc:derby:jar:` URL every
+    * JVM can open on its own.
+    */
+  private def derbySnapshot(root: java.nio.file.Path, table: String,
+      schema: StructType, rows: Array[org.apache.spark.sql.Row],
+      zipName: String): String = {
+    val dbDir = root.resolve("db")
+    val create = !java.nio.file.Files.exists(dbDir)
+    val conn = java.sql.DriverManager.getConnection(
+      s"jdbc:derby:$dbDir${if (create) ";create=true" else ""}")
+    try {
+      if (create) {
+        val st = conn.createStatement()
+        try st.execute(Ddl.createTable(table, schema, Ddl.Derby,
+          ifNotExists = false))
+        finally st.close()
+      }
+      val cols = schema.fieldNames.toSeq
       val ins = conn.prepareStatement(
         s"INSERT INTO $table ${cols.map(c => "\"" + c + "\"")
           .mkString("(", ", ", ")")}" +
@@ -361,81 +380,24 @@ object Ingest {
         ins.executeBatch()
         conn.commit()
       } finally ins.close()
-    }
-    def freeze(): Unit =
-      try {
-        java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
-        ()
-      } catch { case _: java.sql.SQLException => () }
-    def zipDb(name: String): String = {
-      val zipPath = root.resolve(name)
-      val zos = new java.util.zip.ZipOutputStream(
-        java.nio.file.Files.newOutputStream(zipPath))
-      try {
-        java.nio.file.Files.walk(dbDir).filter(p =>
-          java.nio.file.Files.isRegularFile(p)).forEach { p =>
-          zos.putNextEntry(new java.util.zip.ZipEntry(
-            "db/" + dbDir.relativize(p).toString.replace('\\', '/')))
-          java.nio.file.Files.copy(p, zos)
-          zos.closeEntry()
-        }
-      } finally zos.close()
-      s"jdbc:derby:jar:($zipPath)db"
-    }
-
-    // the gate subset is dimension-sized (~1.9k rows at sf0.01), so
-    // the two epoch slices collect like the roundtrip's dimension —
-    // and the contract is ASSERTED (the quantile paths' discipline):
-    // a caller pointing this at a fact-sized table fails loudly
-    // before the driver heap does
-    val maxEpochRows = 1000000L
-    val nSubset = orders.count()
-    require(nSubset <= maxEpochRows,
-      s"jdbcIncremental's epoch slices collect to the driver by " +
-        s"contract (dimension-sized); got $nSubset rows > $maxEpochRows")
-    val epoch1 = orders.filter(col("o_orderdate") <= cutoff).collect()
-    val epoch2 = orders.filter(col("o_orderdate") > cutoff).collect()
-
-    // source v1: epoch-1 rows only, frozen for the bootstrap pull
-    withConn(s"jdbc:derby:$dbDir;create=true") { conn =>
-      val st = conn.createStatement()
-      try st.execute(Ddl.createTable("orders_src", orders.schema, Ddl.Derby,
-        ifNotExists = false))
-      finally st.close()
-      batchInsert(conn, "orders_src", epoch1)
-    }
-    freeze()
-    val srcV1 = JdbcConfig(zipDb("db_v1.zip"), "orders_src")
-
-    // parquet target pre-seeded with stale epoch-2 rows (an earlier
-    // bad load the upsert must repair): totalprice −1, ancient date
-    val destPath = root.resolve("orders_dst.parquet").toString
-    val stale = orders.filter(col("o_orderdate") > cutoff &&
-        col("o_orderkey") % 5 === 0)
-      .withColumn("o_totalprice", lit(-1.0))
-      .withColumn("o_orderdate", lit("1990-01-01").cast("timestamp"))
-    Sink.overwrite(stale, destPath)
-
-    // epoch 1: bootstrap pull + land
-    val pull1 = Jdbc.loadIncremental(spark, srcV1, "o_orderdate", None)
-    Sink.dedupUpsert(spark, destPath, pull1,
-      keys = Seq("o_orderkey"), versionCol = "o_orderdate")
-    val wm1 = Jdbc.maxWatermark(srcV1, "o_orderdate")
-      .getOrElse(sys.error("epoch 1 left no watermark"))
-
-    // the source grows: epoch-2 rows arrive after the bootstrap
-    withConn(s"jdbc:derby:$dbDir") { conn =>
-      batchInsert(conn, "orders_src", epoch2)
-    }
-    freeze()
-    val srcV2 = JdbcConfig(zipDb("db_v2.zip"), "orders_src")
-
-    // epoch 2: delta pull (only rows past wm1 cross the wire) + land
-    val pull2 = Jdbc.loadIncremental(spark, srcV2, "o_orderdate", Some(wm1))
-    Sink.dedupUpsert(spark, destPath, pull2,
-      keys = Seq("o_orderkey"), versionCol = "o_orderdate")
-
-    Tables.read(spark, destPath).orderBy(col("o_orderkey"))
+    } finally conn.close()
+    try {
+      java.sql.DriverManager.getConnection(s"jdbc:derby:$dbDir;shutdown=true")
+      ()
+    } catch { case _: java.sql.SQLException => () }
+    val zipPath = root.resolve(zipName)
+    val zos = new java.util.zip.ZipOutputStream(
+      java.nio.file.Files.newOutputStream(zipPath))
+    try {
+      java.nio.file.Files.walk(dbDir).filter(p =>
+        java.nio.file.Files.isRegularFile(p)).forEach { p =>
+        zos.putNextEntry(new java.util.zip.ZipEntry(
+          "db/" + dbDir.relativize(p).toString.replace('\\', '/')))
+        java.nio.file.Files.copy(p, zos)
+        zos.closeEntry()
+      }
+    } finally zos.close()
+    s"jdbc:derby:jar:($zipPath)db"
   }
 
   /** Semi-structured property extraction: pull typed fields out of a

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -118,19 +118,40 @@ object Sink {
     * Returns (files before, files after).
     */
   def compact(spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new Path(path))
-      .filter(f => f.getPath.getName.endsWith(".parquet"))
-    val totalBytes = files.map(_.getLen).sum
-    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val staging = new Path(path + "__compact")
-    Tables.read(spark, path).coalesce(nOut)
-      .write.mode("overwrite").parquet(staging.toString)
+      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
+    rewrite(spark, path, targetFileBytes)(identity)
+
+  /** [[compact]] with the rows passed through `f` on the way (the
+    * dedup index compactions dedupe or re-aggregate here): the result,
+    * coalesced to ceil(input bytes / targetFileBytes) files, is
+    * written to `path__compact` and swapped in, so a reader of `path`
+    * never observes a half-written table. Returns (files before,
+    * files after).
+    */
+  private[graft] def rewrite(spark: SparkSession, path: String,
+      targetFileBytes: Long)(f: DataFrame => DataFrame): (Int, Int) = {
     val target = new Path(path)
-    fs.delete(target, true)
-    fs.rename(staging, target)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(target)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    val nOut = math.max(1, math.ceil(
+      files.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
+    val staging = new Path(path + "__compact")
+    f(Tables.read(spark, path)).coalesce(nOut)
+      .write.mode("overwrite").parquet(staging.toString)
+    swapIn(fs, staging, target)
     (files.length, nOut)
+  }
+
+  /** Replace `target` (if any) with the fully written `staging`. A
+    * rename that returns false leaves the rows in `staging` and fails
+    * the call, instead of returning with the table gone.
+    */
+  private def swapIn(fs: FileSystem, staging: Path, target: Path): Unit = {
+    if (fs.exists(target)) fs.delete(target, true)
+    if (!fs.rename(staging, target))
+      throw new java.io.IOException(
+        s"could not rename $staging to $target; the rows are in $staging")
   }
 
   /** Bucketed managed table: co-locates rows by join key at write time
@@ -170,8 +191,7 @@ object Sink {
       .filter(col("__rn") === 1).drop("__rn")
     val staging = new Path(path + "__staging")
     dedup.write.mode("overwrite").parquet(staging.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    fs.rename(staging, target)
+    swapIn(fs, staging, target)
   }
 
   /** Versioned snapshot writes with time travel (the lakehouse

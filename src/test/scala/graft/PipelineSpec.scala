@@ -90,4 +90,54 @@ class PipelineSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(s6Ids == out.select("doc_id").as[Long].collect().toSet)
   }
+
+  test("every job of a materialized call runs in the caller's job " +
+    "group, landings and eval prefetch included") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.time, e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("g1", "first call")
+      Pipeline.materializeStageFrames(spark, sf)
+      sc.setJobGroup("g2", "second call")
+      val t2 = System.currentTimeMillis()
+      Pipeline.materializeStageFrames(spark, sf)
+      org.apache.spark.graftspec.ListenerBus.drain(sc)
+      val second = jobs.toArray(Array.empty[(Long, String, String)])
+        .filter(_._1 >= t2)
+      assert(second.nonEmpty)
+      assert(second.forall(_._2 == "g2"),
+        second.filter(_._2 != "g2").mkString("jobs outside g2: ", ", ", ""))
+      val labels = second.flatMap(j => Option(j._3)).toSet
+      assert(labels.exists(_.startsWith("pipe_stages: land")) &&
+        labels.contains("pipe s5: eval grams (prefetch)"), labels)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a materialized call that fails at stage 4 rethrows its " +
+    "AnalysisException, leaves no active job and no landed stage") {
+    val dir = Scratch.dir("pipeline_spec_nosource")
+    graft.sources.Tables.load(spark, sf, "documents").drop("source")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Pipeline.materializeStageFrames(spark, dir)
+    }
+    assert(e.getMessage.contains("source"), e.getMessage)
+    val sc = spark.sparkContext
+    org.apache.spark.graftspec.ListenerBus.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    val root = java.nio.file.Paths.get(dir).getParent
+    val landed = java.nio.file.Files.walk(root).toArray.toSeq
+      .map(_.toString).filter(_.matches(".*/pipe_stages[^/]*/s\\d\\.parquet"))
+    assert(landed.isEmpty, landed)
+  }
 }
