@@ -10,6 +10,11 @@ import org.apache.spark.sql.SparkSession
   * 200 default; on a real cluster these come from spark-submit conf and
   * this builder only fills in what is unset.
   *
+  * Local disk: `file:` resolves to Hadoop's local filesystem with its
+  * permission change made in-process ([[graft.sources.LocalFileSystemNoFork]],
+  * [[graft.sources.LocalFsNoFork]]). Without libhadoop, Hadoop's own
+  * forks one chmod process per file and per directory it creates.
+  *
   * Engine code changes session conf in one scope only,
   * [[withObjectAggHeadroom]], and runs work beside its caller through
   * one helper only, [[branches]].
@@ -92,6 +97,18 @@ object GraftSession {
       // this builder creates the JVM's first session; spark-submit
       // users pass it with --conf.
       .config("spark.sql.codegen.cache.maxEntries", "1024")
+      // Local-disk writes without a process start per file. With no
+      // libhadoop, Hadoop's local filesystem forks /bin/chmod for every
+      // file it creates (data file and .crc) and every directory, and
+      // `readlink` on every FileContext rename: ten forks per table
+      // write, on the critical path. These are Hadoop's local
+      // filesystems with that chmod made in-process (sources/LocalFs),
+      // for the FileSystem API (DataFrame writes, Sink's swaps) and the
+      // FileContext API (streaming checkpoints and metadata logs).
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.LocalFileSystemNoFork].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.LocalFsNoFork].getName)
       .withExtensions(new graft.plans.GraftExtensions)
   }
 

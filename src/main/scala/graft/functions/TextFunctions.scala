@@ -530,24 +530,30 @@ object TextFunctions {
     * POSITION ORDER. The ln-prob sum is a per-doc typed `mapGroups`
     * fold over pos-sorted terms (float addition is order-dependent;
     * an agg sum would be partition-dependent), replayed op-for-op by
-    * DuckDB's ordered list_reduce — the q_ewma protocol. Count tables
-    * join co-keyed on the bigram/unigram; fold state is one double
-    * per doc. Docs with <2 tokens have no bigrams and are absent.
+    * DuckDB's ordered list_reduce — the q_ewma protocol. The counts
+    * c_x and c_xy are window counts over the unigram and the bigram
+    * (each token and bigram row carries its own), not count tables
+    * joined back: such a join computes the self-join twice, and AQE
+    * builds it on whichever side's stage finishes first — at sf0.1 the
+    * 266k bigram rows against their 931-row aggregate. The only joins
+    * left are the token self-join (equal sides) and the one-row `v`.
+    * Fold state is one double per doc. Docs with <2 tokens have no
+    * bigrams and are absent.
     */
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), posexplode(words(lower(col("text")))).as(Seq("pos", "w")))
+      .withColumn("c_x", count(lit(1)).over(Window.partitionBy(col("w"))))
       .cache()
     val pairs = toks.as("a").join(toks.as("b"),
         col("a.doc_id") === col("b.doc_id") && col("b.pos") === col("a.pos") + 1)
       .select(col("a.doc_id").as("doc_id"), col("a.pos").as("pos"),
-        col("a.w").as("x"), col("b.w").as("y"))
-    val uni = toks.groupBy(col("w").as("x")).agg(count(lit(1)).as("c_x"))
-    val v = uni.agg(count(lit(1)).as("v"))
-    val bi = pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
+        col("a.w").as("x"), col("b.w").as("y"), col("a.c_x").as("c_x"))
+    val v = toks.agg(countDistinct(col("w")).as("v"))
     val scored = pairs
-      .join(bi, Seq("x", "y")).join(uni, Seq("x")).crossJoin(broadcast(v))
+      .withColumn("c_xy", count(lit(1)).over(Window.partitionBy(col("x"), col("y"))))
+      .crossJoin(broadcast(v))
       .select(col("doc_id"), col("pos"),
         log((col("c_xy") + 1L).cast("double") /
           (col("c_x") + col("v")).cast("double")).as("lnp"))

@@ -14,6 +14,11 @@ import org.apache.spark.sql.functions._
   * upsert is one window over the key — never a per-row DELETE round
   * trip; the staging-swap keeps readers from seeing a half-written
   * overwrite of a table that feeds the same job.
+  *
+  * On local disk (`file:`) these writes start no process: the session's
+  * local filesystem ([[LocalFileSystemNoFork]], set by
+  * [[graft.GraftSession.builder]]) sets each file's and directory's
+  * permission in-process, where Hadoop's forks a chmod per file.
   */
 object Sink {
 
