@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,9 +71,12 @@ import graft.sources.Tables
   * resolve EAGERLY (at most `maxHotKeys`·|ps| driver rows) and the
   * subset is unpersisted before returning, so the returned lazy plan
   * is just the small-key path plus a literal hot-result table — one
-  * more full pass when the caller consumes it. Executor memory per
-  * (key, quantile) is O(max(hotThreshold, finish, buckets)) — all
-  * knobs, none scaling with the data.
+  * more full pass when the caller consumes it. When every key is hot
+  * (the counting pass observes the key count) the small-key path is
+  * left out: the returned frame is the literal table alone, and
+  * collecting it starts no job. Executor memory per (key, quantile)
+  * is O(max(hotThreshold, finish, buckets)) — all knobs, none scaling
+  * with the data.
   *
   * Numerics: quantiles interpolate as v1 + (v2−v1)·frac over the
   * order statistics at ⌊p(n−1)⌋+1 and ⌈p(n−1)⌉+1 — the same rule
@@ -334,8 +337,11 @@ object Quantiles {
     *   and consumption (a file scan is; a non-deterministic or mutated
     *   source is not) — otherwise a group that grows past the
     *   threshold after pass 0 silently takes the unbounded count-map
-    *   path this operator exists to avoid. Persist `rows` for the
-    *   call's lifetime if the source can move.
+    *   path this operator exists to avoid. When pass 0 finds every key
+    *   hot, the returned frame holds no small-key path and does not
+    *   read `rows` again, so a key that first appears after pass 0 is
+    *   absent from it. Persist `rows` for the call's lifetime if the
+    *   source can move.
     */
   def exactQuantilesAnyScale(
       rows: DataFrame, key: String, value: String, ps: Seq[Double],
@@ -353,14 +359,19 @@ object Quantiles {
     // the bracket converts to bit space on the driver, so the full
     // corpus never evaluates the bit expression — only hot rows do.
     // The counts are exact, so they are the hot keys' stats (W = n).
+    // The key count is observed on the same collect, BEFORE the hot
+    // filter: it tells narrowHot whether any key is left for the
+    // small path.
+    val classified = new Observation()
     val hot = base.groupBy(col("__k")).agg(
       count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
+      .observe(classified, count(lit(1)).as("n_keys"))
       .filter(col("__n") > hotThreshold).collect()
 
     // small path: classic count-map percentile, all ps in one buffer
     val psLit = lit(ps.toArray)
     narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
-      hot.map(_.get(0)))(
+      hot.map(_.get(0)), classified.get("n_keys").asInstanceOf[Long])(
       stats = _ => hot.zipWithIndex.map { case (r, ki) =>
         Row(ki, r.getLong(1), r.getLong(1), r.getDouble(2), r.getDouble(3))
       },
@@ -429,30 +440,31 @@ object Quantiles {
       .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"))
 
     // classification pass: WHICH keys exceed hotThreshold (plus the
-    // corpus size and the eager integral-weight check). LEAN on
-    // purpose: per-key count only — no rollup (its Expand feeds the
-    // aggregation TWICE the rows, measured +50% on the 600M-row
+    // corpus size, the key count and the eager integral-weight check).
+    // LEAN on purpose: per-key count only — no rollup (its Expand feeds
+    // the aggregation TWICE the rows, measured +50% on the 600M-row
     // decade), no value brackets (keys that narrow get exact stats
-    // from their extracted subset below), and the per-key result
-    // persists DISK_ONLY just long enough that the corpus total plus
-    // the global integral verdict are one O(|keys|) follow-up job, not
-    // a second scan of the fact. The integral contract is ENFORCED,
-    // not assumed: a fractional weight would otherwise truncate
-    // silently (0 < w < 1 passes the `> 0` filter yet contributes ZERO
-    // weight after the long cast). A per-row raise_error guard was
-    // tried instead and REJECTED by measurement: inside the replay's
-    // 600M-row window pipeline it cost ~1.8x bracketed same-run wall
-    // (docs/SCALING.md round 13).
-    val counts = rows.filter(keep)
+    // from their extracted subset below). The corpus total, the global
+    // integral verdict and the key count are observed over EVERY key,
+    // before the hot filter, on the same collect: one action, no second
+    // scan of the fact and no follow-up job. The integral contract is
+    // ENFORCED, not assumed: a fractional weight would otherwise
+    // truncate silently (0 < w < 1 passes the `> 0` filter yet
+    // contributes ZERO weight after the long cast). A per-row
+    // raise_error guard was tried instead and REJECTED by measurement:
+    // inside the replay's 600M-row window pipeline it cost ~1.8x
+    // bracketed same-run wall (docs/SCALING.md round 13).
+    val classified = new Observation()
+    val over = rows.filter(keep)
       .select(col(key).as("__k"), wLong.as("__w"),
         (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
       .groupBy(col("__k")).agg(
         count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val over = counts.filter(col("__n") > hotThreshold).collect()
-    val global = counts.agg(sum(col("__n")), min(col("__allint"))).head()
-    counts.unpersist()
-    require(global.isNullAt(1) || global.getBoolean(1),
+      .observe(classified, sum(col("__n")).as("n_rows"),
+        min(col("__allint")).as("all_int"), count(lit(1)).as("n_keys"))
+      .filter(col("__n") > hotThreshold).collect()
+    val global = classified.get
+    require(global("all_int") == null || global("all_int") == true,
       s"weight column '$weight' holds non-integral values — the " +
         "weighted quantile contract is integral positive weights " +
         "(a fractional weight would truncate silently); scale weights " +
@@ -474,7 +486,7 @@ object Quantiles {
     val hotKeys: Array[Any] = route match {
       case HotRoute.Narrow => over.map(_.get(0))
       case HotRoute.CostAware =>
-        val totalRows = if (global.isNullAt(0)) 0L else global.getLong(0)
+        val totalRows = Option(global("n_rows")).fold(0L)(_.asInstanceOf[Long])
         val parallelism =
           math.max(1, spark.sparkContext.defaultParallelism).toDouble
         val taskMem =
@@ -502,7 +514,7 @@ object Quantiles {
     // they are exact even when the classification above was sampled,
     // and replay-routed runs never compute them.
     narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
-      hotKeys)(
+      hotKeys, global("n_keys").asInstanceOf[Long])(
       stats = _.groupBy(col("__ki")).agg(
         count(lit(1)), sum(col("__w")), min(col("__v")), max(col("__v")))
         .collect(),
@@ -526,6 +538,8 @@ object Quantiles {
     * @param base the filtered rows as (`__k`, `__v` double, `__w` long
     *   weight; `lit(1L)` for unweighted quantiles)
     * @param hotKeys the keys the front end routed to narrowing
+    * @param nKeys how many keys `base` holds; when every one is in
+    *   `hotKeys` the result is the driver-built hot table alone
     * @param stats exact per-hot-key (`__ki` index into `hotKeys`, rows,
     *   total weight W, min value, max value), given the persisted hot
     *   subset (`__ki`, `__v`, `__b`, `__w`) to aggregate if needed
@@ -534,7 +548,8 @@ object Quantiles {
     */
   private def narrowHot(
       base: DataFrame, key: String, ps: Seq[Double], hotThreshold: Long,
-      buckets: Int, finish: Long, maxHotKeys: Int, hotKeys: Array[Any])(
+      buckets: Int, finish: Long, maxHotKeys: Int, hotKeys: Array[Any],
+      nKeys: Long)(
       stats: DataFrame => Array[Row],
       targets: (Double, Long) => (Long, Long, Double),
       small: DataFrame => DataFrame): DataFrame = {
@@ -558,7 +573,6 @@ object Quantiles {
         StructField("__ki", IntegerType))))
     def hotJoin(how: String): DataFrame =
       base.join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), how)
-    val smallQuantiles = small(hotJoin("left_anti"))
 
     // one extraction pass; every narrowing pass then reads the (small)
     // hot subset, not the full fact. DISK_ONLY: predictable, no
@@ -798,7 +812,10 @@ object Quantiles {
       states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
       StructType(Seq(keyField, StructField("__p", DoubleType),
         StructField("__med", DoubleType))))
-    finishKeys(smallQuantiles.unionByName(hotQuantiles))
+    // every key hot: no small key is left, so the result is the driver
+    // rows alone, not a scan of the fact anti-joined to nothing
+    finishKeys(if (hotKeys.length == nKeys) hotQuantiles
+      else small(hotJoin("left_anti")).unionByName(hotQuantiles))
   }
 
   /** `q_median_narrow` gate surface: the narrowing median against the

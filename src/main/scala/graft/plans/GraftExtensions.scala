@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 /** SparkSessionExtensions installer for graft.
   *
   * Registers the native SQL-callable expressions, the top-k aggregate
-  * rewrite, the `graft_docgen` table function and the as-of and
-  * interval join strategies. Which join sides broadcast is Spark's own
+  * rewrite, the driver-side sort of local relations
+  * ([[LocalRelationSort]]), the `graft_docgen` table function and the
+  * as-of and interval join strategies. Which join sides broadcast is Spark's own
   * size-based choice (`spark.sql.autoBroadcastJoinThreshold`, which
   * [[graft.GraftSession.builder]] sets), not an extension rule.
   */
@@ -19,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     graft.functions.JaccardFunctions.registerSql(e)
     graft.functions.TopKFunctions.registerSql(e)
     e.injectOptimizerRule(_ => TopKRewrite)
+    e.injectOptimizerRule(_ => LocalRelationSort)
     // SQL table-valued function surface of the graft-docgen DSv2
     // source: `SELECT * FROM graft_docgen(n)` expands to the same
     // closed-form generator over range(n), so SQL users get the

@@ -1,6 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Rand, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.plans.LocalRelationSort
 
 class PlansSpec extends SparkSpec {
 
@@ -135,5 +143,65 @@ class PlansSpec extends SparkSpec {
       .queryExecution.executedPlan
     assert(deep(mergePlan).collect {
       case m: graft.plans.AsOfJoinExec => m }.nonEmpty, mergePlan.toString.take(1500))
+  }
+
+  private def sorts(p: LogicalPlan): Int = p.collect { case s: Sort => s }.size
+
+  test("a sort of driver rows runs on the driver, in the order a file sort gives") {
+    val schema = StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("k", DoubleType), StructField("s", StringType)))
+    // ties (2.5, NaN, null twice each; -0.0 and 0.0 four times), ±Inf
+    val ks = Seq[java.lang.Double](2.5, null, Double.NaN, -0.0, 0.0, -1.0,
+      2.5, Double.NegativeInfinity, 0.0, -0.0, null, Double.PositiveInfinity,
+      Double.NaN, 1.0)
+    val local = spark.createDataFrame(ks.zipWithIndex.map { case (k, i) =>
+      Row(i, k, if (i % 4 == 3) null else s"s${i % 3}")
+    }.asJava, schema)
+    val dir = Scratch.dir("plans_local_sort")
+    local.coalesce(1).write.mode("overwrite").parquet(dir)
+    val file = spark.read.parquet(dir)
+    val k = col("k")
+    val s = col("s")
+    val orders: Seq[(Seq[String], Seq[Column])] = Seq(
+      Seq("k") -> Seq(k.asc), Seq("k") -> Seq(k.desc),
+      Seq("k") -> Seq(k.asc_nulls_last), Seq("k") -> Seq(k.desc_nulls_first),
+      Seq("s", "k") -> Seq(s.asc, k.desc),
+      Seq("s", "k") -> Seq(s.desc_nulls_last, k.asc_nulls_last))
+    orders.foreach { case (keys, o) =>
+      val sorted = local.orderBy(o: _*)
+      assert(sorts(sorted.queryExecution.optimizedPlan) == 0,
+        sorted.queryExecution.optimizedPlan)
+      val (got, jobs) = jobsOf(sorted.collect().toSeq)
+      assert(jobs == 0, s"order $o: collect of driver rows started $jobs jobs")
+      // Spark's own sort leaves the order of tied rows open (its radix
+      // sort reverses them on some keys), so the file sort is compared
+      // key by key (Row equality: NaN equals NaN, -0.0 equals 0.0) and
+      // row for row as a multiset; toString keeps the sign of a zero
+      val want = file.orderBy(o: _*).collect().toSeq
+      def key(r: Row): Row = Row.fromSeq(keys.map(r.getAs[Any]))
+      assert(got.map(key) == want.map(key), s"order $o")
+      assert(got.map(_.toString).sorted == want.map(_.toString).sorted, s"order $o")
+      // stable: each run of tied keys keeps its input (id) order
+      got.zip(got.drop(1)).foreach { case (a, b) =>
+        if (key(a) == key(b)) assert(a.getInt(0) < b.getInt(0), s"order $o: $a before $b")
+      }
+    }
+  }
+
+  test("partition sorts, random orders and streaming relations keep their Sort") {
+    val df = spark.createDataFrame((0 until 5).map(i => Row(i.toLong)).asJava,
+      StructType(Seq(StructField("id", LongType))))
+    assert(sorts(df.sortWithinPartitions(col("id")).queryExecution.optimizedPlan) == 1)
+    // The analyzer pulls a random key out of a Sort into a projection
+    // (which Spark's ConvertToLocalRelation then evaluates on the
+    // driver), so a random or streaming key reaches the rule only in a
+    // plan built by hand.
+    val rel = df.queryExecution.optimizedPlan.asInstanceOf[LocalRelation]
+    val byRand = Sort(Seq(SortOrder(Rand(7L), Ascending)), global = true, rel)
+    assert(LocalRelationSort(byRand) == byRand)
+    val byId = SortOrder(rel.output.head, Ascending)
+    val streaming = Sort(Seq(byId), global = true, rel.copy(isStreaming = true))
+    assert(LocalRelationSort(streaming) == streaming)
+    assert(sorts(LocalRelationSort(Sort(Seq(byId), global = true, rel))) == 0)
   }
 }

@@ -234,6 +234,78 @@ class QuantilesSpec extends SparkSpec {
     assert(e.getMessage.contains("non-integral"))
   }
 
+  /** Rows of (`k`, `v` double, `w` long) landed as parquet, so a plan
+    * that re-reads them shows a file scan.
+    */
+  private def landed(tag: String, rows: Seq[(String, Double, Long)]): DataFrame = {
+    val dir = Scratch.dir(tag)
+    rows.toDF("k", "v", "w").coalesce(1).write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def scansFiles(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
+    }.nonEmpty
+
+  test("every key hot: both exact front ends return driver rows, no rescan; " +
+    "small keys still come back when mixed") {
+    val hotRows = Seq.tabulate(300)(i => ("a", hashDouble(i, 81, 1e4), 1L + (i % 3))) ++
+      Seq.tabulate(250)(i => ("b", hashDouble(i, 82, 50.0) - 25.0, 1L + (i % 4)))
+    val smallRows = Seq.tabulate(20)(i => ("c", hashDouble(i, 83, 9.0), 2L))
+    val ps = Seq(0.25, 0.5, 0.9)
+    def check(rows: Seq[(String, Double, Long)], tag: String, allHot: Boolean): Unit = {
+      val df = landed(tag, rows)
+      val unweighted = Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
+        hotThreshold = 100, buckets = 8, finish = 16)
+      val weighted = Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w",
+        ps, hotThreshold = 100, buckets = 8, finish = 16,
+        route = Quantiles.HotRoute.Narrow)
+      assert(scansFiles(unweighted) != allHot, unweighted.queryExecution.optimizedPlan)
+      assert(scansFiles(weighted) != allHot, weighted.queryExecution.optimizedPlan)
+      val classic = df.groupBy("k")
+        .agg(percentile(col("v"), lit(ps.toArray)).as("q")).collect()
+        .flatMap(r => ps.indices.map(i => (r.getString(0), ps(i)) -> r.getSeq[Double](1)(i)))
+        .toMap
+      val (got, jobs) = jobsOf(unweighted.collect()
+        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap)
+      if (allHot) assert(jobs == 0, s"collect of the all-hot result started $jobs jobs")
+      assert(got.keySet == classic.keySet)
+      classic.foreach { case (kp, q) =>
+        assert(math.abs(got(kp) - q) <= math.max(1e-9, math.abs(q) * 1e-12),
+          s"$kp: got ${got(kp)}, want $q")
+      }
+      val wGot = weighted.collect()
+        .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+      val wWant = rows.groupBy(_._1).toSeq.flatMap { case (k, g) =>
+        ps.map(p => (k, p) -> referenceWeightedQ(g.map(t => (t._2, t._3)), p))
+      }.toMap
+      assert(wGot == wWant)
+    }
+    check(hotRows, "quantiles_all_hot", allHot = true)
+    check(hotRows ++ smallRows, "quantiles_mixed", allHot = false)
+  }
+
+  test("empty input returns an empty frame from both exact front ends") {
+    val df = Seq.empty[(String, Double, Long)].toDF("k", "v", "w")
+    assert(Quantiles.exactQuantilesAnyScale(df, "k", "v", Seq(0.5)).collect().isEmpty)
+    assert(Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w", Seq(0.5))
+      .collect().isEmpty)
+  }
+
+  test("weighted classification is one action: its jobs are one per-key " +
+    "count's") {
+    val df = landed("quantiles_classify",
+      Seq.tabulate(400)(i => (s"k${i % 5}", i.toDouble, 1L + (i % 2))))
+    // no key is hot, so the call runs the classification and nothing else
+    val (_, callJobs) = jobsOf(Quantiles.exactWeightedQuantilesAnyScale(
+      df, "k", "v", "w", Seq(0.5)))
+    val (_, countJobs) = jobsOf(df.filter(col("w") > 0).groupBy("k")
+      .agg(count(lit(1)), min(col("w"))).collect())
+    assert(callJobs == countJobs,
+      s"classification ran $callJobs jobs, a per-key count $countJobs")
+  }
+
   test("weighted sketch: exact when every key fits the sample; " +
     "ident columns are required") {
     val rows = Seq.tabulate(300)(i => ("a", hashDouble(i, 71, 1e3), 1L + (i % 4))) ++
