@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.types._
-
 /** Order-preserving bit image of a double: `double` → `long` such that
   * `a < b  ⇔  bits(a) < bits(b)` (signed long comparison), for every
   * non-NaN double including negatives, ±0.0 (−0.0 sorts just below
@@ -25,62 +19,21 @@ import org.apache.spark.sql.types._
   * side of `lo + b*w` recomputed in floating point); interval
   * arithmetic on the bit image is integer-exact, so the histogram a
   * pass counts and the range the next pass narrows to can never
-  * disagree. NaN inputs return null (the median operator excludes
-  * them; a total order over NaN is a sort concern, not a quantile
-  * one).
+  * disagree. Its callers never pass NaN (the quantile operators
+  * exclude it; a total order over NaN is a sort concern, not a
+  * quantile one).
   */
-case class SortableDoubleBits(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects double, got ${t.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_double_bits"
-
-  override def nullSafeEval(input: Any): Any = {
-    val d = input.asInstanceOf[Double]
-    if (java.lang.Double.isNaN(d)) null
-    else SortableDoubleBits.toSortable(d)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d => {
-      val bits = ctx.freshName("bits")
-      s"""
-         |if (java.lang.Double.isNaN($d)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $bits = java.lang.Double.doubleToRawLongBits($d);
-         |  ${ev.value} = $bits ^ (($bits >> 63) & 0x7fffffffffffffffL);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SortableDoubleBits {
 
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
-  /** Driver-side forward map (must match the expression bit-for-bit). */
+  /** Forward map. */
   def toSortable(d: Double): Long = {
     val bits = java.lang.Double.doubleToRawLongBits(d)
     bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
   }
 
-  /** Driver-side inverse: the xor mask is an involution on the non-sign
-    * bits, selected by the (unchanged) sign bit.
+  /** Inverse: the xor mask is an involution on the non-sign bits,
+    * selected by the (unchanged) sign bit.
     */
   def fromSortable(s: Long): Double =
     java.lang.Double.longBitsToDouble(s ^ ((s >> 63) & 0x7fffffffffffffffL))
-
-  /** Column wrapper: the sortable bit image of a double column. */
-  def sortableBits(value: Column): Column =
-    ColumnBridge.column(SortableDoubleBits(ColumnBridge.expression(value)))
 }

@@ -1,12 +1,18 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.SortableDoubleBits
 import graft.sources.Tables
@@ -58,24 +64,30 @@ import graft.sources.Tables
   *     and fold endgames run as one raw RDD job over the hot subset,
   *     like the passes: no plan is built and no conf is scoped.
   *
-  * Cost shape: 1 full pass for counts, 1 full pass that EXTRACTS the
-  * hot keys' rows into a DISK_ONLY persisted subset (at Zipf(1.1) a
-  * minority of the corpus — the passes must not re-scan 100 TB to
-  * reach 7% of it), then (passes + 1) jobs over that subset shared by
-  * every requested quantile; with the default `finish` the pass count
-  * is usually 1-2 — narrowing runs only until the candidate interval
-  * fits one bounded collect, not until it pinpoints the value. Rank
-  * location is one single-stage RDD job per pass: each task folds its
-  * rows into a histogram of at most 2^20 cells, only those arrays come
-  * back, and the driver scans their cumulative weight. Hot results
-  * resolve EAGERLY (at most `maxHotKeys`·|ps| driver rows) and the
-  * subset is unpersisted before returning, so the returned lazy plan
-  * is just the small-key path plus a literal hot-result table — one
-  * more full pass when the caller consumes it. When every key is hot
-  * (the counting pass observes the key count) the small-key path is
-  * left out: the returned frame is the literal table alone, and
-  * collecting it starts no job. Executor memory per (key, quantile)
-  * is O(max(hotThreshold, finish, buckets)) — all knobs, none scaling
+  * Cost shape: one classification aggregate over the full input
+  * (per key: rows, weight sum, value bracket; two AQE jobs), then one
+  * job per narrowing pass and one endgame job, shared by every
+  * requested quantile. The first pass is the only one that reads the
+  * full input again: its tasks look each row's key up in a hot-key
+  * index carried in the task closure and EXTRACT the hot rows into a
+  * DISK_ONLY persisted subset of per-key blocks of sortable bits (at
+  * Zipf(1.1) a minority of the corpus — the passes must not re-scan
+  * 100 TB to reach 7% of it) while they histogram them; every later
+  * pass and the endgame read only that subset. With the default
+  * `finish` the pass count is usually 1-2 — narrowing runs only until
+  * the candidate interval fits one bounded collect, not until it
+  * pinpoints the value. Each pass is one single-stage RDD job: each
+  * task folds its rows into a histogram of at most 2^20 cells, only
+  * those arrays come back, and the driver scans their cumulative
+  * weight. Hot results resolve EAGERLY (at most `maxHotKeys`·|ps|
+  * driver rows) and the subset is unpersisted before returning, on
+  * failure too, so the returned lazy plan is just the small-key path
+  * plus a literal hot-result table — one more full pass when the
+  * caller consumes it. When every key is hot (the classification
+  * observes the key count) the small-key path is left out: the
+  * returned frame is the literal table alone, and collecting it
+  * starts no job. Executor memory per (key, quantile) is
+  * O(max(hotThreshold, finish, buckets)) — all knobs, none scaling
   * with the data.
   *
   * Numerics: quantiles interpolate as v1 + (v2−v1)·frac over the
@@ -110,20 +122,31 @@ object Quantiles {
     */
   private val HistCells = 1L << 20
 
-  /** One-job histogram pass over the hot subset's cached scan (round
-    * 17 second pass): per-partition long-array fold, then combine.
-    * The seqOp mutates its task-local array in place; `size` longs of
-    * state per task — a function of the knobs (capped by
-    * [[HistCells]]), never of the data. Small arrays come straight
-    * back to the driver (ONE single-stage job, zero shuffle); larger
-    * ones take a depth-2 treeAggregate that caps driver traffic at
-    * ~sqrt(partitions) arrays for one tiny extra stage.
+  /** Hot rows one extraction task buffers before it hands them on as
+    * [[HotBlock]]s: bounds a task's buffer at 16 bytes a row (bits and
+    * weight) times this, whatever its partition holds.
     */
-  private def histAggregate(
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      size: Int)(
-      seq: (Array[Long], org.apache.spark.sql.catalyst.InternalRow) => Unit)
-      : Array[Long] = {
+  private val BlockRows = 1 << 16
+
+  /** One extraction task's rows of one hot key: the sortable bits of
+    * their values and, only for a key whose weights are not all 1,
+    * their weights (`ws` is null when every weight is 1).
+    */
+  private final case class HotBlock(ki: Int, bits: Array[Long], ws: Array[Long]) {
+    def weight(r: Int): Long = if (ws == null) 1L else ws(r)
+  }
+
+  /** One-job histogram pass over the hot subset: per-partition
+    * long-array fold, then combine. The seqOp mutates its task-local
+    * array in place; `size` longs of state per task — a function of the
+    * knobs (capped by [[HistCells]]), never of the data. Small arrays
+    * come straight back to the driver (ONE single-stage job, zero
+    * shuffle); larger ones take a depth-2 treeAggregate that caps
+    * driver traffic at ~sqrt(partitions) arrays for one tiny extra
+    * stage.
+    */
+  private def histAggregate(rdd: RDD[HotBlock], size: Int)(
+      seq: (Array[Long], HotBlock) => Unit): Array[Long] = {
     val comb = (a: Array[Long], b: Array[Long]) => {
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
@@ -357,24 +380,22 @@ object Quantiles {
 
     // pass 0: count + value bracket per key (algebraic, skew-immune);
     // the bracket converts to bit space on the driver, so the full
-    // corpus never evaluates the bit expression — only hot rows do.
-    // The counts are exact, so they are the hot keys' stats (W = n).
-    // The key count is observed on the same collect, BEFORE the hot
-    // filter: it tells narrowHot whether any key is left for the
-    // small path.
+    // corpus never computes the bit image — only hot rows do.
+    // The counts are exact, so they are the hot keys' stats (W = n, the
+    // same count: Spark computes it once). The key count is observed on
+    // the same collect, BEFORE the hot filter: it tells narrowHot
+    // whether any key is left for the small path.
     val classified = new Observation()
-    val hot = base.groupBy(col("__k")).agg(
-      count(lit(1)).as("__n"), min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
+    val n = count(lit(1))
+    val hot = base.groupBy(col("__k")).agg(n.as("__n"), n.as("__W"),
+      min(col("__v")).as("__lo"), max(col("__v")).as("__hi"))
       .observe(classified, count(lit(1)).as("n_keys"))
       .filter(col("__n") > hotThreshold).collect()
 
     // small path: classic count-map percentile, all ps in one buffer
     val psLit = lit(ps.toArray)
     narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
-      hot.map(_.get(0)), classified.get("n_keys").asInstanceOf[Long])(
-      stats = _ => hot.zipWithIndex.map { case (r, ki) =>
-        Row(ki, r.getLong(1), r.getLong(1), r.getDouble(2), r.getDouble(3))
-      },
+      hot, classified.get("n_keys").asInstanceOf[Long])(
       targets = (p, w) => {
         val pos = p * (w - 1)
         (math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1,
@@ -439,27 +460,31 @@ object Quantiles {
     val base = rows.filter(keep)
       .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"))
 
-    // classification pass: WHICH keys exceed hotThreshold (plus the
-    // corpus size, the key count and the eager integral-weight check).
-    // LEAN on purpose: per-key count only — no rollup (its Expand feeds
-    // the aggregation TWICE the rows, measured +50% on the 600M-row
-    // decade), no value brackets (keys that narrow get exact stats
-    // from their extracted subset below). The corpus total, the global
-    // integral verdict and the key count are observed over EVERY key,
-    // before the hot filter, on the same collect: one action, no second
-    // scan of the fact and no follow-up job. The integral contract is
-    // ENFORCED, not assumed: a fractional weight would otherwise
-    // truncate silently (0 < w < 1 passes the `> 0` filter yet
-    // contributes ZERO weight after the long cast). A per-row
-    // raise_error guard was tried instead and REJECTED by measurement:
-    // inside the replay's 600M-row window pipeline it cost ~1.8x
-    // bracketed same-run wall (docs/SCALING.md round 13).
+    // classification pass: WHICH keys exceed hotThreshold, each with
+    // the stats the narrowing starts from — row count, total weight W
+    // (the T = ⌈p·W⌉ targets), value bracket — the unweighted pass 0's
+    // shape, so the narrowing's first pass fills the hot subset instead
+    // of a separate stats job over it. Plus the corpus size, the key
+    // count and the eager integral-weight check. No rollup: its Expand
+    // feeds the aggregation TWICE the rows (measured +50% on the
+    // 600M-row decade). The corpus total, the global integral verdict
+    // and the key count are observed over EVERY key, before the hot
+    // filter, on the same collect: one action, no second scan of the
+    // fact and no follow-up job. The integral contract is ENFORCED, not
+    // assumed: a fractional weight would otherwise truncate silently
+    // (0 < w < 1 passes the `> 0` filter yet contributes ZERO weight
+    // after the long cast). A per-row raise_error guard was tried
+    // instead and REJECTED by measurement: inside the replay's
+    // 600M-row window pipeline it cost ~1.8x bracketed same-run wall
+    // (docs/SCALING.md round 13).
     val classified = new Observation()
     val over = rows.filter(keep)
-      .select(col(key).as("__k"), wLong.as("__w"),
+      .select(col(key).as("__k"), v.as("__v"), wLong.as("__w"),
         (col(weight).cast("double") === wLong.cast("double")).as("__wint"))
       .groupBy(col("__k")).agg(
-        count(lit(1)).as("__n"), min(col("__wint")).as("__allint"))
+        count(lit(1)).as("__n"), sum(col("__w")).as("__W"),
+        min(col("__v")).as("__lo"), max(col("__v")).as("__hi"),
+        min(col("__wint")).as("__allint"))
       .observe(classified, sum(col("__n")).as("n_rows"),
         min(col("__allint")).as("all_int"), count(lit(1)).as("n_keys"))
       .filter(col("__n") > hotThreshold).collect()
@@ -483,8 +508,8 @@ object Quantiles {
     // overhead on a single host: the classification pass (~1.2x over
     // the oracle-best plan at the 600M decade; a cluster spreads it
     // across executors like any other scan).
-    val hotKeys: Array[Any] = route match {
-      case HotRoute.Narrow => over.map(_.get(0))
+    val hot: Array[Row] = route match {
+      case HotRoute.Narrow => over
       case HotRoute.CostAware =>
         val totalRows = Option(global("n_rows")).fold(0L)(_.asInstanceOf[Long])
         val parallelism =
@@ -498,7 +523,7 @@ object Quantiles {
           val n = r.getLong(1).toDouble
           val spill = math.max(1.0, n * rowBytes / taskMem)
           gamma * (totalRows + narrowPasses * n) / parallelism < n * spill
-        }.map(_.get(0))
+        }
     }
 
     // small path: windowed cumsum replay; the RANGE default frame sums
@@ -508,16 +533,8 @@ object Quantiles {
     val psLit = lit(ps.toArray)
     val wByV = Window.partitionBy(col("__k")).orderBy(col("__v"))
     val wAll = Window.partitionBy(col("__k"))
-    // The EXACT per-key stats the narrowing needs — row count, total
-    // weight W (the T = ⌈p·W⌉ targets), value brackets — ride one
-    // cheap aggregate over the (persisted, small) extracted subset, so
-    // they are exact even when the classification above was sampled,
-    // and replay-routed runs never compute them.
     narrowHot(base, key, ps, hotThreshold, buckets, finish, maxHotKeys,
-      hotKeys, global("n_keys").asInstanceOf[Long])(
-      stats = _.groupBy(col("__ki")).agg(
-        count(lit(1)), sum(col("__w")), min(col("__v")), max(col("__v")))
-        .collect(),
+      hot, global("n_keys").asInstanceOf[Long])(
       targets = (p, w) => {
         val t = math.max(1L, math.ceil(p * w).toLong)
         (t, t, 0.0)
@@ -537,68 +554,31 @@ object Quantiles {
     *
     * @param base the filtered rows as (`__k`, `__v` double, `__w` long
     *   weight; `lit(1L)` for unweighted quantiles)
-    * @param hotKeys the keys the front end routed to narrowing
-    * @param nKeys how many keys `base` holds; when every one is in
-    *   `hotKeys` the result is the driver-built hot table alone
-    * @param stats exact per-hot-key (`__ki` index into `hotKeys`, rows,
-    *   total weight W, min value, max value), given the persisted hot
-    *   subset (`__ki`, `__v`, `__b`, `__w`) to aggregate if needed
+    * @param hot the keys the front end routed to narrowing with their
+    *   exact pass-0 stats, one row each: (key, rows n, total weight W,
+    *   min value, max value); a key's position is its key index
+    * @param nKeys how many keys `base` holds; when every one is in `hot`
+    *   the result is the driver-built hot table alone
     * @param targets (t1, t2, frac) of quantile p for total weight W
     * @param small (`__k`, `__p`, `__med`) for the rows of every other key
     */
   private def narrowHot(
       base: DataFrame, key: String, ps: Seq[Double], hotThreshold: Long,
-      buckets: Int, finish: Long, maxHotKeys: Int, hotKeys: Array[Any],
+      buckets: Int, finish: Long, maxHotKeys: Int, hot: Array[Row],
       nKeys: Long)(
-      stats: DataFrame => Array[Row],
       targets: (Double, Long) => (Long, Long, Double),
       small: DataFrame => DataFrame): DataFrame = {
-    require(hotKeys.length <= maxHotKeys,
-      s"${hotKeys.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
+    require(hot.length <= maxHotKeys,
+      s"${hot.length} keys exceed hotThreshold=$hotThreshold (cap $maxHotKeys); " +
         "raise the threshold — a workload where this many keys are oversized " +
         "is big everywhere, not skewed")
     val spark = base.sparkSession
     def finishKeys(df: DataFrame): DataFrame =
       df.select(col("__k").as(key), col("__p").as("p"),
         col("__med").as("quantile"))
-    if (hotKeys.isEmpty) return finishKeys(small(base))
+    if (hot.isEmpty) return finishKeys(small(base))
 
-    // joins against the driver-built key table are NULL-SAFE (`<=>`):
-    // the null surrogate is the canonical hot key, and an equality join
-    // would silently route a hot null group back to the small path
-    val keyField = StructField("__k", base.schema("__k").dataType, nullable = true)
-    val hotIdxDf = spark.createDataFrame(
-      hotKeys.zipWithIndex.map { case (k, ki) => Row(k, ki) }.toSeq.asJava,
-      StructType(Seq(keyField.copy(name = "__hk"),
-        StructField("__ki", IntegerType))))
-    def hotJoin(how: String): DataFrame =
-      base.join(broadcast(hotIdxDf), col("__k") <=> col("__hk"), how)
-
-    // one extraction pass; every narrowing pass then reads the (small)
-    // hot subset, not the full fact. DISK_ONLY: predictable, no
-    // executor-memory claim beyond the write buffers. (An A/B against
-    // localCheckpoint showed no driver-gap win — the per-pass planning
-    // cost is job-submission latency, not lineage re-optimization —
-    // and the eager checkpoint's separate materialization job cost
-    // more than the persist's pipelined first-pass fill.) The subset
-    // rows carry a dense key index (__ki) so the narrowing passes and
-    // the endgame can run as raw RDD jobs over the cached scan (round
-    // 17 second pass, guide §1.2 step 1): the geometry travels in the
-    // task closure, making each pass ONE single-stage job with zero
-    // planning, zero broadcast build and zero exchange — the per-pass
-    // Catalyst cycle (analyze + optimize + codegen + broadcast +
-    // 2-stage shuffle) was the family's residual ~1 s driver gap after
-    // the round-17 collect fusion.
-    val hotRows = hotJoin("inner")
-      .select(col("__ki"), col("__v"),
-        SortableDoubleBits.sortableBits(col("__v")).as("__b"), col("__w"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // fixed physical scan over the persisted subset — planned ONCE;
-    // each narrowing pass and the endgame re-run only its tasks
-    // against the cache
-    val hotScan = hotRows.queryExecution.toRdd
-    val states = stats(hotRows).flatMap { r =>
-      val ki = r.getInt(0)
+    val states = hot.zipWithIndex.flatMap { case (r, ki) =>
       // min/max may report either of ±0.0 (they compare equal as
       // doubles); widen the bit bracket to cover both so no row can
       // fall outside it
@@ -608,15 +588,69 @@ object Quantiles {
       val hiB = SortableDoubleBits.toSortable(if (hiV == 0.0) 0.0 else hiV)
       ps.zipWithIndex.map { case (p, pi) =>
         val (t1, t2, frac) = targets(p, r.getLong(2))
-        new HotState(ki * ps.size + pi, hotKeys(ki), p, t1, t2, frac,
+        new HotState(ki * ps.size + pi, r.get(0), p, t1, t2, frac,
           loB, hiB, r.getLong(1))
       }
     }
 
+    // Extraction: one raw RDD over the filtered rows' own physical plan,
+    // so the scan, filter and projection stay codegen'd. Each row's key
+    // is looked up in a driver-built index that rides the task closure,
+    // compared the way Spark's grouping and `<=>` joins compare keys:
+    // floating-point parts normalized (−0.0 is 0.0, every NaN one NaN),
+    // then the key's UnsafeRow bytes, so a null key is a key like any
+    // other. The subset holds only what the passes and the endgame
+    // read: per-hot-key blocks of sortable bits, with weights only for
+    // a key whose weights are not all 1 (W > n). A task buffers at most
+    // [[BlockRows]] hot rows before it hands their blocks on.
+    //
+    // DISK_ONLY, and filled by the first pass that reads it: no
+    // executor-memory claim beyond the write buffers, and no job of its
+    // own. (An A/B against localCheckpoint showed no driver-gap win and
+    // its eager materialization job cost more than the persist's
+    // pipelined fill.) Each narrowing pass and the endgame then re-run
+    // only their tasks against the cached blocks, with their geometry
+    // in the task closure: one single-stage job each, no planning, no
+    // broadcast, no exchange. A lost executor's blocks recompute from
+    // lineage.
+    val keyType = base.schema("__k").dataType
+    val normKey = ColumnBridge.normalizeFloats(BoundReference(0, keyType, nullable = true))
+    val index: Map[UnsafeRow, Int] = {
+      val proj = UnsafeProjection.create(Seq(normKey))
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(keyType)
+      hot.indices.map(ki =>
+        proj(InternalRow(toCatalyst(hot(ki).get(0)))).copy() -> ki).toMap
+    }
+    val unitW = hot.map(r => r.getLong(1) == r.getLong(2))
+    val subset = base.queryExecution.toRdd.mapPartitions { rows =>
+      val proj = UnsafeProjection.create(Seq(normKey))
+      val bits = Array.fill(unitW.length)(new ArrayBuilder.ofLong)
+      val ws = unitW.map(u => if (u) null else new ArrayBuilder.ofLong)
+      Iterator.continually {
+        var n = 0
+        while (n < BlockRows && rows.hasNext) {
+          val row = rows.next()
+          val ki = index.getOrElse(proj(row), -1)
+          if (ki >= 0) {
+            bits(ki).addOne(SortableDoubleBits.toSortable(row.getDouble(1)))
+            if (ws(ki) != null) ws(ki).addOne(row.getLong(2))
+            n += 1
+          }
+        }
+        for (ki <- bits.indices if bits(ki).length > 0) yield {
+          val blk = HotBlock(ki, bits(ki).result(),
+            if (ws(ki) == null) null else ws(ki).result())
+          bits(ki).clear()
+          if (ws(ki) != null) ws(ki).clear()
+          blk
+        }
+      }.takeWhile(_.nonEmpty).flatten
+    }.persist(StorageLevel.DISK_ONLY)
+
     // per hot key index, the slots (indices into `pairs`) of its pairs:
     // how a job fans each row out to every pair of its key
     def slotsByKey(pairs: Array[HotState]): Array[Array[Int]] = {
-      val m = Array.fill(hotKeys.length)(Array.newBuilder[Int])
+      val m = Array.fill(hot.length)(Array.newBuilder[Int])
       pairs.indices.foreach(j => m(pairs(j).sid / ps.size) += j)
       m.map(_.result())
     }
@@ -630,192 +664,210 @@ object Quantiles {
     val firstBuckets = passBuckets(math.max(1, states.count(_.open(finish))))
     val maxIter = 66 / (31 - Integer.numberOfLeadingZeros(firstBuckets)) + 4
     final case class Geo(s: HotState, shift: Int, sLo: Long, sHi: Long, w: Long)
-    var iter = 0
-    while (states.exists(_.open(finish)) && iter < maxIter) {
-      iter += 1
-      val active = states.filter(_.open(finish))
-      val nB = passBuckets(active.length)
+    // a failed pass or endgame (a broken invariant, a cancelled job
+    // group) must not leave the subset's blocks registered
+    try {
+      var iter = 0
+      while (states.exists(_.open(finish)) && iter < maxIter) {
+        iter += 1
+        val active = states.filter(_.open(finish))
+        val nB = passBuckets(active.length)
 
-      // per-pair bucket geometry, integer-exact. A mixed-sign interval
-      // wider than Long.MaxValue would overflow (bits - lo); shifting
-      // both by one bit is order-preserving and never needed twice.
-      val geo = active.map { s =>
-        val wide = s.lo < 0 && s.hi > 0 &&
-          (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
-        val shift = if (wide) 1 else 0
-        val sLo = s.lo >> shift
-        val sHi = s.hi >> shift
-        Geo(s, shift, sLo, sHi, (sHi - sLo) / nB + 1)
-      }
-      // Rank location (round 17 second pass, guide §1.2/§2.4): the
-      // per-pass histogram is a RAW RDD JOB over the cached subset
-      // scan — the pass geometry rides the task closure, every hot row
-      // lands in exactly one monotone bucket PER ACTIVE PAIR of its key
-      // (the slot loop fans rows out per pair — this is how every
-      // requested quantile narrows in one shared scan), and each cell
-      // sums (weight, row count). The -1 / nB sentinel buckets keep
-      // rows outside a pair's interval in its rank arithmetic (bucket
-      // -1 carries the below-interval weight), so the cumulative weight
-      // stays ABSOLUTE and nothing needs carrying between passes except
-      // the interval itself. One single-stage job per pass, zero
-      // planning, zero exchange; the driver receives ONE long array of
-      // ≤ [[HistCells]] cells — a function of the KNOBS, never the data.
-      val cells = nB + 2
-      val slotLo = geo.map(_.s.lo)
-      val slotHi = geo.map(_.s.hi)
-      val slotSLo = geo.map(_.sLo)
-      val slotW = geo.map(_.w)
-      val slotShift = geo.map(_.shift)
-      val slotsArr = slotsByKey(active)
-      val nBL = nB.toLong
-      val hist = histAggregate(hotScan, active.length * cells * 2) {
-        (h, row) =>
-          val slots = slotsArr(row.getInt(0))
-          val b = row.getLong(2)
-          val w = row.getLong(3)
-          var i = 0
-          while (i < slots.length) {
-            val j = slots(i)
-            val bkt =
-              if (b < slotLo(j)) -1L
-              else if (b > slotHi(j)) nBL
-              else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
-            val off = (j * cells + (bkt + 1L).toInt) * 2
-            h(off) += w
-            h(off + 1) += 1L
-            i += 1
-          }
-      }
-
-      geo.zipWithIndex.foreach { case (g, j) =>
-        val s = g.s
-        // one scan over the cumulative weight locates both targets
-        var cum, cum1, ws1, c1 = 0L
-        var b1, b2 = Long.MinValue
-        var idx = 0
-        while (idx < cells && b2 == Long.MinValue) {
-          val off = (j * cells + idx) * 2
-          val ws = hist(off)
-          val c = hist(off + 1)
-          if (c != 0L) {
-            cum += ws
-            if (b1 == Long.MinValue && cum >= s.t1) {
-              b1 = idx - 1L; cum1 = cum; ws1 = ws; c1 = c
-            }
-            if (cum >= s.t2) b2 = idx - 1L
-          }
-          idx += 1
+        // per-pair bucket geometry, integer-exact. A mixed-sign interval
+        // wider than Long.MaxValue would overflow (bits - lo); shifting
+        // both by one bit is order-preserving and never needed twice.
+        val geo = active.map { s =>
+          val wide = s.lo < 0 && s.hi > 0 &&
+            (BigInt(s.hi) - BigInt(s.lo)) >= BigInt(Long.MaxValue)
+          val shift = if (wide) 1 else 0
+          val sLo = s.lo >> shift
+          val sHi = s.hi >> shift
+          Geo(s, shift, sLo, sHi, (sHi - sLo) / nB + 1)
         }
-        require(b1 >= 0 && b1 < nB && b2 >= 0 && b2 < nB,
-          s"targets t1=${s.t1} t2=${s.t2} left the bracketed interval " +
-            s"(b1=$b1 b2=$b2, p=${s.p}) — narrowing invariant broken")
-        val mask = (1L << g.shift) - 1
-        val edge = math.min(s.hi,
-          (math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1) << g.shift) | mask)
-        if (b1 == b2) {
-          s.lo = math.max(s.lo, (g.sLo + b1 * g.w) << g.shift)
-          s.hi = edge
-          s.belowW = cum1 - ws1
-          s.inRows = c1
-        } else {
-          // only unit weights can split the targets (t2 = t1 + 1), and
-          // exactly cum1 = t1 rows sit at or below the upper bit edge
-          // of bucket b1: both order statistics are one conditional
-          // aggregate away
-          s.straddleCut = Some(edge)
-        }
-      }
-    }
-    require(!states.exists(_.open(finish)),
-      s"quantile narrowing did not converge in $maxIter passes")
-
-    // plateau endgame: a single-bit interval IS the value
-    states.filter(s => s.result.isEmpty && s.straddleCut.isEmpty && s.lo == s.hi)
-      .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
-
-    // The straddle and collect endgames resolve EAGERLY in ONE raw RDD
-    // job over the cached scan, like the passes: the pair geometry
-    // rides the task closure, no plan is built, and at most
-    // maxHotKeys·|ps| (v1, v2) come back, so the subset can be
-    // unpersisted and the returned plan stays lazy-cheap. Map side, per
-    // open pair of a row's key: a straddled pair keeps the max bits at
-    // or below its cut and the min bits above it (a partial: the
-    // straddle reads every row of its key); a collecting pair keeps its
-    // ≤ finish interval rows as (bits, weight). One shuffle brings each
-    // pair to one reducer. A straddle's two order statistics are the
-    // max and min of its partials; a collecting pair's rows fold in the
-    // order sort_array(struct(value, weight)) gives (Spark's double
-    // ordering, −0.0 tying 0.0, then weight) from the absolute
-    // below-interval weight, keeping the first value that reaches each
-    // target; with unit weights those are the t1-th and t2-th order
-    // statistics. NaN marks a target no row reached (values are never
-    // NaN: the front ends drop them).
-    val open = states.filter(_.result.isEmpty)
-    if (open.nonEmpty) {
-      val slotsArr = slotsByKey(open)
-      val cut = open.map(_.straddleCut)
-      val lo = open.map(_.lo)
-      val hi = open.map(_.hi)
-      val belowW = open.map(_.belowW)
-      val t1 = open.map(_.t1)
-      val t2 = open.map(_.t2)
-      val n = open.length
-      hotScan.mapPartitions { it =>
-        val rows = Array.fill(n)(new scala.collection.mutable.ArrayBuilder.ofLong)
-        val le = Array.fill(n)(Long.MinValue)
-        val gt = Array.fill(n)(Long.MaxValue)
-        it.foreach { row =>
-          val b = row.getLong(2)
-          slotsArr(row.getInt(0)).foreach { j =>
-            cut(j) match {
-              case Some(c) =>
-                if (b <= c) le(j) = math.max(le(j), b)
-                else gt(j) = math.min(gt(j), b)
-              case None =>
-                if (b >= lo(j) && b <= hi(j)) rows(j).addOne(b).addOne(row.getLong(3))
-            }
-          }
-        }
-        Iterator.tabulate(n)(j =>
-          j -> (if (cut(j).isDefined) Array(le(j), gt(j)) else rows(j).result()))
-      }.reduceByKey(_ ++ _).map { case (j, bs) =>
-        j -> (cut(j) match {
-          case Some(c) => (SortableDoubleBits.fromSortable(bs.filter(_ <= c).max),
-            SortableDoubleBits.fromSortable(bs.filter(_ > c).min))
-          case None =>
-            var acc = belowW(j)
-            var v1, v2 = Double.NaN
-            bs.grouped(2).map(r => (SortableDoubleBits.fromSortable(r(0)), r(1)))
-              .toArray.sortWith { (x, y) =>
-                val c = SQLOrderingUtil.compareDoubles(x._1, y._1)
-                c < 0 || c == 0 && x._2 < y._2
-              }.foreach { case (v, w) =>
-                acc += w
-                if (v1.isNaN && acc >= t1(j)) v1 = v
-                if (v2.isNaN && acc >= t2(j)) v2 = v
+        // Rank location: each pass is a raw RDD job over the subset's
+        // blocks — the pass geometry rides the task closure, every hot
+        // row lands in exactly one monotone bucket PER ACTIVE PAIR of
+        // its key (the slot loop fans rows out per pair — this is how
+        // every requested quantile narrows in one shared scan), and
+        // each cell sums (weight, row count). The -1 / nB sentinel
+        // buckets keep rows outside a pair's interval in its rank
+        // arithmetic (bucket -1 carries the below-interval weight), so
+        // the cumulative weight stays ABSOLUTE and nothing needs
+        // carrying between passes except the interval itself. The
+        // driver receives ONE long array of ≤ [[HistCells]] cells — a
+        // function of the KNOBS, never the data.
+        val cells = nB + 2
+        val slotLo = geo.map(_.s.lo)
+        val slotHi = geo.map(_.s.hi)
+        val slotSLo = geo.map(_.sLo)
+        val slotW = geo.map(_.w)
+        val slotShift = geo.map(_.shift)
+        val slotsArr = slotsByKey(active)
+        val nBL = nB.toLong
+        val hist = histAggregate(subset, active.length * cells * 2) {
+          (h, blk) =>
+            val slots = slotsArr(blk.ki)
+            var r = 0
+            while (r < blk.bits.length && slots.length > 0) {
+              val b = blk.bits(r)
+              val w = blk.weight(r)
+              var i = 0
+              while (i < slots.length) {
+                val j = slots(i)
+                val bkt =
+                  if (b < slotLo(j)) -1L
+                  else if (b > slotHi(j)) nBL
+                  else ((b >> slotShift(j)) - slotSLo(j)) / slotW(j)
+                val off = (j * cells + (bkt + 1L).toInt) * 2
+                h(off) += w
+                h(off + 1) += 1L
+                i += 1
               }
-            (v1, v2)
-        })
-      }.collect().foreach { case (j, (v1, v2)) =>
-        require(!v1.isNaN && !v2.isNaN,
-          "a hot (key, p) endgame reached no target — endgame invariant broken")
-        // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
-        // would manufacture NaN where percentile/quantile_cont return Inf
-        open(j).result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * open(j).frac)
+              r += 1
+            }
+        }
+
+        geo.zipWithIndex.foreach { case (g, j) =>
+          val s = g.s
+          // one scan over the cumulative weight locates both targets
+          var cum, cum1, ws1, c1 = 0L
+          var b1, b2 = Long.MinValue
+          var idx = 0
+          while (idx < cells && b2 == Long.MinValue) {
+            val off = (j * cells + idx) * 2
+            val ws = hist(off)
+            val c = hist(off + 1)
+            if (c != 0L) {
+              cum += ws
+              if (b1 == Long.MinValue && cum >= s.t1) {
+                b1 = idx - 1L; cum1 = cum; ws1 = ws; c1 = c
+              }
+              if (cum >= s.t2) b2 = idx - 1L
+            }
+            idx += 1
+          }
+          require(b1 >= 0 && b1 < nB && b2 >= 0 && b2 < nB,
+            s"targets t1=${s.t1} t2=${s.t2} left the bracketed interval " +
+              s"(b1=$b1 b2=$b2, p=${s.p}) — narrowing invariant broken")
+          val mask = (1L << g.shift) - 1
+          val edge = math.min(s.hi,
+            (math.min(g.sHi, g.sLo + (b1 + 1) * g.w - 1) << g.shift) | mask)
+          if (b1 == b2) {
+            s.lo = math.max(s.lo, (g.sLo + b1 * g.w) << g.shift)
+            s.hi = edge
+            s.belowW = cum1 - ws1
+            s.inRows = c1
+          } else {
+            // only unit weights can split the targets (t2 = t1 + 1), and
+            // exactly cum1 = t1 rows sit at or below the upper bit edge
+            // of bucket b1: both order statistics are one conditional
+            // aggregate away
+            s.straddleCut = Some(edge)
+          }
+        }
       }
-    }
-    hotRows.unpersist()
+      require(!states.exists(_.open(finish)),
+        s"quantile narrowing did not converge in $maxIter passes")
+
+      // plateau endgame: a single-bit interval IS the value
+      states.filter(s => s.result.isEmpty && s.straddleCut.isEmpty && s.lo == s.hi)
+        .foreach(s => s.result = Some(SortableDoubleBits.fromSortable(s.lo)))
+
+      // The straddle and collect endgames resolve EAGERLY in ONE raw RDD
+      // job over the subset, like the passes: the pair geometry rides
+      // the task closure, no plan is built, and at most
+      // maxHotKeys·|ps| (v1, v2) come back, so the subset can be
+      // unpersisted and the returned plan stays lazy-cheap. Map side,
+      // per open pair of a row's key: a straddled pair keeps the max
+      // bits at or below its cut and the min bits above it (a partial:
+      // the straddle reads every row of its key); a collecting pair
+      // keeps its ≤ finish interval rows as (bits, weight). One shuffle
+      // brings each pair to one reducer. A straddle's two order
+      // statistics are the max and min of its partials; a collecting
+      // pair's rows fold in the order sort_array(struct(value, weight))
+      // gives (Spark's double ordering, −0.0 tying 0.0, then weight)
+      // from the absolute below-interval weight, keeping the first value
+      // that reaches each target; with unit weights those are the t1-th
+      // and t2-th order statistics. NaN marks a target no row reached
+      // (values are never NaN: the front ends drop them).
+      val open = states.filter(_.result.isEmpty)
+      if (open.nonEmpty) {
+        val slotsArr = slotsByKey(open)
+        val cut = open.map(_.straddleCut)
+        val lo = open.map(_.lo)
+        val hi = open.map(_.hi)
+        val belowW = open.map(_.belowW)
+        val t1 = open.map(_.t1)
+        val t2 = open.map(_.t2)
+        val n = open.length
+        subset.mapPartitions { it =>
+          val rows = Array.fill(n)(new ArrayBuilder.ofLong)
+          val le = Array.fill(n)(Long.MinValue)
+          val gt = Array.fill(n)(Long.MaxValue)
+          it.foreach { blk =>
+            val slots = slotsArr(blk.ki)
+            if (slots.nonEmpty) blk.bits.indices.foreach { r =>
+              val b = blk.bits(r)
+              slots.foreach { j =>
+                cut(j) match {
+                  case Some(c) =>
+                    if (b <= c) le(j) = math.max(le(j), b)
+                    else gt(j) = math.min(gt(j), b)
+                  case None =>
+                    if (b >= lo(j) && b <= hi(j)) rows(j).addOne(b).addOne(blk.weight(r))
+                }
+              }
+            }
+          }
+          Iterator.tabulate(n)(j =>
+            j -> (if (cut(j).isDefined) Array(le(j), gt(j)) else rows(j).result()))
+        }.reduceByKey(_ ++ _).map { case (j, bs) =>
+          j -> (cut(j) match {
+            case Some(c) => (SortableDoubleBits.fromSortable(bs.filter(_ <= c).max),
+              SortableDoubleBits.fromSortable(bs.filter(_ > c).min))
+            case None =>
+              var acc = belowW(j)
+              var v1, v2 = Double.NaN
+              bs.grouped(2).map(r => (SortableDoubleBits.fromSortable(r(0)), r(1)))
+                .toArray.sortWith { (x, y) =>
+                  val c = SQLOrderingUtil.compareDoubles(x._1, y._1)
+                  c < 0 || c == 0 && x._2 < y._2
+                }.foreach { case (v, w) =>
+                  acc += w
+                  if (v1.isNaN && acc >= t1(j)) v1 = v
+                  if (v2.isNaN && acc >= t2(j)) v2 = v
+                }
+              (v1, v2)
+          })
+        }.collect().foreach { case (j, (v1, v2)) =>
+          require(!v1.isNaN && !v2.isNaN,
+            "a hot (key, p) endgame reached no target — endgame invariant broken")
+          // equal order statistics return v1 directly: Inf + (Inf-Inf)*f
+          // would manufacture NaN where percentile/quantile_cont return Inf
+          open(j).result = Some(if (v1 == v2) v1 else v1 + (v2 - v1) * open(j).frac)
+        }
+      }
+    } finally subset.unpersist()
     require(states.forall(_.result.isDefined),
       "a hot (key, p) resolved no result — endgame invariant broken")
 
+    val keyField = StructField("__k", keyType, nullable = true)
     val hotQuantiles = spark.createDataFrame(
       states.map(s => Row(s.key, s.p, s.result.get)).toSeq.asJava,
       StructType(Seq(keyField, StructField("__p", DoubleType),
         StructField("__med", DoubleType))))
     // every key hot: no small key is left, so the result is the driver
-    // rows alone, not a scan of the fact anti-joined to nothing
-    finishKeys(if (hotKeys.length == nKeys) hotQuantiles
-      else small(hotJoin("left_anti")).unionByName(hotQuantiles))
+    // rows alone, not a scan of the fact anti-joined to nothing. Else
+    // the small keys are the rows whose key is NOT NULL-SAFE equal
+    // (`<=>`) to a hot key: the null surrogate is a canonical hot key,
+    // and an equality join would silently route a hot null group back
+    // to the small path
+    finishKeys(if (hot.length == nKeys) hotQuantiles else {
+      val hotKeys = spark.createDataFrame(hot.map(r => Row(r.get(0))).toSeq.asJava,
+        StructType(Seq(keyField.copy(name = "__hk"))))
+      small(base.join(broadcast(hotKeys), col("__k") <=> col("__hk"), "left_anti"))
+        .unionByName(hotQuantiles)
+    })
   }
 
   /** `q_median_narrow` gate surface: the narrowing median against the

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -42,12 +44,6 @@ class QuantilesSpec extends SparkSpec {
       assert(SortableDoubleBits.fromSortable(SortableDoubleBits.toSortable(d))
         .equals(d)) // .equals: bit-exact round trip, including -0.0
     }
-    // the Expression agrees with the driver-side map, and NaN -> null
-    val got = Seq(1.5, -2.5, Double.NaN).toDF("d")
-      .select(SortableDoubleBits.sortableBits(col("d"))).collect()
-    assert(got(0).getLong(0) == SortableDoubleBits.toSortable(1.5))
-    assert(got(1).getLong(0) == SortableDoubleBits.toSortable(-2.5))
-    assert(got(2).isNullAt(0))
   }
 
   test("narrowing median equals the classic exact median on mixed groups") {
@@ -304,6 +300,117 @@ class QuantilesSpec extends SparkSpec {
       .agg(count(lit(1)), min(col("w"))).collect())
     assert(callJobs == countJobs,
       s"classification ran $callJobs jobs, a per-key count $countJobs")
+  }
+
+  test("hot keys match as Spark groups them: signed zeros, NaN bit " +
+    "patterns and a null key, beside a small key") {
+    // each hot group is two halves under the threshold, so a half the
+    // extraction failed to match would break the narrowing's counts or
+    // come back as a group of its own
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    val keys: Seq[(java.lang.Double, Int)] = Seq((-0.0, 150), (0.0, 150),
+      (Double.NaN, 130), (nan2, 130), (null, 220), (5.0, 20))
+    val rows: Seq[Row] = keys.zipWithIndex.flatMap { case ((k, n), salt) =>
+      Seq.tabulate(n)(i => Row(k, hashDouble(i, 90 + salt, 1e3), 1L + (i % 3)))
+    }
+    val schema = StructType(Seq(StructField("k", DoubleType, nullable = true),
+      StructField("v", DoubleType), StructField("w", LongType)))
+    // driver rows, shipped to tasks as UnsafeRow bytes: Java serialization
+    // of the boxed doubles (a parallelized Seq[Row]) would canonicalize
+    // the second NaN
+    val df = spark.createDataFrame(rows.asJava, schema)
+    // both NaN bit patterns reach the engine's rows
+    assert(df.collect().filter(r => !r.isNullAt(0) && r.getDouble(0).isNaN)
+      .map(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0))).distinct.length == 2)
+    def group(k: Any): String = k match {
+      case null => "null"
+      case d: Double if d.isNaN => "NaN"
+      case d: Double => (d + 0.0).toString // -0.0 + 0.0 is 0.0
+    }
+    def byGroup(got: DataFrame): Map[(String, Double), Double] = {
+      val out = got.collect()
+      val m = out.map(r => (group(r.get(0)), r.getDouble(1)) -> r.getDouble(2)).toMap
+      assert(m.size == out.length, s"a group came back twice: ${out.toSeq}")
+      m
+    }
+    val ps = Seq(0.25, 0.5, 0.9)
+    val classic = df.groupBy("k").agg(percentile(col("v"), lit(ps.toArray)).as("q"))
+      .collect().flatMap(r => ps.zip(r.getSeq[Double](1)).map {
+        case (p, q) => (group(r.get(0)), p) -> q
+      }).toMap
+    assert(classic.size == 4 * ps.size)
+    val got = byGroup(Quantiles.exactQuantilesAnyScale(df, "k", "v", ps,
+      hotThreshold = 200, buckets = 8, finish = 16))
+    assert(got.keySet == classic.keySet)
+    classic.foreach { case (kp, q) =>
+      assert(math.abs(got(kp) - q) <= math.max(1e-9, math.abs(q) * 1e-12),
+        s"$kp: got ${got(kp)}, want $q")
+    }
+    val wWant = rows.groupBy(r => group(r.get(0))).toSeq.flatMap { case (g, rs) =>
+      ps.map(p => (g, p) -> referenceWeightedQ(rs.map(r => (r.getDouble(1), r.getLong(2))), p))
+    }.toMap
+    assert(byGroup(Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w", ps,
+      hotThreshold = 200, buckets = 8, finish = 16,
+      route = Quantiles.HotRoute.Narrow)) == wWant)
+  }
+
+  test("a call that fails after persisting its hot subset unpersists it") {
+    val df = Seq.tabulate(3000)(i => ("h", hashDouble(i, 95, 1e6), 1L + (i % 3)))
+      .toDF("k", "v", "w")
+    val sc = spark.sparkContext
+    // run `call` in a job group of its own that is cancelled, with every
+    // later job of it, at the first job to start once a new RDD is
+    // persisted; two buckets a pass keep the call running for dozens
+    // of passes after that
+    def failAfterPersist(call: => DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val group = s"quantiles-fail-${java.util.UUID.randomUUID}"
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == group &&
+              !sc.getPersistentRDDs.keySet.subsetOf(before))
+            sc.cancelJobGroupAndFutureJobs(group)
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, group)
+      try {
+        intercept[org.apache.spark.SparkException](call)
+        assert(sc.getPersistentRDDs.keySet == before,
+          "the failed call left its hot subset persisted")
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    failAfterPersist(Quantiles.exactQuantilesAnyScale(df, "k", "v", Seq(0.5),
+      hotThreshold = 100, buckets = 2, finish = 8))
+    failAfterPersist(Quantiles.exactWeightedQuantilesAnyScale(df, "k", "v", "w",
+      Seq(0.5), hotThreshold = 100, buckets = 2, finish = 8,
+      route = Quantiles.HotRoute.Narrow))
+  }
+
+  test("an exact call runs its classification's jobs, one per pass and " +
+    "one endgame job; weighted runs no more than unweighted") {
+    val df = landed("quantiles_jobs",
+      Seq.tabulate(500)(i => ("a", hashDouble(i, 96, 1e4), 1L + (i % 4))) ++
+        Seq.tabulate(400)(i => ("b", hashDouble(i, 97, 1e2), 1L + (i % 3))))
+    val (_, classJobs) = jobsOf(df.groupBy("k").agg(count(lit(1))).collect())
+    // finish = 1000 holds every key, so the endgame reads the pass-0
+    // brackets directly (0 passes); at 2^16 buckets one pass leaves each
+    // target's bucket a handful of rows, under finish = 16 (1 pass)
+    Seq(1000L -> 0, 16L -> 1).foreach { case (finish, passes) =>
+      val (_, unweighted) = jobsOf(Quantiles.exactQuantilesAnyScale(df, "k", "v",
+        Seq(0.5, 0.9), hotThreshold = 100, buckets = 1 << 16, finish = finish))
+      val (_, weighted) = jobsOf(Quantiles.exactWeightedQuantilesAnyScale(df, "k",
+        "v", "w", Seq(0.5, 0.9), hotThreshold = 100, buckets = 1 << 16,
+        finish = finish, route = Quantiles.HotRoute.Narrow))
+      assert(unweighted == classJobs + passes + 1,
+        s"finish=$finish: unweighted ran $unweighted jobs, classification $classJobs")
+      assert(weighted == unweighted,
+        s"finish=$finish: weighted ran $weighted jobs, unweighted $unweighted")
+    }
   }
 
   test("weighted sketch: exact when every key fits the sample; " +
