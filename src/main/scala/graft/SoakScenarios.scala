@@ -117,12 +117,103 @@ private[graft] object SoakScenarios {
     val skewKey = "spark.sql.adaptive.skewJoin.enabled"
     val fKey = "spark.sql.adaptive.skewJoin.skewedPartitionFactor"
     val bKey = "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
-    // codegen/classload warm-up on sf0.1 (same plan shapes, different
-    // dir) so the FIRST timed variant doesn't absorb compilation —
-    // without this the run order masquerades as a skew effect
+    // ---- AGGREGATION under the same Zipf key. Three aggregate
+    // classes, because "skewed groupBy" is not one phenomenon:
+    //  * algebraic (sum/count) — map-side partial aggregation folds
+    //    the hot key to one row per map task BEFORE the shuffle.
+    //    Expectation: flat; the salted twin quantifies what plan-time
+    //    salting COSTS when it isn't needed.
+    //  * holistic (exact median) — percentile buffers every value of
+    //    a group on ONE reducer; no mergeable partial exists, AQE
+    //    cannot split an aggregation, salting cannot decompose a
+    //    median. Measured beside the mergeable sketch and the
+    //    value-domain narrowing.
+    //  * exact distinct — Spark plans the dedup shuffle on (key,
+    //    VALUE), which spreads the hot key structurally; the
+    //    value-salted two-phase rewrite is the same idea made
+    //    explicit. Expectation: both flat.
+    def li(dir: String) = Tables.load(spark, dir, "lineitem")
+    def aggSum(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(sum(col("l_extendedprice")).as("s"), count(lit(1)).as("n"))
+    def aggSumSalted(dir: String, nSalt: Int): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"),
+        pmod(xxhash64(col("l_linenumber"), col("l_partkey")), lit(nSalt))
+          .as("__salt"))
+      .agg(sum(col("l_extendedprice")).as("ps"), count(lit(1)).as("pn"))
+      .groupBy(col("l_orderkey"))
+      .agg(sum(col("ps")).as("s"), sum(col("pn")).as("n"))
+    def aggMedian(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(expr("percentile(l_extendedprice, 0.5)").as("med"))
+    def aggMedianSketch(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(expr("percentile_approx(l_extendedprice, 0.5, 100)").as("med"))
+    // a per-row-distinct value (hash noise at 1e-9) forces percentile
+    // to buffer every VALUE of the hot key in one reducer — the
+    // regime where the mergeable sketch is REQUIRED, not just faster
+    def hcValue = col("l_extendedprice") +
+      pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(1000000L))
+        .cast("double") * lit(1e-9)
+    def aggMedianHC(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(percentile_approx(hcValue, lit(0.5), lit(100)).as("med"))
+    def aggMedianHCExact(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(expr("percentile(l_extendedprice + cast(pmod(xxhash64(l_orderkey, l_linenumber), 1000000) as double) * 1e-9, 0.5)").as("med"))
+    // exact AND memory-bounded: value-domain narrowing takes the
+    // count-map for every key under the threshold and histogram
+    // refinement (O(buckets) state) for the hot keys
+    def aggMedianHCNarrow(dir: String): DataFrame =
+      Quantiles.exactMedianAnyScale(
+        li(dir).select(col("l_orderkey"), hcValue.as("__hc")),
+        "l_orderkey", "__hc", hotThreshold = 1000000L)
+    def aggDistinct(dir: String): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"))
+      .agg(countDistinct(col("l_partkey")).as("nd"))
+    def aggDistinctSalted(dir: String, nSalt: Int): DataFrame = li(dir)
+      .groupBy(col("l_orderkey"),
+        pmod(xxhash64(col("l_partkey")), lit(nSalt)).as("__salt"))
+      .agg(countDistinct(col("l_partkey")).as("pd"))
+      .groupBy(col("l_orderkey"))
+      .agg(sum(col("pd")).as("nd"))
+    // weighted twins on the same per-row-distinct value, quantity
+    // weights: `sort` is the window-cumsum replay (the hot key's rows
+    // sort in ONE window task), `narrow` the weighted narrowing,
+    // `auto` the DEFAULT route — the cost model must pick the better
+    // variant per decade
+    def wmedInput(dir: String): DataFrame = li(dir)
+      .select(col("l_orderkey"), hcValue.as("__hc"),
+        col("l_quantity").cast("long").as("__w"))
+    def aggWMedianHCSort(dir: String): DataFrame = {
+      val byV = Window.partitionBy(col("l_orderkey")).orderBy(col("__hc"))
+      val all = Window.partitionBy(col("l_orderkey"))
+      wmedInput(dir)
+        .withColumn("__cw", sum(col("__w")).over(byV))
+        .withColumn("__tw", sum(col("__w")).over(all))
+        .filter(col("__cw") * 2 >= col("__tw"))
+        .groupBy(col("l_orderkey"))
+        .agg(min(col("__hc")).as("wmed"))
+    }
+    def aggWMedianHC(dir: String, route: Option[Quantiles.HotRoute]) =
+      Quantiles.auto(wmedInput(dir),
+        "l_orderkey", "__hc", Seq(0.5), weight = Some("__w"),
+        hotThreshold = 1000000L,
+        route = route.getOrElse(Quantiles.HotRoute.CostAware))
+
+    // codegen/classload warm-up on small inputs (same plan shapes,
+    // different dir) so the FIRST timed variant of a shape doesn't
+    // absorb compilation — without this the run order masquerades as a
+    // skew effect. The joins warm on sf0.1. The quantile shapes warm on
+    // the scale-1 Zipf corpus: warmed on sf0.1 instead, the first of
+    // two identical weighted narrowings still read ~1.5x the second.
     val warm = Soak.testdata("sf0.1")
     noop(plainRevenue(spark, warm))
     noop(Temporal.saltedJoinRevenue(spark, warm, nSalt = 4))
+    val warmSkew = materializeSkew(spark, 1,
+      Soak.materialize(spark, 1, needFacts = true, needDocs = false))
+    noop(aggMedianHCNarrow(warmSkew))
+    noop(aggWMedianHC(warmSkew, Some(Quantiles.HotRoute.Narrow)))
 
     for (k <- run.scales(10)) {
       val base = Soak.materialize(spark, k, needFacts = true, needDocs = false)
@@ -189,90 +280,6 @@ private[graft] object SoakScenarios {
       variant("salted4") {
         noop(Temporal.saltedJoinRevenue(spark, skewed, nSalt = 4))
       }
-      // ---- AGGREGATION under the same Zipf key. Three aggregate
-      // classes, because "skewed groupBy" is not one phenomenon:
-      //  * algebraic (sum/count) — map-side partial aggregation folds
-      //    the hot key to one row per map task BEFORE the shuffle.
-      //    Expectation: flat; the salted twin quantifies what plan-time
-      //    salting COSTS when it isn't needed.
-      //  * holistic (exact median) — percentile buffers every value of
-      //    a group on ONE reducer; no mergeable partial exists, AQE
-      //    cannot split an aggregation, salting cannot decompose a
-      //    median. Measured beside the mergeable sketch and the
-      //    value-domain narrowing.
-      //  * exact distinct — Spark plans the dedup shuffle on (key,
-      //    VALUE), which spreads the hot key structurally; the
-      //    value-salted two-phase rewrite is the same idea made
-      //    explicit. Expectation: both flat.
-      def li(dir: String) = Tables.load(spark, dir, "lineitem")
-      def aggSum(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice")).as("s"), count(lit(1)).as("n"))
-      def aggSumSalted(dir: String, nSalt: Int): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"),
-          pmod(xxhash64(col("l_linenumber"), col("l_partkey")), lit(nSalt))
-            .as("__salt"))
-        .agg(sum(col("l_extendedprice")).as("ps"), count(lit(1)).as("pn"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("ps")).as("s"), sum(col("pn")).as("n"))
-      def aggMedian(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(expr("percentile(l_extendedprice, 0.5)").as("med"))
-      def aggMedianSketch(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(expr("percentile_approx(l_extendedprice, 0.5, 100)").as("med"))
-      // a per-row-distinct value (hash noise at 1e-9) forces percentile
-      // to buffer every VALUE of the hot key in one reducer — the
-      // regime where the mergeable sketch is REQUIRED, not just faster
-      def hcValue = col("l_extendedprice") +
-        pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(1000000L))
-          .cast("double") * lit(1e-9)
-      def aggMedianHC(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(percentile_approx(hcValue, lit(0.5), lit(100)).as("med"))
-      def aggMedianHCExact(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(expr("percentile(l_extendedprice + cast(pmod(xxhash64(l_orderkey, l_linenumber), 1000000) as double) * 1e-9, 0.5)").as("med"))
-      // exact AND memory-bounded: value-domain narrowing takes the
-      // count-map for every key under the threshold and histogram
-      // refinement (O(buckets) state) for the hot keys
-      def aggMedianHCNarrow(dir: String): DataFrame =
-        Quantiles.exactMedianAnyScale(
-          li(dir).select(col("l_orderkey"), hcValue.as("__hc")),
-          "l_orderkey", "__hc", hotThreshold = 1000000L)
-      def aggDistinct(dir: String): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"))
-        .agg(countDistinct(col("l_partkey")).as("nd"))
-      def aggDistinctSalted(dir: String, nSalt: Int): DataFrame = li(dir)
-        .groupBy(col("l_orderkey"),
-          pmod(xxhash64(col("l_partkey")), lit(nSalt)).as("__salt"))
-        .agg(countDistinct(col("l_partkey")).as("pd"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("pd")).as("nd"))
-      // weighted twins on the same per-row-distinct value, quantity
-      // weights: `sort` is the window-cumsum replay (the hot key's rows
-      // sort in ONE window task), `narrow` the weighted narrowing,
-      // `auto` the DEFAULT route — the cost model must pick the better
-      // variant per decade
-      def wmedInput(dir: String): DataFrame = li(dir)
-        .select(col("l_orderkey"), hcValue.as("__hc"),
-          col("l_quantity").cast("long").as("__w"))
-      def aggWMedianHCSort(dir: String): DataFrame = {
-        val byV = Window.partitionBy(col("l_orderkey")).orderBy(col("__hc"))
-        val all = Window.partitionBy(col("l_orderkey"))
-        wmedInput(dir)
-          .withColumn("__cw", sum(col("__w")).over(byV))
-          .withColumn("__tw", sum(col("__w")).over(all))
-          .filter(col("__cw") * 2 >= col("__tw"))
-          .groupBy(col("l_orderkey"))
-          .agg(min(col("__hc")).as("wmed"))
-      }
-      def aggWMedianHC(dir: String, route: Option[Quantiles.HotRoute]) =
-        Quantiles.auto(wmedInput(dir),
-          "l_orderkey", "__hc", Seq(0.5), weight = Some("__w"),
-          hotThreshold = 1000000L,
-          route = route.getOrElse(Quantiles.HotRoute.CostAware))
-
       variant("aggsum_uniform") { noop(aggSum(base)) }
       variant("aggsum_plain") { noop(aggSum(skewed)) }
       variant("aggsum_salted8") { noop(aggSumSalted(skewed, 8)) }
@@ -1104,7 +1111,7 @@ private[graft] object SoakScenarios {
           .withColumn("rk", row_number().over(w)).filter(col("rk") <= k))
       }
       lazy val exact = exactTopK(Similarity.NumQueries)
-      def explode16 = Similarity.pqSubvectorsPublic(emb, 4, 16)
+      def explode16 = Similarity.pqSubvectors(emb, 4, 16)
       /** Query-BLIND sample codebook: codewords drawn past the first
         * `nq` ids — the deployment-honest baseline (indexes are built
         * before queries).
@@ -1123,17 +1130,17 @@ private[graft] object SoakScenarios {
       variant("sample16")(recall(Similarity.pqTopK(spark, dir)))
       variant("sample16_blind") {
         val ex = explode16
-        recall(Similarity.pqAdcTopKPublic(ex, blind(ex, Similarity.NumQueries), k, 4))
+        recall(Similarity.pqAdcTopK(ex, blind(ex, Similarity.NumQueries), k, 4, None))
       }
       for (iters <- Seq(1, 10, 30)) variant(s"trained_iter$iters") {
         val ex = explode16
-        recall(Similarity.pqAdcTopKPublic(ex,
-          Similarity.pqTrainedCodebook(ex, 4, 16, maxIter = iters), k, 4))
+        recall(Similarity.pqAdcTopK(ex,
+          Similarity.pqTrainedCodebook(ex, 4, 16, maxIter = iters), k, 4, None))
       }
       for (nCode <- Seq(32, 64)) variant(s"trained_c$nCode") {
         val ex = explode16
-        recall(Similarity.pqAdcTopKPublic(ex,
-          Similarity.pqTrainedCodebook(ex, 4, nCode), k, 4))
+        recall(Similarity.pqAdcTopK(ex,
+          Similarity.pqTrainedCodebook(ex, 4, nCode), k, 4, None))
       }
       // gate calibration: the sim_pq_trained verdict margins at its
       // actual query width — trained hits vs query-blind sample hits
@@ -1142,10 +1149,10 @@ private[graft] object SoakScenarios {
         val nq = 64
         val exact64 = exactTopK(nq)
         val ex = explode16
-        val tHits = (exact64 & pairs(Similarity.pqAdcTopKPublic(ex,
-          Similarity.pqTrainedCodebook(ex, 4, 16), k, 4, nq))).size
+        val tHits = (exact64 & pairs(Similarity.pqAdcTopK(ex,
+          Similarity.pqTrainedCodebook(ex, 4, 16), k, 4, None, nq))).size
         val sHits = (exact64 &
-          pairs(Similarity.pqAdcTopKPublic(ex, blind(ex, nq), k, 4, nq))).size
+          pairs(Similarity.pqAdcTopK(ex, blind(ex, nq), k, 4, None, nq))).size
         val verdicts = Similarity.pqTrainedGate(spark, dir).collect()(0)
         Seq("slots" -> exact64.size, "trained_hits" -> tHits,
           "blind_hits" -> sHits,

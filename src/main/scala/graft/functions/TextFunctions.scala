@@ -64,6 +64,19 @@ object TextFunctions {
   def hashedTokenWindows(toks: Column, n: Int): Column =
     TokenWindowHash.tokenWindowHashes(toks, n)
 
+  /** Per-document gram set: `(doc_id, h)` for each DISTINCT hashed
+    * `window`-token window of `text` — the decontamination, novelty and
+    * boilerplate kernel. Distinct within the row (array_distinct before
+    * the explode), so no corpus-wide distinct-(doc, gram) shuffle is
+    * ever planned and no window string is built. toks materializes in
+    * its own projection first: under the Generate, the tokenizer would
+    * otherwise run interpreted.
+    */
+  def docGrams(docs: DataFrame, text: Column, window: Int): DataFrame = docs
+    .select(col("doc_id"), words(lower(text)).as("toks"))
+    .select(col("doc_id"),
+      explode(array_distinct(hashedTokenWindows(col("toks"), window))).as("h"))
+
   /** Per-document token counts (`text_tokens`) — one TextScanStats
     * byte pass (whitespace tokens = space count + 1, the split-on-
     * single-space convention).
@@ -777,25 +790,16 @@ object TextFunctions {
       evalBroadcastMax: Long = 8000000L): DataFrame = {
     val d = Tables.load(spark, dir, "documents")
     val isEval = col("doc_id") % 97 === 0
-    // Per-document distinct grams computed INSIDE the row
-    // (array_distinct on the native TokenWindowHashes ids, before the
-    // explode): the corpus-wide distinct-(doc,gram) shuffle of the
-    // naive shape disappears — dedup within a doc needs no data
-    // movement at all — and no window string is ever built (gram ids
-    // are internal: only counts surface). The eval filter runs BEFORE
-    // tokenize on its branch, so the held-out 1/97 slice is the only
-    // part of the corpus tokenized twice.
-    def grams(docs: DataFrame): DataFrame = docs
-      .select(col("doc_id"), words(lower(col("text"))).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(hashedTokenWindows(col("toks"), window))).as("h"))
-    // Stabilized (round 17, VERDICT r16 item 6): the routing count()
-    // and the join are two consumers of the same eval-gram slice — a
-    // lazy frame computed the branch twice (once for the probe, once
-    // in the plan). One materialization makes the size probe free.
+    // The eval filter runs BEFORE tokenize on its branch, so the
+    // held-out 1/97 slice is the only part of the corpus tokenized
+    // twice. Stabilized (round 17, VERDICT r16 item 6): the routing
+    // count() and the join are two consumers of the same eval-gram
+    // slice — a lazy frame computed the branch twice (once for the
+    // probe, once in the plan). One materialization makes the size
+    // probe free.
     val evalGrams = graft.operators.Stabilize(
-      grams(d.filter(isEval)).select(col("h")).distinct()
-        .withColumn("hit", lit(1L)))
+      docGrams(d.filter(isEval), col("text"), window)
+        .select(col("h")).distinct().withColumn("hit", lit(1L)))
     // Route on the measured eval-gram count (see scaladoc): under the
     // threshold the broadcast keeps the training grams from shuffling
     // for the join and the per-doc groupBy collapses map-side (an
@@ -803,7 +807,7 @@ object TextFunctions {
     val evalSide =
       if (evalGrams.count() <= evalBroadcastMax) broadcast(evalGrams)
       else evalGrams
-    val perDoc = grams(d.filter(!isEval))
+    val perDoc = docGrams(d.filter(!isEval), col("text"), window)
       .join(evalSide, Seq("h"), "left")
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_grams"),
@@ -838,18 +842,15 @@ object TextFunctions {
     // text_contamination happens to share no 8-gram with this
     // synthetic training set — vacuous provenance)
     val isEval = col("doc_id") % 10 === 0
-    def grams(docs: DataFrame): DataFrame = docs
-      .select(col("doc_id"), words(lower(col("text"))).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(hashedTokenWindows(col("toks"), window))).as("h"))
     // Stabilized like [[contamination]]: the probe count and the join
     // share one materialization of the eval (doc, gram) set.
-    val evalGrams = graft.operators.Stabilize(grams(d.filter(isEval))
-      .select(col("doc_id").as("eval_doc"), col("h")).distinct())
+    val evalGrams = graft.operators.Stabilize(
+      docGrams(d.filter(isEval), col("text"), window)
+        .select(col("doc_id").as("eval_doc"), col("h")).distinct())
     val evalSide =
       if (evalGrams.count() <= evalBroadcastMax) broadcast(evalGrams)
       else evalGrams
-    grams(d.filter(!isEval))
+    docGrams(d.filter(!isEval), col("text"), window)
       .join(evalSide, Seq("h"))
       .groupBy(col("doc_id").as("train_doc"), col("eval_doc"))
       .agg(countDistinct(col("h")).as("n_shared"))
@@ -984,37 +985,17 @@ object TextFunctions {
   /** Token-budget sequence packing (`text_batch_pack`): assign each
     * document (in doc_id order) to the training batch its running
     * token total lands in — batch_id = floor(tokens_before / capacity).
-    * The running total is a SCALABLE two-phase prefix sum, not a
-    * single-partition window: range-partition by doc_id, local cumsum
-    * per partition, then add each partition's broadcast prefix offset
-    * (one tiny row per partition crosses the driver). The result is a
-    * pure function of doc_id order — partition boundaries cannot
-    * change it — so a single-threaded engine replays it exactly.
+    * The running total is `Prefix.runningSum` over doc_id, never a
+    * single-partition window. The result is a pure function of doc_id
+    * order — partition boundaries cannot change it — so a single-
+    * threaded engine replays it exactly.
     */
   def batchPack(spark: SparkSession, dir: String,
       capacity: Long = 512L, numParts: Int = 8): DataFrame = {
     val d = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), nWords(lower(col("text"))).as("n_tok"))
-      .repartitionByRange(numParts, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // Stabilize (checkpoint, not cache): pins pid against recompute
-    // without leaving a CacheManager entry for the session's lifetime.
-    val local = graft.operators.Stabilize(
-      d.withColumn("local_cum", sum(col("n_tok")).over(w)))
-    // Partition totals are numParts rows — the only driver-side data.
-    val totals = local.groupBy(col("pid"))
-      .agg(sum(col("n_tok")).as("ptotal"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = totals.scanLeft(0L)(_ + _._2).init
-      .zip(totals.map(_._1)).map { case (off, pid) => (pid, off) }
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("pid", "offset")
-    local.join(broadcast(offDf), "pid")
-      .withColumn("cum", col("local_cum") + col("offset"))
+    graft.operators.Prefix
+      .runningSum(d, col("n_tok"), "cum", Seq(col("doc_id")), numParts = numParts)
       .select(col("doc_id"), col("n_tok"),
         floor((col("cum") - col("n_tok")).cast("double") / capacity)
           .cast("long").as("batch_id"))
@@ -1134,15 +1115,12 @@ object TextFunctions {
     // Generate, the lambda re-runs the regex tokenizer per window).
     val toks = d
       .select(col("doc_id"), words(lower(col("text"))).as("toks"))
-    // Count pass: per-doc distinct via array_distinct BEFORE the
-    // explode — the corpus-wide distinct-(doc,gram) SHUFFLE of the
-    // naive shape disappears (in-row dedup needs no data movement),
-    // and the df count is one map-side-combinable aggregation. The
-    // 1000x soak measured the former distinct exchange (236M rows)
-    // spilling at 23x per data decade.
-    val cand = toks
-      .select(col("doc_id"),
-        explode(array_distinct(hashedTokenWindows(col("toks"), n))).as("h"))
+    // Count pass over the per-doc gram sets (docGrams): no corpus-wide
+    // distinct-(doc,gram) SHUFFLE, and the df count is one
+    // map-side-combinable aggregation. The 1000x soak measured the
+    // former distinct exchange (236M rows) spilling at 23x per data
+    // decade.
+    val cand = docGrams(d, col("text"), n)
       .groupBy(col("h")).agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
     // One representative occurrence per surviving gram id: regenerate
@@ -1179,13 +1157,8 @@ object TextFunctions {
     */
   def ngramNovelty(spark: SparkSession, dir: String, n: Int = 6): DataFrame = {
     val d = Tables.load(spark, dir, "documents")
-    // per-doc distinct via array_distinct on the native hash ids —
-    // kills both the corpus-wide distinct SHUFFLE and the window
-    // string build (gram ids are internal; only counts surface)
-    val grams = d
-      .select(col("doc_id"), words(lower(col("text"))).as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(hashedTokenWindows(col("toks"), n))).as("h"))
+    // gram ids are internal; only counts surface
+    val grams = docGrams(d, col("text"), n)
     val firstOwner = grams.groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(firstOwner, Seq("h"))
       .groupBy(col("doc_id"))

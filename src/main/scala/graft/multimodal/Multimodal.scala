@@ -232,42 +232,19 @@ object Multimodal {
   /** Modality-aware shard packing (`mm_shard_pack`): assign each media
     * item to a fixed-size output shard per modality (the WebDataset/
     * tar-shard layout step before training). shard_id = cumulative
-    * byte offset within (kind, doc_id order) ÷ shardBytes, computed
-    * with the SAME scalable two-phase prefix sum as text_batch_pack —
-    * local cumsum per range partition, per-(partition, kind) totals
-    * (numParts×3 tiny rows on the driver), broadcast offsets — never a
-    * single-partition window. The id-ordered offset rule is engine-
-    * and layout-independent, so DuckDB replays it as a plain window
-    * cumsum.
+    * byte offset within (kind, doc_id order) ÷ shardBytes, the running
+    * total being `Prefix.runningSum` per kind — never a single-
+    * partition window. The id-ordered offset rule is engine- and
+    * layout-independent, so DuckDB replays it as a plain window cumsum.
     */
   def shardPack(spark: SparkSession, dir: String,
       shardBytes: Long = 4096L, numParts: Int = 8): DataFrame = {
     val m = mediaTable(spark, dir)
       .select(col("doc_id"), col("kind"),
         length(col("payload")).cast("long").as("n_bytes"))
-      .repartitionByRange(numParts, col("kind"), col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid"), col("kind")).orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // Stabilize (checkpoint, not cache): pins pid against recompute
-    // without leaving a CacheManager entry for the session's lifetime.
-    val local = graft.operators.Stabilize(
-      m.withColumn("local_cum", sum(col("n_bytes")).over(w)))
-    // (pid, kind) byte totals — the only driver-side data
-    val totals = local.groupBy(col("pid"), col("kind"))
-      .agg(sum(col("n_bytes")).as("ptotal"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-    val offsets = totals.groupBy(_._2).toSeq.flatMap { case (kind, rows) =>
-      val sorted = rows.sortBy(_._1)
-      sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._3).init)
-        .map { case (pid, off) => (pid, kind, off) }
-    }
-    import spark.implicits._
-    val offDf = offsets.toDF("pid", "kind", "offset")
-    local.join(broadcast(offDf), Seq("pid", "kind"))
-      .withColumn("cum", col("local_cum") + col("offset"))
+    graft.operators.Prefix
+      .runningSum(m, col("n_bytes"), "cum", Seq(col("doc_id")),
+        partCols = Seq("kind"), numParts = numParts)
       .select(col("doc_id"), col("kind"), col("n_bytes"),
         floor((col("cum") - col("n_bytes")).cast("double") / shardBytes)
           .cast("long").as("shard_id"))

@@ -254,51 +254,20 @@ object Fusion {
 
   /** End-to-end entity resolution (`q_entity_resolution`): the fuzzy
     * pair graph from `fuzzyNameJoin` collapsed to canonical entities —
-    * min-label propagation over the name graph (the dedup_clusters
-    * loop on strings: O(diameter) co-partitioned join+agg rounds,
-    * localCheckpoint truncating the iterative lineage), every name
-    * mapped to its cluster's lexicographic min as the survivor, plus
-    * the cluster size. This is the master-data step the reference's
-    * two-lineage fusion implies but does by exact key only; oracle =
-    * DuckDB recursive-CTE transitive closure over the same pairs.
+    * `Dedup.minLabels` over the name graph (the dedup_clusters
+    * propagation on strings), every name mapped to its cluster's
+    * lexicographic min as the survivor, plus the cluster size. This is
+    * the master-data step the reference's two-lineage fusion implies
+    * but does by exact key only; oracle = DuckDB recursive-CTE
+    * transitive closure over the same pairs.
     */
-  def entityResolution(spark: SparkSession, dir: String,
-      maxIter: Int = 20): DataFrame = {
+  def entityResolution(spark: SparkSession, dir: String): DataFrame = {
     val names = Tables.load(spark, dir, "part").select(col("p_name")).distinct()
     val pairs = fuzzyNameJoin(spark, dir).select(col("name_a"), col("name_b"))
-    val edges = pairs
-      .union(pairs.select(col("name_b").as("name_a"), col("name_a").as("name_b")))
-      .toDF("src", "dst").cache()
-    var labels = edges.select(col("src").as("name")).distinct()
-      .withColumn("lbl", col("name")).transform(Stabilize.apply)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels, edges("dst") === labels("name"))
-        .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
-      // Convergence count observed on the checkpoint materialization
-      // (round 17, the nearDupClustersOf fix): one action per round
-      // instead of two.
-      val obs = new org.apache.spark.sql.Observation()
-      val joined = labels
-        .join(nbrMin, labels("name") === nbrMin("src"), "left")
-        .select(col("name"), col("lbl"), col("nbr_lbl"))
-        .observe(obs, count(when(col("nbr_lbl") < col("lbl"), lit(1)))
-          .as("n_changed"))
-        .transform(Stabilize.apply)
-      changed = obs.get("n_changed").asInstanceOf[Long]
-      labels = joined.select(col("name"),
-        least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-      iter += 1
-    }
-    // The oracle is a full transitive closure: a component whose
-    // propagation distance exceeds maxIter would silently diverge from
-    // it, so non-convergence must fail loudly, not return wrong labels.
-    require(changed == 0,
-      s"entityResolution did not converge in $maxIter iterations")
+    val labels = Dedup.minLabels(pairs.toDF("src", "dst"))
+      .withColumnRenamed("node", "p_name")
     val resolved = names
-      .join(labels.withColumnRenamed("name", "p_name"), Seq("p_name"), "left")
+      .join(labels, Seq("p_name"), "left")
       .select(col("p_name").as("name"),
         coalesce(col("lbl"), col("p_name")).as("canonical"))
     val sizes = resolved.groupBy(col("canonical"))

@@ -85,13 +85,6 @@ object Pipeline {
       .join(scrubbed, Seq("doc_id"))
   }
 
-  private def grams(d: DataFrame, textCol: String): DataFrame = d
-    .select(col("doc_id"),
-      TextFunctions.words(lower(col(textCol))).as("toks"))
-    .select(col("doc_id"),
-      explode(array_distinct(
-        TextFunctions.hashedTokenWindows(col("toks"), 8))).as("h"))
-
   /** The stage-5 eval-gram set, materialized, with its routing count.
     * Stabilized (round 17, the TextFunctions.contamination fix): the
     * routing count() and the join share one materialization of the
@@ -108,8 +101,9 @@ object Pipeline {
     */
   private def evalGramsOf(docs: DataFrame): (DataFrame, Long) = {
     val evalGrams = Stabilize(
-      grams(Spread(docs.filter(col("doc_id") % 97 === 0), col("doc_id")),
-        "text")
+      TextFunctions.docGrams(
+        Spread(docs.filter(col("doc_id") % 97 === 0), col("doc_id")),
+        col("text"), 8)
         .select(col("h")).distinct().withColumn("hit", lit(1L)))
     (evalGrams, evalGrams.count())
   }
@@ -132,7 +126,7 @@ object Pipeline {
       if (evalCount <= evalBroadcastMax) broadcast(evalGrams)
       else evalGrams
     val train = s4.filter(col("doc_id") % 97 =!= 0)
-    val contam = grams(train, "scrub")
+    val contam = TextFunctions.docGrams(train, col("scrub"), 8)
       .join(evalSide, Seq("h"), "left")
       .groupBy(col("doc_id")).agg(
         count(lit(1)).as("n_grams"),

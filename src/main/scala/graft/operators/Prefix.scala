@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   * continuous domain — at 100 TB distinct-value cardinality approaches
   * row cardinality and the single task dies.
   *
-  * `runningSum` is the same cumsum computed the scale-safe way (the
-  * text_batch_pack / mm_shard_pack discipline, generalized):
+  * `runningSum` is the same cumsum computed the scale-safe way, and the
+  * engine's one copy of it (the value-histogram quantiles,
+  * `text_batch_pack`, `mm_shard_pack` and the pipeline's packing stage
+  * all call it):
   *
   *   1. range-partition the frame on the cumsum ordering,
   *   2. window-cumsum LOCALLY within each physical partition,

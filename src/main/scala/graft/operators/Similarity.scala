@@ -190,20 +190,10 @@ object Similarity {
     pqAdcTopK(exploded, pqSampleCodebook(exploded, nCode), k, m, cand = None)
   }
 
-  /** Harness-visible aliases for the PQ internals (`Soak pq` probes
-    * codebook variants without widening the operator API).
-    */
-  private[graft] def pqSubvectorsPublic(emb: DataFrame, m: Int,
-      subDim: Int): DataFrame = pqSubvectors(emb, m, subDim)
-  private[graft] def pqAdcTopKPublic(exploded: DataFrame,
-      codebook: DataFrame, k: Int, m: Int,
-      nQueries: Int = NumQueries): DataFrame =
-    pqAdcTopK(exploded, codebook, k, m, cand = None, nQueries)
-
   /** (vec_id, j, sv): the m-subspace decomposition shared by the PQ
     * family.
     */
-  private def pqSubvectors(emb: DataFrame, m: Int, subDim: Int): DataFrame = {
+  private[graft] def pqSubvectors(emb: DataFrame, m: Int, subDim: Int): DataFrame = {
     val subs = (0 until m).map(j => struct(lit(j).as("j"),
       slice(col("embedding"), j * subDim + 1, subDim).as("sv")))
     emb.select(col("vec_id"), explode(array(subs: _*)).as("s"))
@@ -235,7 +225,7 @@ object Similarity {
     * restricts scoring to IVF-probed candidates; `None` scores the
     * whole corpus.
     */
-  private def pqAdcTopK(exploded: DataFrame, codebook: DataFrame,
+  private[graft] def pqAdcTopK(exploded: DataFrame, codebook: DataFrame,
       k: Int, m: Int, cand: Option[DataFrame],
       nQueries: Int = NumQueries): DataFrame = {
     val wAssign = Window.partitionBy(col("vec_id"), col("j"))

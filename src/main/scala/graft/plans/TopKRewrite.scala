@@ -39,14 +39,13 @@ import graft.functions.BoundedTopK
   *    Ascending over an integral column (widened + negated, nulls to
   *    the NULLS FIRST sentinel; floats are excluded — negation breaks
   *    NaN ordering — and timestamps/strings have no negation).
-  * Anything else is left untouched. Kill switch:
-  * `spark.graft.topkRewrite.enabled=false`.
+  * Anything else is left untouched. Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite` turns
+  * the rule off.
   */
 object TopKRewrite extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf.getConfString("spark.graft.topkRewrite.enabled", "true") != "true")
-      return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case f @ Filter(cond,
           Window(Seq(alias @ Alias(rnExpr, _)), part, order, child, _))
@@ -57,7 +56,6 @@ object TopKRewrite extends Rule[LogicalPlan] {
           case _ => f
         }
     }
-  }
 
   /** Accept `row_number()` bare or under a single integral Cast;
     * returns the cast target (None = plain IntegerType).

@@ -94,16 +94,6 @@ class DedupSpec extends SparkSpec {
     assert(rows(0).getLong(2) == 1L) // first_doc
   }
 
-  test("boundedShingles drops only shingles above the document-frequency cap") {
-    val sfDocs = graft.sources.Tables.load(spark, sf, "documents")
-    val all = Dedup.boundedShingles(sfDocs, None)
-    val capped = Dedup.boundedShingles(sfDocs, Some(2))
-    assert(capped.count() < all.count())
-    // every surviving shingle appears in at most 2 docs
-    val over = capped.groupBy("shingle").count().filter(col("count") > 2).count()
-    assert(over == 0)
-  }
-
   test("default df cap keeps hot-shingle pair volume linear") {
     // 60 docs all sharing ONE trigram ("hot shared phrase"), otherwise
     // unique. Uncapped, that single shingle makes every pair a

@@ -4,12 +4,14 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.graftspec.ListenerBus
 
 import graft.functions.TextFunctions
-import graft.operators.Quantiles
+import graft.operators.{Dedup, Quantiles}
 
-/** The driver-sequenced loops (quantile narrowing, BPE training) at
-  * the settings a production caller uses: repeated calls reuse their
-  * generated classes, BPE's job count does not grow with the merge
-  * count, and no call leaves a job label on the caller's thread.
+/** The driver-sequenced loops (quantile narrowing, BPE training,
+  * min-label propagation) at the settings a production caller uses:
+  * repeated calls reuse their generated classes, BPE's job count does
+  * not grow with the merge count, no call leaves a job label on the
+  * caller's thread, and label propagation either converges within its
+  * round bound or fails.
   */
 class IterativeLoopSpec extends SparkSpec {
   import spark.implicits._
@@ -100,5 +102,53 @@ class IterativeLoopSpec extends SparkSpec {
     val past = vocab.map(_.length).sum + 1 // more merges than symbols
     val e = intercept[IllegalArgumentException](merges(dir, past))
     assert(e.getMessage.contains("vocabulary fully merged before round"))
+  }
+
+  /** Component minimum of every node in `edges`, by driver-side
+    * union-find.
+    */
+  private def unionFindMin(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(n => n -> find(n)).toMap
+  }
+
+  test("minLabels labels a random multi-component graph with its " +
+    "union-find component minima") {
+    val rnd = new scala.util.Random(20261020L)
+    val ids = rnd.shuffle((1L to 400L).toVector)
+    // 15 components of 2-20 nodes: a random tree each plus a few
+    // extra edges, node ids shuffled, edges in either direction
+    val sizes = Seq.fill(15)(2 + rnd.nextInt(19))
+    val starts = sizes.scanLeft(0)(_ + _)
+    val random = sizes.zip(starts).flatMap { case (n, at) =>
+      val nodes = ids.slice(at, at + n)
+      val tree = (1 until n).map(i => (nodes(i), nodes(rnd.nextInt(i))))
+      val extra = Seq.fill(n / 4)((nodes(rnd.nextInt(n)), nodes(rnd.nextInt(n))))
+        .filter { case (a, b) => a != b }
+      (tree ++ extra).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+    }
+    // plus a chain whose far end is 19 hops from its minimum: the
+    // deepest component the round bound admits
+    val chain = (1000L until 1000L + Dedup.MaxLabelRounds - 1).map(i => (i, i + 1))
+    val edges = random ++ chain
+    val got = Dedup.minLabels(edges.toDF("src", "dst")).as[(Long, Long)].collect()
+    assert(got.length == got.map(_._1).distinct.length)
+    assert(got.toMap == unionFindMin(edges))
+  }
+
+  test("minLabels fails on a path deeper than its round bound") {
+    val path = (0L until Dedup.MaxLabelRounds.toLong).map(i => (i, i + 1))
+    val e = intercept[IllegalArgumentException](
+      Dedup.minLabels(path.toDF("src", "dst")))
+    assert(e.getMessage.contains(
+      s"min-label propagation did not converge in ${Dedup.MaxLabelRounds} rounds"))
   }
 }

@@ -67,7 +67,7 @@ class PrefixSpec extends SparkSpec {
     val df = (1 to 200).map(i => (i, 1L)).toDF("k", "c")
     Prefix.runningSum(df, col("c"), "cum", Seq(col("k")), numParts = 4)
       .collect()
-    // text_batch_pack / mm_shard_pack two-phase packers
+    // text_batch_pack / mm_shard_pack, both on runningSum
     graft.functions.TextFunctions.batchPack(spark, sf).collect()
     graft.multimodal.Multimodal.shardPack(spark, sf).collect()
     assert(spark.sharedState.cacheManager.isEmpty,

@@ -177,23 +177,20 @@ class PropertySpec extends SparkSpec {
       val rows = sample(triplesGen, 7000 + seed).zipWithIndex
         .map { case ((k, t, v), i) => (k, t, v, i.toLong) }
       val df = rows.toDF("k", "t", "v", "tie")
-      def topn(enabled: Boolean) = {
-        spark.conf.set("spark.graft.topkRewrite.enabled", enabled.toString)
-        try {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("k")).orderBy(col("v").desc, col("tie").asc)
-          val r = df.withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= 3)
-            .collect().map(_.toSeq).toSet
-          val plan = df.withColumn("rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("k")).orderBy(col("v").desc, col("tie").asc)))
-            .filter(col("rk") <= 3).queryExecution.optimizedPlan.toString
-          (r, plan)
-        } finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+      def topn() = {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("k")).orderBy(col("v").desc, col("tie").asc)
+        val r = df.withColumn("rk", row_number().over(w))
+          .filter(col("rk") <= 3)
+          .collect().map(_.toSeq).toSet
+        val plan = df.withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("k")).orderBy(col("v").desc, col("tie").asc)))
+          .filter(col("rk") <= 3).queryExecution.optimizedPlan.toString
+        (r, plan)
       }
-      val (on, planOn) = topn(enabled = true)
-      val (off, planOff) = topn(enabled = false)
+      val (on, planOn) = topn()
+      val (off, planOff) = withoutRule(graft.plans.TopKRewrite)(topn())
       assert(planOn.contains("graft_topk"), s"seed $seed: rule did not fire")
       assert(!planOff.contains("graft_topk"))
       assert(on == off, s"seed $seed")

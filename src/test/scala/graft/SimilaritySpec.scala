@@ -321,13 +321,13 @@ class SimilaritySpec extends SparkSpec {
     // codebook contains the query vectors (their neighbors encode to
     // the query's codeword with near-zero ADC distance), an advantage
     // no real index build has, so it is not the fair baseline here
-    val exploded = Similarity.pqSubvectorsPublic(emb, 4, 16)
+    val exploded = Similarity.pqSubvectors(emb, 4, 16)
     val blind = exploded
       .filter(col("vec_id") >= Similarity.NumQueries &&
         col("vec_id") < Similarity.NumQueries + 16)
       .select(col("j"), (col("vec_id") - Similarity.NumQueries)
         .cast("int").as("c"), col("sv").as("cw"))
-    val rBlind = recallOf(Similarity.pqAdcTopKPublic(exploded, blind, 5, 4))
+    val rBlind = recallOf(Similarity.pqAdcTopK(exploded, blind, 5, 4, None))
     info(f"PQ recall@5: trained $rTrained%.3f vs query-blind sample $rBlind%.3f")
     assert(rTrained >= rBlind,
       f"training lost recall: $rTrained%.3f < $rBlind%.3f")

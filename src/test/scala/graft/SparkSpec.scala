@@ -20,6 +20,15 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
 
+  /** `body` with optimizer `rule` excluded through Spark's own
+    * `spark.sql.optimizer.excludedRules`.
+    */
+  def withoutRule[A](rule: org.apache.spark.sql.catalyst.rules.Rule[_])(body: => A): A = {
+    val key = org.apache.spark.sql.internal.SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+    spark.conf.set(key, rule.ruleName)
+    try body finally spark.conf.unset(key)
+  }
+
   /** `body`'s value and the number of Spark jobs it started, counted
     * by a job group of its own.
     */

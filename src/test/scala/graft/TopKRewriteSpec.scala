@@ -17,10 +17,8 @@ class TopKRewriteSpec extends SparkSpec {
         col("l_linenumber"), col("l_extendedprice"))
   }
 
-  private def withRule[T](enabled: Boolean)(f: => T): T = {
-    spark.conf.set("spark.graft.topkRewrite.enabled", enabled.toString)
-    try f finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
-  }
+  private def withRule[T](enabled: Boolean)(f: => T): T =
+    if (enabled) f else withoutRule(graft.plans.TopKRewrite)(f)
 
   test("rank-filter window is rewritten to the graft_topk aggregate") {
     val opt = withRule(enabled = true)(topn().queryExecution.optimizedPlan.toString)
