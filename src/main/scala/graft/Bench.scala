@@ -76,11 +76,7 @@ object Bench {
     val picked = args.headOption
       .map(_.split(",").toSeq.filter(all.contains)).getOrElse(all)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession
-      .builder(master = master, shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM/codegen paths once on the smallest SF so the measured
     // runs time the plan, not classloading.

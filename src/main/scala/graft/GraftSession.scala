@@ -3,26 +3,30 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Session factory: one place for the engine's Spark configuration.
+/** Session factory: one place for the engine's Spark configuration,
+  * and the one reader of `SPARK_GRAFT_MASTER` (default `local[<cpus>]`)
+  * and `SPARK_GRAFT_CPUS` (default the JVM's processor count).
   *
   * Scale posture: AQE on (runtime coalescing + skew-join splitting),
-  * shuffle partitions sized for the harness (local[32]) rather than the
-  * 200 default; on a real cluster these come from spark-submit conf and
-  * this builder only fills in what is unset.
+  * shuffle partitions sized to the cores (`SPARK_GRAFT_CPUS`) rather
+  * than the 200 default. The builder's options override the same keys
+  * given to spark-submit with `--conf`; any other key passes through.
   *
   * Local disk: `file:` resolves to Hadoop's local filesystem with its
   * permission change made in-process ([[graft.sources.LocalFileSystemNoFork]],
   * [[graft.sources.LocalFsNoFork]]). Without libhadoop, Hadoop's own
   * forks one chmod process per file and per directory it creates.
   *
-  * Engine code changes session conf in one scope only,
-  * [[withObjectAggHeadroom]], and runs work beside its caller through
-  * one helper only, [[branches]].
+  * Engine code changes no session conf, and runs work beside its
+  * caller through one helper only, [[branches]].
   */
 object GraftSession {
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   def builder(
-      master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"),
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+      master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+      shufflePartitions: Int = cpus
   ): SparkSession.Builder = {
     // Embedded Derby (the JDBC gates' stand-in database) writes
     // derby.log into user.dir by default — route it into the JVM
@@ -116,40 +120,6 @@ object GraftSession {
     val spark = builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
-  }
-
-  /** Run `body` (which must EXECUTE its plans, not just build them —
-    * Spark reads this conf at physical planning) with the
-    * ObjectHashAggregate sort-fallback threshold raised 128 → 256k,
-    * restoring the prior value after.
-    *
-    * Why scoped and not session-wide: ObjectHashAggregate falls back
-    * to SORT-BASED aggregation once a task's hash map holds
-    * `fallbackThreshold` keys, and the fallback sorts the ENTIRE
-    * remaining input — measured 44 GB of spill on a 262M-row band
-    * join whose aggregate state was 125k bounded `graft_topk` heaps
-    * (round 13). For aggregates whose buffers are size-capped by
-    * construction the raise is pure win (state = keys-per-task ×
-    * buffer cap). But the conf also governs Spark's builtin
-    * TypedImperativeAggregates with UNBOUNDED buffers — exact
-    * `percentile`, `collect_list`/`collect_set` — where the 128-key
-    * default is the OOM guard: 256k open buffers × an unbounded value
-    * domain is exactly the executor-memory cliff the default
-    * protects against at high group cardinality (round-13 verdict).
-    * So the session keeps Spark's default and only the call sites
-    * whose aggregate state is provably bounded (the witness-capped
-    * minhash index probe) opt into headroom, for exactly the span of
-    * their own execution.
-    */
-  def withObjectAggHeadroom[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, (1 << 18).toString)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   /** Work that runs beside its caller: `body` forks labelled branches

@@ -21,10 +21,7 @@ object Profile {
       .getOrElse(Seq("q_psi"))
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warm-up as Bench
     SparkEntry.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")

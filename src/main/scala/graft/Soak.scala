@@ -19,15 +19,15 @@ import org.apache.spark.sql.functions._
   *   steps     comma list: run only these steps (a query, variant,
   *             family, leg or pipeline name); empty runs them all
   *
-  * The runner owns: the session (`SPARK_GRAFT_CPUS`, default 32, and
-  * `SPARK_GRAFT_MASTER`), a q1 codegen warm-up on sf0.001, the step
-  * filter, the append-only JSONL sink (`soak_results.jsonl`, or
-  * `stream_bench.jsonl` for `stream`) with one sanitized `error` row
-  * per failed step and a skipped row once a fatal error stopped the
-  * SparkContext, one task listener ([[Soak.TaskClock]]), one
-  * save-set-restore conf scope and the generated-data version gate.
-  * Steal-gated timing lives in [[StealGate]]. A run with any failed
-  * step exits 1.
+  * The runner owns: the session ([[GraftSession.builder]], master and
+  * cores from its environment defaults), a q1 codegen warm-up on
+  * sf0.001, the step filter, the append-only JSONL sink
+  * (`soak_results.jsonl`, or `stream_bench.jsonl` for `stream`) with
+  * one sanitized `error` row per failed step and a skipped row once a
+  * fatal error stopped the SparkContext, one task listener
+  * ([[Soak.TaskClock]]), one save-set-restore conf scope and the
+  * generated-data version gate. Steal-gated timing lives in
+  * [[StealGate]]. A run with any failed step exits 1.
   *
   * The `queries` scenario soaks the scale-critical operator families at
   * 1x / 10x / 100x over K-times-sf0.1 datasets (under
@@ -302,11 +302,7 @@ object Soak {
     val rest = args.toIndexedSeq.drop(1)
     val only = rest.lift(sc.stepsArg).filter(_.nonEmpty)
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession
-      .builder(master = master, shufflePartitions = cpus.toInt)
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val run = new Run(spark, sc.sink, rest, only)
     try {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.operators.{Dedup, Pipeline, Quantiles, Similarity, SkewAdvisor, Temporal}
 import graft.sources.{Sink, Tables}
@@ -753,11 +754,9 @@ private[graft] object SoakScenarios {
         Dedup.writeMinhashIndex(history, mh),
         Dedup.appendToMinhashIndex(batch, mh),
         Dedup.compactMinhashIndex(spark, mh))(
-        GraftSession.withObjectAggHeadroom(spark) {
-          Dedup.probeMinhashIndex(probeDocs,
-            Tables.read(spark, s"$mh/bands.parquet"),
-            Tables.read(spark, s"$mh/sigs.parquet"), threshold = 0.5).count()
-        },
+        Dedup.probeMinhashIndex(probeDocs,
+          Tables.read(spark, s"$mh/bands.parquet"),
+          Tables.read(spark, s"$mh/sigs.parquet"), threshold = 0.5).count(),
         parquetFiles(s"$mh/bands.parquet"))
       val gr = Scratch.dir(s"index_soak_gram_x$k")
       family("gram", "spans", "gram_files")(
@@ -1035,11 +1034,12 @@ private[graft] object SoakScenarios {
   /** Exact `percentile` grouped by the HIGH-cardinality `user_id`
     * (~1.5k groups/task at 10x), once under the session default (128
     * keys before a task degrades to sort-based aggregation) and once
-    * under the raised 256k headroom, which holds one open value-buffer
-    * per group in memory first. Results must be identical; the default
-    * leg finishing comfortably validates the engine's posture (default
-    * threshold session-wide, scoped raise only around provably-bounded
-    * aggregates). Legs `default_128`, `raised_256k`. Default scale 10.
+    * under the session-wide 256k raise, which holds one open
+    * value-buffer per group in memory first. Results must be identical;
+    * the default leg finishing comfortably validates the engine's
+    * posture (the default session-wide; the raise only in the plans of
+    * provably-bounded aggregates, `Dedup.probeMinhashIndex`). Legs
+    * `default_128`, `raised_256k`. Default scale 10.
     */
   def median(run: Run): Unit = {
     val spark = run.spark
@@ -1064,7 +1064,9 @@ private[graft] object SoakScenarios {
               .head()
             ((System.nanoTime() - t0) / 1e9, row.getLong(0), row.getLong(1))
           }
-          val r = if (raise) GraftSession.withObjectAggHeadroom(spark)(body) else body
+          val r = if (!raise) body else run.withConf(
+            SQLConf.OBJECT_AGG_SORT_BASED_FALLBACK_THRESHOLD.key ->
+              Dedup.ProbeFallbackThreshold.toString)(body)
           legs(name) = r
           Seq("sec" -> num(r._1), "groups" -> r._2)
         }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import graft.functions.TextFunctions
 import graft.sources.{Sink, Tables}
 
@@ -236,6 +238,23 @@ object Dedup {
     * historical corpus contributes O(K) longs per document and its
     * raw text is never re-read. Threshold semantics: emit pairs whose
     * estimated Jaccard reaches `threshold`.
+    *
+    * Aggregate headroom: ObjectHashAggregate falls back to SORT-BASED
+    * aggregation once a task's hash map holds Spark's
+    * `objectHashAggregate.sortBased.fallbackThreshold` keys (128), and
+    * the fallback sorts the ENTIRE remaining input — measured 44 GB of
+    * spill when 125k witness heaps per task fell back (round 13). The
+    * probe's aggregate state is |batch| heaps of at most 8·maxWitnesses
+    * longs, bounded by construction, so it plans with the threshold at
+    * [[ProbeFallbackThreshold]]. Not session-wide: the same conf governs
+    * Spark's UNBOUNDED `percentile` and `collect_*` buffers, where 128 is
+    * the OOM guard. So the probe plans and materializes its output in a
+    * clone of the caller's session that carries the raise
+    * (`DatasetBridge.sessionWith`), and returns the materialized rows
+    * (≤ maxWitnesses·|batch|) as a frame of the caller's session:
+    * nothing the caller or another thread plans sees the raise, and a
+    * caller's join over the output (which the caller's session plans)
+    * needs none.
     */
   def probeMinhashIndex(fresh: DataFrame, idxBands: DataFrame,
       idxSigs: DataFrame, threshold: Double,
@@ -258,10 +277,8 @@ object Dedup {
     // join is ≤ maxWitnesses·|batch| rows by construction. The batch's
     // signatures feed two consumers (bands + the verify join);
     // Stabilized (round 17) so the batch is shingled ONCE per probe —
-    // every caller executes the probe eagerly (the incremental gate
-    // lands it to parquet, the streaming loops consume it per batch),
-    // so the lazy-plan property the old recompute preserved bought
-    // nothing.
+    // the probe lands its own output eagerly (below), so the lazy-plan
+    // property the old recompute preserved would buy nothing.
     require(maxWitnesses >= 1, "need at least one witness per doc")
     val heapK = math.min(8L * maxWitnesses, Int.MaxValue.toLong).toInt
     // freshSigsPre: a caller that knows the batch BEFORE the index is
@@ -284,13 +301,24 @@ object Dedup {
     val agree = (0 until MinhashK)
       .map(i => (col(s"n.sig_$i") === col(s"o.sig_$i")).cast("int"))
       .reduce(_ + _)
-    cand
+    val pairs = cand
       .join(freshSigs.alias("n"), col("new_id") === col("n.doc_id"))
       .join(idxSigs.alias("o"), col("old_id") === col("o.doc_id"))
       .select(col("new_id"), col("old_id"),
         round(agree.cast("double") / MinhashK, 6).as("est_jac"))
       .filter(col("est_jac") >= threshold)
+    val spark = fresh.sparkSession
+    val headroom = DatasetBridge.sessionWith(spark,
+      SQLConf.OBJECT_AGG_SORT_BASED_FALLBACK_THRESHOLD.key ->
+        ProbeFallbackThreshold.toString)
+    val landed = Stabilize(DatasetBridge.ofRows(headroom, pairs.queryExecution.analyzed))
+    DatasetBridge.ofRows(spark, landed.queryExecution.analyzed)
   }
+
+  /** The index probe's ObjectHashAggregate sort-fallback threshold
+    * (Spark's default is 128); see [[probeMinhashIndex]].
+    */
+  private[graft] val ProbeFallbackThreshold = 1 << 18
 
   /** Index maintenance: after a batch is probed (and its dups
     * dropped), its SURVIVORS' bands + signatures append into the same
@@ -374,7 +402,7 @@ object Dedup {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) graft.GraftSession.withObjectAggHeadroom(spark) {
+        if (!batch.isEmpty) {
           val pairs = probeMinhashIndex(batch,
             Tables.read(spark, s"$indexPath/bands.parquet"),
             Tables.read(spark, s"$indexPath/sigs.parquet"),
@@ -420,13 +448,9 @@ object Dedup {
     * The slice's signature frame depends only on the slice, never on
     * the index — it is prefetched on a branch concurrently with the
     * build (guide §2.6), and the probe consumes the identical
-    * Stabilized frame it would otherwise compute serially. The probe's
-    * aggregate state is |batch| witness-capped heaps — provably
-    * bounded — so it runs under scoped ObjectHashAggregate headroom
-    * (125k keys/task fell back to a 44 GB sort-spill under the 128-key
-    * default at the 100x soak). The conf is read at physical planning,
-    * so the probe lands eagerly inside the scope and the gate returns
-    * the landed rows.
+    * Stabilized frame it would otherwise compute serially. The probe
+    * plans its witness-heap aggregate with its own headroom and lands
+    * its rows ([[probeMinhashIndex]]); the gate returns them in order.
     */
   private def probeGate(spark: SparkSession, dir: String, name: String,
       threshold: Double)(
@@ -438,17 +462,11 @@ object Dedup {
       val batchSigs = br.fork(s"$name: batch sigs (prefetch)")(
         Stabilize(signaturesFromShingles(shinglesRaw(batch))))
       build(docs, idx)
-      val freshSigs = batchSigs()
-      graft.GraftSession.withObjectAggHeadroom(spark) {
-        probeMinhashIndex(batch,
-          Tables.read(spark, s"$idx/bands.parquet"),
-          Tables.read(spark, s"$idx/sigs.parquet"), threshold,
-          freshSigsPre = Some(freshSigs))
-          .write.mode("overwrite").parquet(s"$idx/probe.parquet")
-      }
-    }
-    Tables.read(spark, s"$idx/probe.parquet")
-      .orderBy(col("new_id"), col("old_id"))
+      probeMinhashIndex(batch,
+        Tables.read(spark, s"$idx/bands.parquet"),
+        Tables.read(spark, s"$idx/sigs.parquet"), threshold,
+        freshSigsPre = Some(batchSigs()))
+    }.orderBy(col("new_id"), col("old_id"))
   }
 
   /** `dedup_compact_probe` gate surface: compaction inside the oracle
@@ -813,42 +831,46 @@ object Dedup {
     val edges = pairs
       .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
-    // localCheckpoint (not cache) per round: an iterative algorithm's
-    // lineage otherwise doubles every pass — by round k the plan holds
-    // 2^k joins and the driver chokes on analysis long before the
-    // executors see data. Checkpointing truncates to the materialized
-    // blocks; on a cluster this is the same pattern with a reliable
-    // checkpoint dir.
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")).transform(Stabilize.apply)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < MaxLabelRounds) {
-      val nbrMin = edges
-        .join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
-      // The convergence count rides the checkpoint materialization as
-      // an observed metric (round 17, guide §1.2): the per-round
-      // `filter(...).count()` was a second action — its own job + plan
-      // — over rows the checkpoint had just materialized. checkpoint()
-      // is a tracked action (withAction), so the Observation resolves
-      // when the round lands; count(when(...)) is 0 (never null) on an
-      // empty round.
-      val obs = new org.apache.spark.sql.Observation()
-      val joined = labels
-        .join(nbrMin, labels("node") === nbrMin("src"), "left")
-        .select(col("node"), col("lbl"), col("nbr_lbl"))
-        .observe(obs, count(when(col("nbr_lbl") < col("lbl"), lit(1)))
-          .as("n_changed"))
-        .transform(Stabilize.apply)
-      changed = obs.get("n_changed").asInstanceOf[Long]
-      labels = joined.select(col("node"),
-        least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
-      rounds += 1
-    }
-    require(changed == 0,
-      s"min-label propagation did not converge in $MaxLabelRounds rounds")
-    labels
+    // the labels are checkpointed every round, so nothing reads the
+    // edges after the loop
+    try {
+      // localCheckpoint (not cache) per round: an iterative algorithm's
+      // lineage otherwise doubles every pass — by round k the plan holds
+      // 2^k joins and the driver chokes on analysis long before the
+      // executors see data. Checkpointing truncates to the materialized
+      // blocks; on a cluster this is the same pattern with a reliable
+      // checkpoint dir.
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")).transform(Stabilize.apply)
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0 && rounds < MaxLabelRounds) {
+        val nbrMin = edges
+          .join(labels, edges("dst") === labels("node"))
+          .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
+        // The convergence count rides the checkpoint materialization as
+        // an observed metric (round 17, guide §1.2): the per-round
+        // `filter(...).count()` was a second action — its own job + plan
+        // — over rows the checkpoint had just materialized. checkpoint()
+        // is a tracked action (withAction), so the Observation resolves
+        // when the round lands; count(when(...)) is 0 (never null) on an
+        // empty round.
+        val obs = new org.apache.spark.sql.Observation()
+        val joined = labels
+          .join(nbrMin, labels("node") === nbrMin("src"), "left")
+          .select(col("node"), col("lbl"), col("nbr_lbl"))
+          .observe(obs, count(when(col("nbr_lbl") < col("lbl"), lit(1)))
+            .as("n_changed"))
+          .transform(Stabilize.apply)
+        changed = obs.get("n_changed").asInstanceOf[Long]
+        labels = joined.select(col("node"),
+          least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl"))
+        rounds += 1
+      }
+      require(changed == 0,
+        s"min-label propagation did not converge in $MaxLabelRounds rounds")
+      labels
+    } finally edges.unpersist(): Unit
   }
 
   /** `dedup_apply`: the cleaned corpus itself — what the pipeline

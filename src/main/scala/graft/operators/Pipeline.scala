@@ -371,8 +371,8 @@ object Pipeline {
     * appends are at-least-once (duplicate rows are verdict-harmless,
     * bounded by the `compactEvery` lifecycle pass over BOTH indexes —
     * family defaults 32/128 per docs/SCALING.md). Witness-heap memory
-    * is bounded, so the probe runs under scoped ObjectHashAggregate
-    * headroom like the batch twin.
+    * is bounded, and the probe plans that aggregate with its own
+    * headroom, as in the batch twin.
     *
     * The batch's survivor frame is [[Stabilize]]d (lineage truncated),
     * not merely persisted — a hazard found building this twin: a
@@ -399,7 +399,7 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        if (!batch.isEmpty) graft.GraftSession.withObjectAggHeadroom(spark) {
+        if (!batch.isEmpty) {
           val keepIds = TextFunctions.gopherRulesOf(batch)
             .filter(col("keep") === 1L).select(col("doc_id"))
           val passed = batch.join(keepIds, Seq("doc_id"), "left_semi")

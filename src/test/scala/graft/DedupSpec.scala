@@ -325,6 +325,91 @@ class DedupSpec extends SparkSpec {
       "new matches must come from the appended batch")
   }
 
+  /** One job `body` started: the caller session's `key` at job start,
+    * the job's own `key` property (the SQL conf its execution
+    * propagated), and whether its execution's plan holds an
+    * ObjectHashAggregate.
+    */
+  private case class Job(caller: Option[String], prop: Option[String], objectAgg: Boolean)
+
+  private def jobsOf[A](key: String)(body: => A): (A, Seq[Job]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[String], Option[String], Option[Long])]
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        jobs.add((spark.conf.getOption(key), prop(key),
+          prop("spark.sql.execution.id").map(_.toLong)))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.put(s.executionId, s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.graftspec.ListenerBus.drain(sc)
+      (a, jobs.asScala.toSeq.map { case (c, p, id) => Job(c, p,
+        id.exists(i => Option(plans.get(i)).exists(_.contains("ObjectHashAggregate")))) })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the index probe's aggregate headroom lives in its own plan: the " +
+    "caller's conf never changes, the probe's jobs carry it, rows are the same") {
+    val key = org.apache.spark.sql.internal.SQLConf
+      .OBJECT_AGG_SORT_BASED_FALLBACK_THRESHOLD.key
+    val (rows, seen) = jobsOf(key)(Dedup.dedupIncremental(spark, sf).collect())
+    // (a) the caller's session kept Spark's default the whole call
+    val raised = (1 << 18).toString
+    assert(seen.nonEmpty)
+    assert(!seen.exists(_.caller.contains(raised)),
+      s"caller session conf at job start: ${seen.map(_.caller).distinct}")
+    // (b) the jobs that run the witness-heap aggregate still carry it
+    val aggJobs = seen.filter(_.objectAgg)
+    assert(aggJobs.nonEmpty)
+    assert(aggJobs.forall(_.prop.contains(raised)),
+      s"aggregate jobs' threshold: ${aggJobs.map(_.prop).distinct}")
+    // (c) the sf0.001 gate rows, (new_id, old_id, est_jac) in gate order,
+    // as the probe returned them when it ran under the caller's session
+    def digest(rows: Array[org.apache.spark.sql.Row]): (Int, String) = {
+      val text = rows.map(r => s"${r.getLong(0)},${r.getLong(1)},${r.getDouble(2)}")
+        .mkString(";")
+      (rows.length, java.security.MessageDigest.getInstance("MD5")
+        .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    }
+    assert(digest(rows) == (43, "fb2769b90e752eb829181d5267dc9435"))
+    assert(digest(Dedup.dedupCompactProbe(spark, sf).collect()) ==
+      (29, "dc1f624f9465e832efe3f19f86e3d2bd"))
+  }
+
+  test("repeated index probes share one session: no class is compiled " +
+    "again, and conf the caller sets or unsets later reaches the probe") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val docs = graft.sources.Tables.load(spark, sf, "documents")
+    val idx = java.nio.file.Files.createTempDirectory("mh_idx_session").toString
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 4 =!= 0), idx)
+    def probe(): Long = Dedup.probeMinhashIndex(docs.filter(col("doc_id") % 4 === 0),
+      spark.read.parquet(s"$idx/bands.parquet"),
+      spark.read.parquet(s"$idx/sigs.parquet"), threshold = 0.5).count()
+    probe()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    probe()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0)
+    val marker = "spark.graft.spec.marker"
+    def markers(): Seq[Option[String]] =
+      jobsOf(marker)(probe())._2.filter(_.objectAgg).map(_.prop)
+    spark.conf.set(marker, "on")
+    try assert(markers().toSet == Set(Some("on")))
+    finally spark.conf.unset(marker)
+    assert(markers().toSet == Set(None))
+  }
+
   test("substringSpans merges consecutive duplicated windows into one " +
     "maximal span and drops short ones") {
     // 20-token span shared verbatim by docs 11/12 inside unrelated text;

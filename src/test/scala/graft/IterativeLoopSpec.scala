@@ -151,4 +151,13 @@ class IterativeLoopSpec extends SparkSpec {
     assert(e.getMessage.contains(
       s"min-label propagation did not converge in ${Dedup.MaxLabelRounds} rounds"))
   }
+
+  test("minLabels leaves no CacheManager entry behind, converged or not") {
+    spark.sharedState.cacheManager.clearCache()
+    graft.operators.Fusion.entityResolution(spark, sf).collect()
+    val path = (0L until Dedup.MaxLabelRounds.toLong).map(i => (i, i + 1))
+    intercept[IllegalArgumentException](Dedup.minLabels(path.toDF("src", "dst")))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "label propagation must release its edge frame")
+  }
 }
